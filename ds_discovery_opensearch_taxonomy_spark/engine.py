@@ -453,9 +453,7 @@ class TaxonomyEngine:
         under a NEW snapshot directory, then ONE manifest write flips their
         bucket->snapshot pointers atomically (tmp-file + ``os.replace``).
         A crash at any point leaves every bucket's previous version live;
-        superseded per-bucket dirs are GC'd after the commit.  A legacy
-        single-dir snapshot (pre-bucketing) is migrated on first save —
-        the only remaining O(table) rewrite, paid once."""
+        superseded per-bucket dirs are GC'd after the commit."""
         import shutil
 
         cat = self.reader.cat
@@ -464,29 +462,22 @@ class TaxonomyEngine:
             or self.config.n_results_buckets
         )
         bmap = cat.results_buckets()
-        legacy = cat.results_version()
         snap = cat.next_results_snapshot()
         per_doc = per_doc.select("doc_id", "category_ids")
-        if legacy > 0 and not bmap:
-            # one-time migration of the legacy single-dir snapshot
-            existing = self.spark.read.parquet(
-                cat.path(f"{IndexCatalog.RESULTS}_v{legacy}")
+        batch_buckets = sorted(
+            int(r["b"])
+            for r in per_doc.select(
+                self._results_bucket(nb).alias("b")
+            ).distinct().collect()
+        )
+        have = [b for b in batch_buckets if b in bmap]
+        existing = (
+            self.spark.read.parquet(
+                *[self._results_part(b, bmap[b]) for b in have]
             )
-        else:
-            batch_buckets = sorted(
-                int(r["b"])
-                for r in per_doc.select(
-                    self._results_bucket(nb).alias("b")
-                ).distinct().collect()
-            )
-            have = [b for b in batch_buckets if b in bmap]
-            existing = (
-                self.spark.read.parquet(
-                    *[self._results_part(b, bmap[b]) for b in have]
-                )
-                if have
-                else None
-            )
+            if have
+            else None
+        )
         merged = (
             existing.join(per_doc.select("doc_id"), "doc_id", "left_anti")
             .unionByName(per_doc)
@@ -498,8 +489,7 @@ class TaxonomyEngine:
         merged.withColumn("bucket", self._results_bucket(nb)).write.mode(
             "overwrite"
         ).partitionBy("bucket").parquet(str(snap_dir))
-        # touched = the bucket dirs the write actually produced (exact even
-        # when a migration leaves some hash buckets empty)
+        # touched = the bucket dirs the write actually produced
         touched = sorted(
             int(d.name.split("=", 1)[1])
             for d in snap_dir.glob("bucket=*")
@@ -518,30 +508,19 @@ class TaxonomyEngine:
         victims = cat.commit_results_buckets(
             {b: snap for b in touched},
             nb,
-            drop_legacy=legacy > 0,
             superseded=superseded,
             keep=max(0, int(self.config.results_snapshot_retention)),
         )
         for b, old in victims:  # GC only beyond the retention horizon
             shutil.rmtree(self._results_part(b, old), ignore_errors=True)
-        if legacy > 0:
-            shutil.rmtree(
-                cat.path(f"{IndexCatalog.RESULTS}_v{legacy}"),
-                ignore_errors=True,
-            )
 
     def results(self) -> DataFrame:
         cat = self.reader.cat
         bmap = cat.results_buckets()
-        if bmap:
-            return self.spark.read.parquet(
-                *[self._results_part(b, v) for b, v in sorted(bmap.items())]
-            )
-        v = cat.results_version()
-        if v <= 0:
+        if not bmap:
             raise FileNotFoundError("no committed results snapshot")
         return self.spark.read.parquet(
-            cat.path(f"{IndexCatalog.RESULTS}_v{v}")
+            *[self._results_part(b, v) for b, v in sorted(bmap.items())]
         )
 
 

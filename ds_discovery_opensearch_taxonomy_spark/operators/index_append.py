@@ -54,7 +54,6 @@ from ds_discovery_opensearch_taxonomy_spark.config import EngineConfig
 from ds_discovery_opensearch_taxonomy_spark.operators.index_build import (
     BLOCKS_SCHEMA,
     DOCMAP_SCHEMA,
-    INDEX_FORMAT_VERSION,
     TOMBSTONE_FORD,
     _MERGE_TARGET_BYTES,
     _salt_packed_runs,
@@ -173,33 +172,24 @@ def append_batch(
     """Append one batch of corpus rows to the live index (idempotent by
     ``batch_key``).  Returns the committed metrics, or None for a replayed
     or empty batch."""
+    cat.require_format()
     if cat.batch_key_seen(batch_key):
         # at-least-once replay: already committed as a live delta, or
         # already folded into main by a compaction (keys survive
         # clear_deltas in meta.compacted_batch_keys)
         return None
-    fmt = cat.get_meta("format")
-    if fmt != INDEX_FORMAT_VERSION:
-        raise RuntimeError(
-            f"index was built with on-disk format {fmt}, appends require "
-            f"{INDEX_FORMAT_VERSION} — rebuild the index (mixing staging "
-            "stream formats across versions would corrupt the merge)"
-        )
     field_names = [f.name for f in config.fields]
-    _ensure_stats_base(spark, cat, field_names)
     manifest = cat.manifest()
-    band_bits = int(cat.get_meta("band_bits", 0))
-    ord_bits = int(cat.get_meta("ord_bits", 1))
+    band_bits = int(manifest["meta"]["band_bits"])
+    ord_bits = int(manifest["meta"]["ord_bits"])
     ord_shift = max(ord_bits - band_bits, 0)
     band_size = 1 << ord_shift
     base_n = int(manifest["stages"]["ords"]["metrics"]["n_docs"])
     # next_ord is committed ATOMICALLY with the delta (commit_delta folds it
     # into the same manifest write), and is additionally re-derivable from
-    # the committed deltas themselves (max base_ord + n_docs) — so a
-    # manifest written by an older version that persisted next_ord in a
-    # SEPARATE post-commit write (crash window: batch committed, next_ord
-    # stale -> ord-range reuse) self-repairs here instead of silently
-    # reusing committed ordinals.
+    # the committed deltas themselves (max base_ord + n_docs) — so a stale
+    # next_ord (batch committed, cursor behind it) self-repairs here
+    # instead of silently reusing committed ordinals.
     next_ord = max(
         int(cat.get_meta("next_ord", base_n)),
         base_n,
@@ -315,19 +305,7 @@ def append_batch(
         # No heavy-term salting: a batch's per-term df is bounded by the
         # batch itself, and delta ords share their top bits so ord-top-bit
         # salts cannot split them — accumulated skew is compaction's job.
-        enc_avgdl = cat.get_meta("encode_avgdl")
-        if enc_avgdl is None:
-            # pre-round-3 index without the pinned encode avgdl: pin the
-            # CURRENT stats now (defaulting to 1.0 would UNDERESTIMATE
-            # max_norm — tf_norm shrinks as avgdl shrinks — and unsafe
-            # bounds break top-k pruning exactness)
-            enc_avgdl = {
-                r["field"]: float(r["avgdl"])
-                for r in spark.read.parquet(
-                    cat.path(IndexCatalog.DOC_STATS)
-                ).collect()
-            }
-            cat.set_meta("encode_avgdl", enc_avgdl)
+        enc_avgdl = manifest["meta"]["encode_avgdl"]
         avgdl_ord = np.array(
             [float(enc_avgdl.get(fn, 1.0)) for fn in field_names],
             dtype=np.float64,
@@ -394,37 +372,6 @@ def append_batch(
         corpus.unpersist()
 
 
-def _ensure_stats_base(
-    spark: SparkSession, cat: IndexCatalog, field_names: list[str]
-) -> None:
-    """Pin ``meta.stats_base`` for indexes whose staging stage metrics carry
-    no ``sum_dl`` (builds resumed from an older staging commit — the same
-    case build_index's doc_stats fallback supports).  Without the pin,
-    ``_stats_totals``'s base sum_dl would be ``{}`` and the first append
-    would rewrite doc_stats with delta-only sum_dl against the FULL n_docs —
-    collapsing avgdl and silently corrupting every BM25 score.  The base is
-    recomputed exactly the way build_index derives it: one aggregation over
-    the committed staging runs (cf summed per field ordinal).  Pinned ONCE,
-    before the first append commits; appends and compactions then fold
-    deltas on top of it."""
-    m = cat.manifest()
-    if m.get("meta", {}).get("stats_base") is not None:
-        return
-    if m["stages"].get("staging", {}).get("metrics", {}).get("sum_dl"):
-        return  # normal path: _stats_totals reads the staging metrics
-    staged = spark.read.parquet(cat.path(IndexCatalog.STAGING))
-    sum_dl = {fn: 0 for fn in field_names}
-    for r in (
-        staged.where(F.col("kind") == 0)
-        .groupBy("ford")
-        .agg(F.sum("cf").alias("s"))
-        .collect()
-    ):
-        sum_dl[field_names[int(r["ford"])]] = int(r["s"])
-    n = int(m["stages"]["ords"]["metrics"]["n_docs"])
-    cat.set_meta("stats_base", {"n_docs": n, "sum_dl": sum_dl})
-
-
 def _stats_totals(cat: IndexCatalog, field_names: list[str]) -> dict:
     """Live (n_docs, per-field sum_dl) derived from the manifest: the
     stats base (build totals, or ``meta.stats_base`` after a compaction
@@ -432,19 +379,16 @@ def _stats_totals(cat: IndexCatalog, field_names: list[str]) -> dict:
     between the doc_stats write and the delta commit self-repairs on the
     next append."""
     m = cat.manifest()
-    base = m.get("meta", {}).get("stats_base")
+    base = m["meta"].get("stats_base")
     if base is not None:
         n = int(base["n_docs"])
-        sum_dl = dict(base.get("sum_dl") or {})
+        sum_dl = dict(base["sum_dl"])
     else:
         n = int(m["stages"]["ords"]["metrics"]["n_docs"])
-        sum_dl = dict(
-            m["stages"].get("staging", {}).get("metrics", {}).get("sum_dl")
-            or {}
-        )
+        sum_dl = dict(m["stages"]["staging"]["metrics"]["sum_dl"])
     for d in m.get("deltas", {}).values():
         n += int(d["n_docs"])
-        for fn, v in d.get("sum_dl", {}).items():
+        for fn, v in d["sum_dl"].items():
             sum_dl[fn] = sum_dl.get(fn, 0) + int(v)
     return {"n_docs": n, "sum_dl": {fn: int(sum_dl.get(fn, 0)) for fn in field_names}}
 
@@ -565,15 +509,13 @@ def compact_index(
 
     # remap domain comes from the DATA, not the manifest: every delta-era
     # salt (>= COMPACTED_SALT_BASE) actually present in the view — earlier
-    # compacted generations in their dense slots, PLUS legacy generations
-    # compacted before this renumbering existed (those kept their original
-    # >= 2^20 salts), PLUS this interval's live deltas.  Sorted salt order
-    # equals ord order in every one of those regimes (seqs were monotone
-    # pre-renumber; dense slots are rank-assigned post-renumber), so one
-    # dense order-preserving renumber is exact for all of them and
-    # self-heals legacy indexes.  The distinct scan is bounded by the
-    # number of generations, one narrow column off a table compaction
-    # full-scans anyway.
+    # compacted generations in their dense slots PLUS this interval's live
+    # deltas, whatever seqs they were appended at.  Sorted salt order
+    # equals ord order for both (seqs are monotone within an interval;
+    # dense slots are rank-assigned), so one dense order-preserving
+    # renumber is exact.  The distinct scan is bounded by the number of
+    # generations, one narrow column off a table compaction full-scans
+    # anyway.
     old_salts = np.array(
         sorted(
             int(r["salt"])

@@ -40,7 +40,10 @@ from pyspark.sql import types as T
 
 from ds_discovery_opensearch_taxonomy_spark.config import EngineConfig
 from ds_discovery_opensearch_taxonomy_spark.functions import codec, scoring
-from ds_discovery_opensearch_taxonomy_spark.sources.catalog import IndexCatalog
+from ds_discovery_opensearch_taxonomy_spark.sources.catalog import (
+    INDEX_FORMAT_VERSION,
+    IndexCatalog,
+)
 from ds_discovery_opensearch_taxonomy_spark.sources.corpus import with_doc_ids
 
 #: PACKED staging (round 2): one row per (term, input split) carrying the
@@ -187,21 +190,10 @@ def _width_decode(
     return out
 
 
-# re-exported for compatibility; lives with the vectorized tokenizer now
-from ds_discovery_opensearch_taxonomy_spark.functions.vtokenize import (  # noqa: E402
-    term_id_of,
-)
-
 #: docs per tokenizer call — bounds the analyzer working set; the packed
 #: emit accumulates the whole split regardless, so this only trades
 #: factorize-call overhead against span-cache churn
 TOKENIZE_CHUNK_DOCS = 2048
-
-#: bump when the on-disk table layout changes incompatibly (4 = packed
-#: staging runs + df-free blocks; 5 = narrow run streams: rel-u32 ords,
-#: width-flagged u16 tf/pos_lens, u8 quantized dl); build_index refuses to
-#: resume across versions and append_batch refuses to append across them
-INDEX_FORMAT_VERSION = 5
 
 #: posting blocks are keyed by the numeric ``term_id`` (see term_id_of) — the
 #: heavy build/query paths stay ALL-NUMERIC (term strings live only in the
@@ -897,48 +889,6 @@ SALTED_SCHEMA = T.StructType(
 )
 
 
-def _run_stages_concurrently(cat: IndexCatalog, stages) -> None:
-    """Run independent stages' Spark ACTIONS in threads; commit results
-    sequentially on the caller's thread (manifest read-modify-write is not
-    thread-safe).  ``stages`` is [(stage_name, action) ...]; an action
-    returns the metrics dict for its commit.  Already-committed stages are
-    skipped; if any action fails, completed ones are committed first so a
-    resume skips them, then the first error propagates."""
-    import time as _time
-    from concurrent.futures import ThreadPoolExecutor
-
-    def timed(action):
-        # per-ACTION wall time recorded in the commit metrics: concurrent
-        # stages commit sequentially afterwards, so manifest timestamps
-        # alone cannot attribute wall time within the group
-        def run():
-            t0 = _time.time()
-            m = action() or {}
-            m.setdefault("elapsed_sec", round(_time.time() - t0, 3))
-            return m
-
-        return run
-
-    todo = [(n, timed(a)) for n, a in stages if not cat.stage_done(n)]
-    if not todo:
-        return
-    if len(todo) == 1:
-        name, action = todo[0]
-        cat.commit_stage(name, action() or {})
-        return
-    with ThreadPoolExecutor(max_workers=len(todo)) as ex:
-        futures = [(name, ex.submit(action)) for name, action in todo]
-        first_err = None
-        for name, fut in futures:
-            try:
-                cat.commit_stage(name, fut.result() or {})
-            except Exception as e:  # commit completed stages before raising
-                if first_err is None:
-                    first_err = e
-        if first_err is not None:
-            raise first_err
-
-
 def _heavy_salt_map(dict_df: DataFrame, config: EngineConfig) -> dict[int, int]:
     """{term_id: salt_bits} for the SKEWED terms only — df above the salt
     target.  Provably tiny: at most total_postings / salt_target entries
@@ -1369,38 +1319,23 @@ def make_direct_block_writer(builder, out_dir: str, n_buckets: int):
     return run
 
 
-def _reconcile_dir(bdir, expected: dict[int, int] | None = None) -> None:
+def _reconcile_dir(bdir, expected: dict[int, int]) -> None:
     """Per-directory cleanup for direct task writes: remove orphaned
-    ``.inprogress`` files (killed attempts) and resolve duplicate
-    committed attempts of one partition.
+    ``.inprogress`` files (killed attempts) and every direct-writer file
+    of an attempt that did not commit.
 
     ``expected`` is the (pid -> attempt id) map assembled from the stat
-    rows of the attempts Spark reported SUCCESS for — with it, exactly
-    those attempts' files survive: any other attempt's file (a
-    speculative copy that committed before being killed, or a zombie that
-    renamed late) and any pid with no committed stats row is removed.
-    Without it (legacy indexes with no persisted map), fall back to
-    keep-newest — correct for plain task RETRIES (the retry has the
-    higher attempt id and identical deterministic output) but NOT under
-    speculation, which is why all current writers persist the map."""
+    rows of the attempts Spark reported SUCCESS for: exactly those
+    attempts' files survive.  Any other attempt's file (a plain retry's
+    predecessor, a speculative copy that committed before being killed,
+    or a zombie that renamed late) and any pid with no committed stats
+    row is removed."""
     for f in bdir.glob("*.inprogress"):
         f.unlink(missing_ok=True)
-    by_pid: dict[int, list] = {}
     for f in bdir.glob("part-*.parquet"):
         key = _direct_file_key(f)
-        if key is not None:
-            by_pid.setdefault(key[0], []).append((key[1], f))
-    if expected is not None:
-        for pid, files in by_pid.items():
-            keep = expected.get(pid)
-            for att, f in files:
-                if keep is None or att != keep:
-                    f.unlink(missing_ok=True)
-        return
-    for files in by_pid.values():
-        if len(files) > 1:
-            for _, f in sorted(files)[:-1]:
-                f.unlink(missing_ok=True)
+        if key is not None and expected.get(key[0]) != key[1]:
+            f.unlink(missing_ok=True)
 
 
 def _direct_file_key(f) -> tuple[int, int] | None:
@@ -1419,9 +1354,7 @@ def _direct_file_key(f) -> tuple[int, int] | None:
         return None
 
 
-def _reconcile_direct_write(
-    out_dir, expected: dict[int, int] | None = None
-) -> None:
+def _reconcile_direct_write(out_dir, expected: dict[int, int]) -> None:
     """Post-job cleanup for the bucketed direct writer; runs on the
     driver after the stats collect() proves the job done (and again at
     reader open, from the manifest-persisted map — see
@@ -1438,8 +1371,8 @@ def attempts_map(stats) -> dict[str, int]:
     return {str(int(r["pid"])): int(r["att"]) for r in stats}
 
 
-def _int_keys(m: dict | None) -> dict[int, int] | None:
-    return None if m is None else {int(k): int(v) for k, v in m.items()}
+def _int_keys(m: dict) -> dict[int, int]:
+    return {int(k): int(v) for k, v in m.items()}
 
 
 def reconcile_from_manifest(cat) -> None:
@@ -1449,28 +1382,27 @@ def reconcile_from_manifest(cat) -> None:
     file AFTER the post-job sweep ran; any reader opened later (same
     Spark app — executors of a dead app die with it, so crash-restart
     cannot produce new zombies) prunes it here before the first scan.
-    No-op for tables without a persisted map (pre-round-4 indexes, or
-    JVM-written tables whose committer already handles speculation)."""
-    post = _int_keys(cat.get_meta("postings_attempts"))
+    Postings written by the JVM committer (``bucket_resume`` builds)
+    persist no map: the committer already handles speculation."""
+    post = cat.get_meta("postings_attempts")
     if post is not None:
-        _reconcile_direct_write(cat.path("postings"), post)
-    stg_metrics = (
-        cat.manifest()["stages"].get("staging", {}).get("metrics", {})
-    )
-    stg = _int_keys(stg_metrics.get("attempts"))
-    if stg is not None:
-        from pathlib import Path
+        _reconcile_direct_write(cat.path("postings"), _int_keys(post))
+    _reprune_staged(cat)
 
-        _reconcile_dir(Path(cat.path("staging")), stg)
-        # the docs table is pruned by this map ONLY when it was written by
-        # the same tasks (docs tee, metrics.docs_teed): a mixed-manifest
-        # resume rebuilds staging WITHOUT re-teeing docs, so the committed
-        # docs files carry the ORIGINAL build's attempt ids — pruning them
-        # against the re-run's map would delete live data.  Older
-        # JVM-written docs tables are a no-op either way (_direct_file_key
-        # rejects committer file names).
-        if stg_metrics.get("docs_teed"):
-            _reconcile_dir(Path(cat.path("docs")), stg)
+
+def _reprune_staged(cat) -> None:
+    """Prune staging and docs (both written by the same tokenize tasks, the
+    docs tee) against the committed staging attempts map.  build_index
+    also calls this right before each overlapped consumer (docmap,
+    dictionary, postings) lists those directories: a speculative tokenize
+    attempt killed mid-task can os.rename its final AFTER the post-job
+    sweep.  JVM-written docs generations (compaction) are untouched:
+    _direct_file_key rejects committer file names."""
+    from pathlib import Path
+
+    stg = _int_keys(cat.manifest()["stages"]["staging"]["metrics"]["attempts"])
+    for table in (IndexCatalog.STAGING, IndexCatalog.DOCS):
+        _reconcile_dir(Path(cat.path(table)), stg)
 
 
 #: direct staging-write stats: per-(task, field) cf sums over kind-0 rows
@@ -1820,8 +1752,8 @@ def build_index(
     """Full index build with per-bucket checkpoint/resume."""
     config = config or EngineConfig()
     cat = IndexCatalog(out_dir)
-    # resuming across an on-disk format change would mix ord- and
-    # hash-keyed stages — wipe and rebuild instead
+    # an index left by another on-disk format is never resumed (its
+    # stages may lack keys this code requires) — wipe and rebuild instead
     stale = (
         cat.manifest().get("stages")
         and cat.get_meta("format") != INDEX_FORMAT_VERSION
@@ -1838,7 +1770,7 @@ def build_index(
     # -- stage 0: dense-ordinal layout (one narrow count job) ---------------
     # offsets are committed to the manifest so a killed/resumed build
     # re-attaches IDENTICAL ords (and a changed input partitioning between
-    # runs is detected by the docs-stage count assertion below)
+    # runs is detected by the tokenizer's per-partition count guards)
     if not cat.stage_done("ords"):
         offsets, n_total = partition_offsets(corpus_with_ids)
         cat.commit_stage("ords", {"offsets": offsets, "n_docs": n_total})
@@ -1853,43 +1785,26 @@ def build_index(
     cat.set_meta("band_bits", band_bits)
     cat.set_meta("ord_bits", ord_bits_of(n_docs))
 
-    # -- stages 1 + 2 run their Spark ACTIONS concurrently (independent:
-    # both read only the corpus); manifest commits stay on this thread.
-    # Saves one small-job floor per build — at 100k docs the docs write is
-    # ~3 s of mostly scheduling that otherwise serializes before staging.
     meta_cols = [
         c
         for c in ["doc_id", "repo", "path", "commit", "lang", "content_sha"]
         + [f for f in config.int_fields if f in corpus_with_ids.columns]
         if c in corpus_with_ids.columns
     ]
-
-    def _docs_action():
-        docs = attach_ords(
-            corpus_with_ids.select(
-                *[c for c in meta_cols if c in corpus_with_ids.columns]
-            ),
-            offsets,
-            expected=expected_counts(offsets, n_docs),
-        )
-        docs_obs = Observation("docs")
-        cat.write(docs.observe(docs_obs, F.count(F.lit(1)).alias("n")), IndexCatalog.DOCS)
-        n_written = int(docs_obs.get["n"])
-        if n_written != n_docs:
-            raise RuntimeError(
-                f"docs pass saw {n_written} rows but the offsets pass saw "
-                f"{n_docs} — the input's partitioning is not stable across "
-                "scans; materialize the corpus (e.g. write it to parquet) "
-                "before building"
-            )
-
-    # -- stage 2: staged packed posting runs (per-split local indexes) ------
-    # per-field sum of run cf rides the write as conditional-sum
-    # observations: sum(cf) over a field's kind-0 rows == sum of per-doc
-    # field lengths, so avgdl needs no second pass over staging at all.
     field_names = [f.name for f in config.fields]
 
-    def _staging_action(docs_out: str | None = None):
+    # -- stages 1 + 2: staged packed posting runs (per-split local indexes)
+    # AND the docs table, from ONE corpus scan: tokenize tasks tee the DOCS
+    # table out of the same input batches (make_docs_tee).  A separate docs
+    # scan would re-read and re-decompress every content row just for the
+    # docs metadata + sha, contending for the same DRAM/page-cache
+    # bandwidth (both scans measured ~40 s at 32c/250k).  sha256/doc_id
+    # still compute JVM-side inside the one scan (with_doc_ids columns ride
+    # the Arrow feed).  Per-partition count guards in the tokenizer keep
+    # the ord-alignment contract.  Both stages commit in ONE manifest
+    # write, so a crash anywhere re-runs both; a manifest holding only one
+    # of them (hand-edited or rewound) re-runs both as well.
+    if not (cat.stage_done("staging") and cat.stage_done("docs")):
         # UNPARTITIONED direct write with ``bucket`` as an ordinary column:
         # every hot-path consumer (dictionary agg, docmap agg, single-job
         # postings build) full-scans staging, so hive-partitioning by
@@ -1901,102 +1816,50 @@ def build_index(
         # sum(cf) over a field's kind-0 rows == sum of per-doc field
         # lengths, so avgdl needs no second pass over staging at all.
         import shutil as _shutil
+        import time as _time
         from pathlib import Path as _Path
 
+        t0 = _time.time()
         stg_dir = cat.path(IndexCatalog.STAGING)
+        docs_dir = cat.path(IndexCatalog.DOCS)
         _shutil.rmtree(stg_dir, ignore_errors=True)
+        _shutil.rmtree(docs_dir, ignore_errors=True)
         stats = tokenize_corpus(
             corpus_with_ids, config, offsets,
             expected=expected_counts(offsets, n_docs),
             direct_out=stg_dir,
-            docs_out=docs_out,
-            docs_cols=meta_cols if docs_out is not None else None,
+            docs_out=docs_dir,
+            docs_cols=meta_cols,
         ).collect()
         atts = attempts_map(stats)
-        _reconcile_dir(_Path(stg_dir), _int_keys(atts))
-        if docs_out is not None:
-            _reconcile_dir(_Path(docs_out), _int_keys(atts))
+        for d in (stg_dir, docs_dir):
+            _reconcile_dir(_Path(d), _int_keys(atts))
         by_ford: dict[int, int] = {}
         for r in stats:
             by_ford[int(r["ford"])] = by_ford.get(int(r["ford"]), 0) + int(
                 r["sum_cf"]
             )
-        sum_dl = {fn: by_ford.get(i, 0) for i, fn in enumerate(field_names)}
-        return {
-            "bytes": cat.table_bytes(IndexCatalog.STAGING),
-            "sum_dl": sum_dl,
-            "attempts": atts,  # reconcile_from_manifest re-prunes from this
-        }
-
-    if not cat.stage_done("docs") and not cat.stage_done("staging"):
-        # ONE corpus scan for both: tokenize tasks tee the DOCS table out
-        # of the same input batches (make_docs_tee).  The previous shape —
-        # two concurrent full scans — re-read and re-decompressed every
-        # content row a second time just for the docs metadata + sha,
-        # contending for the same DRAM/page-cache bandwidth (both measured
-        # ~40 s at 32c/250k on this host).  sha256/doc_id still compute
-        # JVM-side inside the one scan (with_doc_ids columns ride the
-        # Arrow feed).  Per-partition count guards in the tokenizer keep
-        # the ord-alignment contract; crash anywhere re-runs both stages.
-        import shutil as _shutil
-        import time as _time
-
-        docs_dir = cat.path(IndexCatalog.DOCS)
-        _shutil.rmtree(docs_dir, ignore_errors=True)
-        t0 = _time.time()
-        m = _staging_action(docs_out=docs_dir)
-        m["elapsed_sec"] = round(_time.time() - t0, 3)
-        m["docs_teed"] = True
-        cat.commit_stage("staging", m)
-        cat.commit_stage("docs", {"n_docs": n_docs, "direct": True})
-    else:
-        # resume from an older manifest where exactly one of the two is
-        # committed: run the remaining stage on its own legacy path
-        _run_stages_concurrently(
-            cat,
-            [
-                ("docs", lambda: (_docs_action(), {"n_docs": n_docs})[1]),
-                ("staging", _staging_action),
-            ],
+        cat.commit_stages(
+            {
+                "staging": {
+                    "bytes": cat.table_bytes(IndexCatalog.STAGING),
+                    "sum_dl": {
+                        fn: by_ford.get(i, 0)
+                        for i, fn in enumerate(field_names)
+                    },
+                    # reconcile_from_manifest re-prunes from this
+                    "attempts": atts,
+                    "elapsed_sec": round(_time.time() - t0, 3),
+                },
+                "docs": {"n_docs": n_docs, "direct": True},
+            }
         )
-
-    def _reprune_staged() -> None:
-        """Close the BUILD-INTERNAL zombie window (round-4 review): a
-        speculative tokenize attempt killed mid-task can os.rename its
-        staging/docs final AFTER `_staging_action`'s post-job sweep but
-        BEFORE an overlapped consumer (docmap/dictionary/postings) lists
-        the directory — re-prune from the manifest-persisted attempts map
-        right before each such listing.  Reader opens are separately
-        protected by reconcile_from_manifest."""
-        from pathlib import Path as _Path
-
-        metrics = (
-            cat.manifest()["stages"].get("staging", {}).get("metrics", {})
-        )
-        stg = _int_keys(metrics.get("attempts"))
-        if stg is not None:
-            _reconcile_dir(_Path(cat.path(IndexCatalog.STAGING)), stg)
-            # docs only when the SAME tasks teed it (see
-            # reconcile_from_manifest: a mixed-manifest resume's docs
-            # carry the original build's attempt ids)
-            if metrics.get("docs_teed"):
-                _reconcile_dir(_Path(cat.path(IndexCatalog.DOCS)), stg)
 
     # -- stage 3: per-field doc stats (N, avgdl) — tiny driver-built table --
     # 4 rows: written directly with pyarrow (a Spark job for this pays the
     # python-RDD createDataFrame warmup for nothing; Spark reads it fine)
     if not cat.stage_done("doc_stats"):
-        sum_dl = cat.manifest()["stages"]["staging"]["metrics"].get("sum_dl")
-        if sum_dl is None:  # resumed from an older staging commit
-            _reprune_staged()
-            staged = spark.read.parquet(cat.path(IndexCatalog.STAGING))
-            sum_dl = {
-                field_names[int(r["ford"])]: int(r["s"])
-                for r in staged.where(F.col("kind") == 0)
-                .groupBy("ford")
-                .agg(F.sum("cf").alias("s"))
-                .collect()
-            }
+        sum_dl = cat.manifest()["stages"]["staging"]["metrics"]["sum_dl"]
         write_doc_stats(cat, field_names, sum_dl, n_docs)
         cat.commit_stage("doc_stats")
 
@@ -2017,7 +1880,7 @@ def build_index(
     # varbyte per POSTING in the blocks.  Rows are chunked so no parquet
     # cell or eval allocation exceeds ~2 MB even for giant bands.
     def _docmap_action():
-        _reprune_staged()
+        _reprune_staged(cat)
         docs_df = spark.read.parquet(cat.path(IndexCatalog.DOCS)).select(
             "ord", "doc_id"
         )
@@ -2038,7 +1901,7 @@ def build_index(
     # agg, so the whole stage codegens (first() would force
     # ObjectHashAggregate)
     def _dictionary_action():
-        _reprune_staged()
+        _reprune_staged(cat)
         staged = spark.read.parquet(cat.path(IndexCatalog.STAGING)).where(
             F.col("kind") == 0
         )
@@ -2174,7 +2037,7 @@ def build_index(
             config.block_size, ord_shift,
         )
         if todo:
-            _reprune_staged()
+            _reprune_staged(cat)
         if todo and not config.bucket_resume:
             _build_postings_single_job(
                 spark, cat, config, builder, ord_bits, dict_ready=dict_ready

@@ -60,6 +60,7 @@ class IndexReader:
         self.spark = spark
         self.config = config or EngineConfig()
         self.cat = IndexCatalog(index_dir)
+        self.cat.require_format()
         # prune direct-write files from attempts the committed manifest
         # doesn't know (zombie speculative renames after the post-job
         # sweep) BEFORE any scan binds to the directory listing
@@ -71,20 +72,12 @@ class IndexReader:
         stats = spark.read.parquet(self.cat.path(IndexCatalog.DOC_STATS)).collect()
         self.n_docs = int(stats[0]["n_docs"]) if stats else 0
         self.avgdl = {r["field"]: float(r["avgdl"]) for r in stats}
-        #: band layout is the INDEX's property (recorded at build); older
-        #: manifests fall back to the reader config's derivation
-        self.band_bits = int(
-            self.cat.get_meta(
-                "band_bits", max(self.config.n_eval_bands - 1, 0).bit_length()
-            )
-        )
+        meta = self.cat.manifest()["meta"]
+        #: band layout is the INDEX's property (recorded at build)
+        self.band_bits = int(meta["band_bits"])
         #: width of the dense ordinal space — with band_bits it fixes the
         #: ord -> band mapping (band = ord >> ord_shift); an index property
-        from ds_discovery_opensearch_taxonomy_spark.operators.index_build import (
-            ord_bits_of,
-        )
-
-        self.ord_bits = int(self.cat.get_meta("ord_bits", ord_bits_of(self.n_docs)))
+        self.ord_bits = int(meta["ord_bits"])
         self.ord_shift = max(self.ord_bits - self.band_bits, 0)
         #: appends since the build: main tables are read through union views
         #: (operators/index_append.py) until a compaction folds them in
@@ -93,7 +86,7 @@ class IndexReader:
         #: drift the live avgdl, and tf_norm is monotone in avgdl with
         #: ratio <= live/encoded — multiplying bounds by this per-field
         #: factor keeps dynamic pruning exact under drift
-        enc = self.cat.get_meta("encode_avgdl") or {}
+        enc = meta["encode_avgdl"]
         self.norm_safety = {
             f: max(1.0, v / float(enc[f])) if enc.get(f) else 1.0
             for f, v in self.avgdl.items()
@@ -352,7 +345,6 @@ class IndexReader:
                         "(max_term_expansions)", ckey, n,
                     )
                 self.expansion_cache[ckey] = ExpansionInfo(
-                    df=exp.where(F.col("ckey") == ckey).select("term_id"),
                     n_terms=n,
                     buckets=buckets,
                     parent=exp,
@@ -519,17 +511,17 @@ class ExpandedTermsNode(qp.Node):
 
 @dataclass
 class ExpansionInfo:
-    """One construct's distributed expansion: the matching term_ids as a
-    (persist-shared) DataFrame plus the BOUNDED driver-side facts — match
-    count and hosting buckets (for partition pruning).  ``parent`` is the
-    persisted (term_id, bucket, ckey) scan this construct was tagged in —
-    queries touching several constructs of one compile route them all with
-    a single isin filter over it instead of a per-construct union."""
+    """One construct's distributed expansion: the BOUNDED driver-side
+    facts — match count and hosting buckets (for partition pruning) — plus
+    ``parent``, the persisted (term_id, bucket, ckey) scan this construct
+    was tagged in.  Its matching term_ids are the parent's rows with
+    ``ckey`` equal to the construct's key; queries touching several
+    constructs of one compile route them all with a single isin filter
+    over the parent instead of a per-construct union."""
 
-    df: DataFrame
     n_terms: int
     buckets: tuple[int, ...]
-    parent: DataFrame | None = None
+    parent: DataFrame
 
 
 #: FuzzyQuery's expansion cap (Lucene maxExpansions default 50); ties are
@@ -1951,19 +1943,15 @@ def run_categories(
         # construct's terms (a per-construct createDataFrame cost ~150 ms
         # of driver time each on the wildcard-heavy category fixture);
         # constructs sharing a tagged-scan parent select with one isin
-        by_parent: dict[int, tuple[DataFrame | None, list[str]]] = {}
+        by_parent: dict[int, tuple[DataFrame, list[str]]] = {}
         for ckey in used_ckeys:
-            info = exp_infos[ckey]
-            key = id(info.parent) if info.parent is not None else id(info.df)
-            by_parent.setdefault(key, (info, []))[1].append(ckey)
+            parent = exp_infos[ckey].parent
+            by_parent.setdefault(id(parent), (parent, []))[1].append(ckey)
         cdf = None
-        for info, ckeys in by_parent.values():
-            if info.parent is not None:
-                d = info.parent.where(F.col("ckey").isin(ckeys)).select(
-                    "ckey", "term_id"
-                )
-            else:  # pre-parent cache entries: per-construct fallback
-                d = info.df.select(F.lit(ckeys[0]).alias("ckey"), "term_id")
+        for parent, ckeys in by_parent.values():
+            d = parent.where(F.col("ckey").isin(ckeys)).select(
+                "ckey", "term_id"
+            )
             cdf = d if cdf is None else cdf.unionByName(d)
         pairs_pd = pd.DataFrame(
             [

@@ -18,6 +18,17 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+#: on-disk format of every table and manifest key under an index root.
+#: Readers and appends refuse any other value (IndexCatalog.require_format);
+#: build_index wipes and rebuilds an index left by another format instead
+#: of resuming it.  Bump on any incompatible layout change — there are no
+#: read paths for older formats.  (4 = packed staging runs + df-free
+#: blocks; 5 = narrow run streams: rel-u32 ords, width-flagged u16
+#: tf/pos_lens, u8 quantized dl; 6 = staging+docs committed in one write,
+#: and the manifest always carries band_bits, ord_bits, encode_avgdl, the
+#: staging sum_dl and attempts map; results are bucketed only)
+INDEX_FORMAT_VERSION = 6
+
 
 class IndexCatalog:
     DICTIONARY = "dictionary"
@@ -29,7 +40,6 @@ class IndexCatalog:
     DOCMAP = "docmap"
     DOC_STATS = "doc_stats"
     STAGING = "staging"
-    RESULTS = "results"
     #: incremental-append tables, one ``batch=<seq>`` partition per
     #: committed append (operators/index_append.py); readers union them
     #: with the main tables until a compaction folds them in
@@ -56,12 +66,31 @@ class IndexCatalog:
         tmp.write_text(json.dumps(m, indent=1, sort_keys=True))
         os.replace(tmp, self.manifest_path)
 
+    def require_format(self) -> None:
+        """Refuse an index written in any other on-disk format: every read
+        below assumes the keys INDEX_FORMAT_VERSION guarantees."""
+        found = self.get_meta("format")
+        if found != INDEX_FORMAT_VERSION:
+            raise RuntimeError(
+                f"index at {self.root} has on-disk format "
+                f"{'<missing>' if found is None else found}, this code "
+                f"reads only format {INDEX_FORMAT_VERSION} — rebuild the "
+                "index (build_index)"
+            )
+
     def stage_done(self, stage: str) -> bool:
         return stage in self.manifest()["stages"]
 
     def commit_stage(self, stage: str, metrics: dict | None = None) -> None:
+        self.commit_stages({stage: metrics or {}})
+
+    def commit_stages(self, stages: dict[str, dict]) -> None:
+        """ONE atomic manifest write commits every given stage: a crash
+        leaves all of them committed or none."""
         m = self.manifest()
-        m["stages"][stage] = {"ts": time.time(), "metrics": metrics or {}}
+        ts = time.time()
+        for stage, metrics in stages.items():
+            m["stages"][stage] = {"ts": ts, "metrics": metrics}
         self._write_manifest(m)
 
     def set_meta(self, key: str, value) -> None:
@@ -82,19 +111,7 @@ class IndexCatalog:
         m["buckets"][str(bucket)] = {"ts": time.time(), **metrics}
         self._write_manifest(m)
 
-    def results_version(self) -> int:
-        """LEGACY single-dir results snapshot version (0 = none).  Kept so
-        pre-round-4 results tables stay readable; the first bucketed save
-        migrates them and zeroes this pointer."""
-        return int(self.manifest().get("results_version", 0))
-
-    def commit_results_version(self, version: int) -> None:
-        """Atomic pointer swap to a new legacy results snapshot."""
-        m = self.manifest()
-        m["results_version"] = int(version)
-        self._write_manifest(m)
-
-    #: bucketed results layout (round 4): data lives under
+    #: bucketed results layout: data lives under
     #: ``results_parts/v<snap>/bucket=<b>``; the manifest maps each doc_id-
     #: hash bucket to the snapshot that holds its CURRENT rows.  A save
     #: rewrites only the buckets present in the batch — the Iceberg
@@ -103,7 +120,7 @@ class IndexCatalog:
 
     def results_buckets(self) -> dict[int, int]:
         """{bucket: owning snapshot} for the bucketed results table
-        (empty = legacy/no results)."""
+        (empty = no results saved yet)."""
         return {
             int(b): int(v)
             for b, v in self.manifest().get("results_buckets", {}).items()
@@ -118,13 +135,12 @@ class IndexCatalog:
         self,
         updates: dict[int, int],
         n_buckets: int,
-        drop_legacy: bool = False,
         superseded: dict[int, int] | None = None,
         keep: int = 0,
     ) -> list[tuple[int, int]]:
         """ONE atomic manifest write flips every touched bucket to its new
-        snapshot (and retires the legacy pointer on migration) — a crash
-        before it leaves the previous per-bucket view fully live.
+        snapshot — a crash before it leaves the previous per-bucket view
+        fully live.
 
         Snapshot retention (Iceberg snapshot-expiration analogue): each
         bucket's superseded versions are appended to a per-bucket retired
@@ -142,8 +158,6 @@ class IndexCatalog:
             m["results_snapshot"] = max(
                 int(m.get("results_snapshot", 0)), max(updates.values())
             )
-        if drop_legacy:
-            m["results_version"] = 0
         victims: list[tuple[int, int]] = []
         retired = m.setdefault("results_retired", {})
         for b, old in (superseded or {}).items():
@@ -153,10 +167,6 @@ class IndexCatalog:
                 victims.append((int(b), int(lst.pop(0))))
         self._write_manifest(m)
         return victims
-
-    def is_complete(self, n_buckets: int) -> bool:
-        m = self.manifest()
-        return "docs" in m["stages"] and len(m["buckets"]) >= n_buckets
 
     # -- incremental appends (delta batches) ---------------------------------
 

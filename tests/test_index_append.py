@@ -423,11 +423,10 @@ def test_next_ord_commit_is_atomic_and_self_repairing(spark, tmp_path_factory):
 
 def test_compaction_remaps_arbitrary_salt_domains(spark, tmp_path_factory):
     """The remap domain is derived from the DATA (distinct salts >= 2^16
-    in the view), not assumed dense-from-base — so a legacy index whose
-    earlier compactions kept raw >= 2^20 salts in the main table, or any
-    seq drift, renumbers correctly.  Emulated by starting the seq counter
-    at 5: the folded salts are high and non-dense, and must land at the
-    dense base with the counter reset."""
+    in the view), not assumed dense-from-base — so any seq drift
+    renumbers correctly.  Emulated by starting the seq counter at 5: the
+    folded salts are high and non-dense, and must land at the dense base
+    with the counter reset."""
     from ds_discovery_opensearch_taxonomy_spark.operators.index_append import (
         COMPACTED_SALT_BASE,
         DELTA_SALT_BASE,
@@ -492,77 +491,68 @@ def test_delta_salt_exhaustion_fails_loudly(spark, tmp_path_factory):
         eng.append_docs(extra, batch_key="overflow", auto_compact=False)
 
 
-def test_append_derives_stats_base_when_staging_metrics_missing(
-    spark, tmp_path_factory
-):
-    """Appending to an index whose staging metrics carry no sum_dl (a build
-    resumed from an older staging commit) must recompute the base from the
-    staging table instead of treating it as zero — otherwise the first
-    append rewrites doc_stats with delta-only sum_dl over the FULL n_docs,
-    collapsing avgdl and corrupting every BM25 score."""
-    import json
+@pytest.fixture(scope="module")
+def default_index(spark, tmp_path_factory):
+    """A small index built with the DEFAULT config."""
+    out = tmp_path_factory.mktemp("default_cfg") / "idx"
+    build_index(spark, with_doc_ids(synthesize_corpus(spark, 60)), str(out))
+    return out
 
-    out = tmp_path_factory.mktemp("nostats")
-    base = with_doc_ids(synthesize_corpus(spark, 120))
-    full = with_doc_ids(synthesize_corpus(spark, 160))
-    build_index(spark, base, str(out), TEST_CONFIG)
+
+def test_build_writes_every_key_readers_and_appends_require(default_index):
+    """The format gate promises these keys; a build that stops writing one
+    must fail here, not at the first append to a customer's index."""
+    from ds_discovery_opensearch_taxonomy_spark.sources.catalog import (
+        INDEX_FORMAT_VERSION,
+        IndexCatalog,
+    )
+
+    m = IndexCatalog(default_index).manifest()
+    assert m["meta"]["format"] == INDEX_FORMAT_VERSION
+    for key in ("band_bits", "ord_bits", "encode_avgdl", "postings_attempts"):
+        assert m["meta"].get(key) is not None, key
+    staging = m["stages"]["staging"]["metrics"]
+    assert staging["sum_dl"] and staging["attempts"]
+
+
+@pytest.mark.parametrize("entry", ["open", "append"])
+@pytest.mark.parametrize("found", [None, 5], ids=["format_missing", "format_5"])
+def test_old_format_index_is_refused(spark, default_index, tmp_path, found, entry):
+    """An index whose meta.format is missing or older is never read: both
+    the engine open and append_batch refuse it, naming the version found
+    and the version required."""
+    import json
+    import shutil
+
+    from ds_discovery_opensearch_taxonomy_spark.operators.index_append import (
+        append_batch,
+    )
+    from ds_discovery_opensearch_taxonomy_spark.sources.catalog import (
+        INDEX_FORMAT_VERSION,
+        IndexCatalog,
+    )
+
+    out = tmp_path / "old"
+    shutil.copytree(default_index, out)
     mp = out / "manifest.json"
     m = json.loads(mp.read_text())
-    m["stages"]["staging"]["metrics"].pop("sum_dl", None)
+    if found is None:
+        del m["meta"]["format"]
+    else:
+        m["meta"]["format"] = found
     mp.write_text(json.dumps(m))
-    eng = TaxonomyEngine(spark, str(out), TEST_CONFIG)
-    extra = full.join(base.select("doc_id"), "doc_id", "left_anti")
-    assert eng.append_docs(extra, batch_key="ns1", auto_compact=False) is not None
-    pinned = eng.reader.cat.get_meta("stats_base")
-    assert pinned is not None and pinned["n_docs"] == 120
-    assert all(v > 0 for v in pinned["sum_dl"].values())
-    rows = [r.asDict() for r in full.collect()]
-    oracle = OracleIndex(
-        [
-            build_oracle_doc(
-                r["doc_id"], r, TEST_CONFIG,
-                doc_ref=f'{r["repo"]}/{r["path"]}/{r["commit"]}',
-            )
-            for r in rows
-        ],
-        TEST_CONFIG,
-    )
-    # scores exact => avgdl/N folded base + delta correctly
-    _parity(spark, eng, oracle, QUERIES[:3], scored=True)
-
-
-def test_append_pins_encode_avgdl_when_missing(spark, tmp_path_factory):
-    """Appending to a pre-round-3 index (no pinned encode_avgdl) must pin
-    the CURRENT stats, not default to 1.0 — an avgdl=1 encode underestimates
-    max_norm and breaks top-k pruning exactness."""
-    import json
-
-    out = tmp_path_factory.mktemp("oldmeta")
-    base = with_doc_ids(synthesize_corpus(spark, 120))
-    full = with_doc_ids(synthesize_corpus(spark, 160))
-    build_index(spark, base, str(out), TEST_CONFIG)
-    # simulate a pre-round-3 manifest
-    mp = out / "manifest.json"
-    m = json.loads(mp.read_text())
-    m["meta"].pop("encode_avgdl", None)
-    mp.write_text(json.dumps(m))
-    eng = TaxonomyEngine(spark, str(out), TEST_CONFIG)
-    extra = full.join(base.select("doc_id"), "doc_id", "left_anti")
-    assert eng.append_docs(extra, batch_key="old", auto_compact=False) is not None
-    pinned = eng.reader.cat.get_meta("encode_avgdl")
-    assert pinned and all(v > 1.0 for v in pinned.values())
-    rows = [r.asDict() for r in full.collect()]
-    oracle = OracleIndex(
-        [
-            build_oracle_doc(
-                r["doc_id"], r, TEST_CONFIG,
-                doc_ref=f'{r["repo"]}/{r["path"]}/{r["commit"]}',
-            )
-            for r in rows
-        ],
-        TEST_CONFIG,
-    )
-    _parity(spark, eng, oracle, QUERIES[:3], scored=True, top_k=5)
+    with pytest.raises(RuntimeError) as err:
+        if entry == "open":
+            TaxonomyEngine(spark, str(out))
+        else:
+            batch = with_doc_ids(synthesize_corpus(spark, 3))
+            append_batch(spark, IndexCatalog(out), EngineConfig(), batch, "old")
+    msg = str(err.value)
+    assert f"format {'<missing>' if found is None else found}," in msg
+    assert f"format {INDEX_FORMAT_VERSION} " in msg
+    assert "rebuild" in msg
+    # refused before anything was written
+    assert json.loads(mp.read_text()) == m
 
 
 def test_auto_compaction_triggers_at_threshold(spark, tmp_path_factory):

@@ -196,38 +196,6 @@ def test_empty_partition_yields_nothing():
     assert _run_builder([]) is None
 
 
-def test_run_stages_concurrently_commits_successes(tmp_path):
-    """A failing stage must not lose sibling commits (resume skips them)."""
-    from ds_discovery_opensearch_taxonomy_spark.operators.index_build import (
-        _run_stages_concurrently,
-    )
-    from ds_discovery_opensearch_taxonomy_spark.sources.catalog import (
-        IndexCatalog,
-    )
-
-    cat = IndexCatalog(str(tmp_path / "idx"))
-
-    def ok():
-        return {"x": 1}
-
-    def bad():
-        raise RuntimeError("boom")
-
-    with pytest.raises(RuntimeError, match="boom"):
-        _run_stages_concurrently(cat, [("a", ok), ("b", bad)])
-    assert cat.stage_done("a") and not cat.stage_done("b")
-
-    calls = []
-
-    def count_ok():
-        calls.append(1)
-        return {}
-
-    # committed stages are skipped on resume; only 'b' runs
-    _run_stages_concurrently(cat, [("a", bad), ("b", count_ok)])
-    assert cat.stage_done("b") and len(calls) == 1
-
-
 def _blocks_batch(term_ids, ns):
     """Minimal blocks-schema batch: only term_id (col 0) and n (col 4)
     carry signal for the direct writer's bucketing/stats."""
@@ -269,7 +237,8 @@ def test_direct_writer_buckets_stats_and_filenames(tmp_path):
     # -> 3 blocks, 63 postings; bucket 2: tid 2 -> 1 block, 30 postings
     got = dict(zip(s["bucket"], zip(s["blocks"], s["postings"])))
     assert got == {0: (2, 17), 1: (3, 63), 2: (1, 30)}
-    IB._reconcile_direct_write(out)
+    atts = IB.attempts_map(stats[0].to_pylist())
+    IB._reconcile_direct_write(out, IB._int_keys(atts))
     for b, (nb_, np_) in got.items():
         files = list((tmp_path / "postings" / f"bucket={b}").glob("*"))
         assert [f.name for f in files] == ["part-00000-0.parquet"]
@@ -301,15 +270,18 @@ def test_direct_writer_retry_cleans_inprogress_not_finals(tmp_path):
 
 
 def test_reconcile_keeps_newest_attempt_and_drops_orphans(tmp_path):
-    """Driver-side reconciliation: orphan .inprogress removed; duplicate
-    committed attempts of one partition keep only the newest."""
+    """Driver-side reconciliation of a plain task retry: the attempts map
+    names the retry (the newest attempt) as committed, so only its file
+    survives; orphan .inprogress files are removed whether or not their
+    pid committed, and committed files of other pids stay."""
     bdir = tmp_path / "bucket=3"
     bdir.mkdir(parents=True)
-    (bdir / "part-00002-4.parquet").write_bytes(b"old")
-    (bdir / "part-00002-11.parquet").write_bytes(b"new")
+    (bdir / "part-00002-4.parquet").write_bytes(b"failed-first-try")
+    (bdir / "part-00002-11.parquet").write_bytes(b"retry-committed")
     (bdir / "part-00009-2.parquet").write_bytes(b"ok")
     (bdir / "part-00009-5.parquet.inprogress").write_bytes(b"dead")
-    IB._reconcile_direct_write(str(tmp_path))
+    (bdir / "part-00004-0.parquet.inprogress").write_bytes(b"no-stats-pid")
+    IB._reconcile_direct_write(str(tmp_path), {2: 11, 9: 2})
     names = sorted(f.name for f in bdir.glob("*"))
     assert names == ["part-00002-11.parquet", "part-00009-2.parquet"]
 
@@ -405,10 +377,10 @@ def test_reconcile_with_expected_keeps_committed_attempt(tmp_path):
 
 def test_reconcile_ignores_non_direct_writer_files(tmp_path):
     """Files the direct writer did not name (a JVM-committer part file
-    with a uuid, a driver-side ``part-00000.parquet``) are left alone by
-    BOTH reconciliation modes — parsing them as ours would crash reader
-    open (ValueError on the uuid) or delete live data as an "unknown
-    attempt"."""
+    with a uuid, a driver-side ``part-00000.parquet``) are left alone
+    whatever the attempts map says — parsing them as ours would crash
+    reader open (ValueError on the uuid) or delete live data as an
+    "unknown attempt"."""
     bdir = tmp_path / "bucket=1"
     bdir.mkdir(parents=True)
     jvm = "part-00000-0eb2a631-7a54-4a02-bd59-5efbe951cd6a-c000.snappy.parquet"
@@ -419,9 +391,9 @@ def test_reconcile_ignores_non_direct_writer_files(tmp_path):
     IB._reconcile_direct_write(str(tmp_path), {3: 2})
     names = sorted(f.name for f in bdir.glob("*"))
     assert names == [jvm, "part-00000.parquet", "part-00003-2.parquet"]
-    # keep-newest fallback mode: same non-ours files still untouched
+    # a later map naming a different attempt: non-ours files still untouched
     (bdir / "part-00003-9.parquet").write_bytes(b"retry")
-    IB._reconcile_direct_write(str(tmp_path))
+    IB._reconcile_direct_write(str(tmp_path), {3: 9})
     names = sorted(f.name for f in bdir.glob("*"))
     assert names == [jvm, "part-00000.parquet", "part-00003-9.parquet"]
 

@@ -201,16 +201,10 @@ def test_save_results_crash_between_write_and_swap(spark, engine, monkeypatch):
     (round-1 verdict: the old double-overwrite lost the table)."""
     from pyspark.sql import functions as F
 
-    if (
-        engine.reader.cat.results_version() == 0
-        and not engine.reader.cat.results_buckets()
-    ):  # self-sufficient solo run
+    if not engine.reader.cat.results_buckets():  # self-sufficient solo run
         engine.save_results(engine.categorise_all())
     before = {r["doc_id"]: r["category_ids"] for r in engine.results().collect()}
-    v_before = (
-        engine.reader.cat.results_version(),
-        engine.reader.cat.results_buckets(),
-    )
+    v_before = engine.reader.cat.results_buckets()
 
     boom = RuntimeError("injected crash before pointer swap")
     monkeypatch.setattr(
@@ -228,10 +222,7 @@ def test_save_results_crash_between_write_and_swap(spark, engine, monkeypatch):
     monkeypatch.undo()
 
     # old snapshot still live and byte-complete
-    assert (
-        engine.reader.cat.results_version(),
-        engine.reader.cat.results_buckets(),
-    ) == v_before
+    assert engine.reader.cat.results_buckets() == v_before
     after = {r["doc_id"]: r["category_ids"] for r in engine.results().collect()}
     assert after == before
 
@@ -330,11 +321,10 @@ def test_streaming_expanders():
 
 
 def _regress_manifest(idx_dir, keep_stages, drop_tables):
-    """Surgically rewind a completed index to a mid-build crash state:
-    keep only ``keep_stages`` in the manifest (plus no buckets), delete
-    ``drop_tables`` dirs.  Models indexes left by pre-docs-tee builds (the
-    two stages committed independently) and a crash between the tee
-    branch's two commit_stage writes."""
+    """Rewind a completed index to a manifest holding only ``keep_stages``
+    (and no buckets), deleting ``drop_tables`` dirs.  The combined
+    staging+docs commit never writes such a manifest; these states model
+    a hand-edited or partially restored index."""
     import shutil
 
     cat = IndexCatalog(idx_dir)
@@ -355,10 +345,59 @@ def _assert_same_postings(spark, ref_dir, got_dir):
     assert ref.exceptAll(got).count() == 0
 
 
+def _assert_same_docs(spark, ref_dir, got_dir):
+    ref_docs = spark.read.parquet(str(ref_dir / "docs")).select("ord", "doc_id")
+    got_docs = spark.read.parquet(str(got_dir / "docs")).select("ord", "doc_id")
+    assert got_docs.count() == ref_docs.count() == N
+    assert ref_docs.exceptAll(got_docs).count() == 0
+
+
+def test_resume_after_crash_in_staging_docs_commit(
+    spark, corpus, tmp_path, monkeypatch
+):
+    """staging and docs commit in ONE manifest write: a crash in that
+    write leaves neither stage committed (no manifest ever holds exactly
+    one of them), and resume re-runs the tee and converges to the same
+    postings and docs (ord, doc_id) as a fresh build."""
+    ref_dir = tmp_path / "ref"
+    build_index(spark, corpus, str(ref_dir), CFG)
+
+    crash_dir = tmp_path / "crash"
+    written = []
+    orig_write = IndexCatalog._write_manifest
+
+    def recording_write(self, m):
+        written.append(set(m["stages"]))
+        orig_write(self, m)
+
+    orig_commit = IndexCatalog.commit_stages
+
+    def crashing_commit(self, stages):
+        if "staging" in stages:
+            raise InterruptedBuild()
+        orig_commit(self, stages)
+
+    monkeypatch.setattr(IndexCatalog, "_write_manifest", recording_write)
+    monkeypatch.setattr(IndexCatalog, "commit_stages", crashing_commit)
+    with pytest.raises(InterruptedBuild):
+        build_index(spark, corpus, str(crash_dir), CFG)
+    monkeypatch.setattr(IndexCatalog, "commit_stages", orig_commit)
+    stages = IndexCatalog(crash_dir).manifest()["stages"]
+    assert "staging" not in stages and "docs" not in stages
+
+    build_index(spark, corpus, str(crash_dir), CFG, resume=True)
+    assert "complete" in IndexCatalog(crash_dir).manifest()["stages"]
+    assert written
+    for names in written:
+        assert ("staging" in names) == ("docs" in names), names
+    _assert_same_postings(spark, ref_dir, crash_dir)
+    _assert_same_docs(spark, ref_dir, crash_dir)
+
+
 def test_resume_docs_committed_staging_not(spark, corpus, tmp_path):
-    """docs committed / staging not (a pre-tee-code crash between the two
-    concurrent stage commits): resume must take the legacy branch, rebuild
-    staging WITHOUT re-teeing docs, and converge to an identical index."""
+    """docs committed / staging not: resume re-runs the docs-tee, commits
+    both stages together and converges to a fresh build's postings and
+    docs (ord, doc_id)."""
     ref_dir = tmp_path / "ref"
     build_index(spark, corpus, str(ref_dir), CFG)
 
@@ -369,24 +408,19 @@ def test_resume_docs_committed_staging_not(spark, corpus, tmp_path):
         keep_stages={"ords", "docs"},
         drop_tables=["staging", "doc_stats", "docmap", "dictionary", "postings"],
     )
-    import os
-
-    docs_before = sorted(os.listdir(cat.path("docs")))
     build_index(spark, corpus, str(mix_dir), CFG, resume=True)
-    m = cat.manifest()
-    assert "complete" in m["stages"]
-    # the committed docs table was not rewritten by the resume
-    assert sorted(os.listdir(cat.path("docs"))) == docs_before
-    # the legacy staging rebuild must not have re-teed docs
-    assert not m["stages"]["staging"]["metrics"].get("docs_teed")
+    stages = cat.manifest()["stages"]
+    assert "complete" in stages
+    assert "attempts" in stages["staging"]["metrics"]
+    assert stages["docs"]["metrics"]["n_docs"] == N
     _assert_same_postings(spark, ref_dir, mix_dir)
+    _assert_same_docs(spark, ref_dir, mix_dir)
 
 
 def test_resume_staging_committed_docs_not(spark, corpus, tmp_path):
-    """staging committed / docs not (a crash between the tee branch's two
-    commit_stage writes): the docs dir holds committed tee files but the
-    stage is uncommitted — resume rebuilds docs via the legacy JVM write
-    (overwrite clears the stale tee files) and converges."""
+    """staging committed / docs not, with the docs dir gone: resume must
+    not skip the docs-tee on the strength of the staging commit alone —
+    it re-runs the tee and the rebuilt docs keep the ord alignment."""
     ref_dir = tmp_path / "ref2"
     build_index(spark, corpus, str(ref_dir), CFG)
 
@@ -395,15 +429,14 @@ def test_resume_staging_committed_docs_not(spark, corpus, tmp_path):
     cat = _regress_manifest(
         mix_dir,
         keep_stages={"ords", "staging"},
-        drop_tables=["doc_stats", "docmap", "dictionary", "postings"],
+        drop_tables=["docs", "doc_stats", "docmap", "dictionary", "postings"],
     )
     build_index(spark, corpus, str(mix_dir), CFG, resume=True)
-    assert "complete" in cat.manifest()["stages"]
+    stages = cat.manifest()["stages"]
+    assert "complete" in stages
+    assert stages["docs"]["metrics"]["n_docs"] == N
     _assert_same_postings(spark, ref_dir, mix_dir)
-    # docs content equal to a fresh build's (ord alignment preserved)
-    ref_docs = spark.read.parquet(str(ref_dir / "docs")).select("ord", "doc_id")
-    got_docs = spark.read.parquet(str(mix_dir / "docs")).select("ord", "doc_id")
-    assert ref_docs.exceptAll(got_docs).count() == 0
+    _assert_same_docs(spark, ref_dir, mix_dir)
 
 
 def test_results_reader_survives_saves_then_gc_beyond_horizon(spark, engine):
