@@ -222,6 +222,10 @@ class FieldSpanCache:
         self.incs.extend(np.asarray(incs_l, dtype=np.int32))
         self.valid.extend(np.asarray(valid_l, dtype=bool))
 
+    def has_collision(self) -> bool:
+        """True when two distinct terms seen so far share a term_id."""
+        return len(self._term_tid) != len(self.tid_term)
+
     def uid_lut(self, uniques: np.ndarray) -> np.ndarray:
         """Chunk-unique span strings -> cache uids (computing new ones)."""
         if len(self.slot) > self.max_spans:

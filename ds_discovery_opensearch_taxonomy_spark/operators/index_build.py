@@ -305,30 +305,41 @@ def attach_ords(
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
-        # The offsets pass sees only NON-EMPTY pids, so trailing empty
-        # partitions (tiny files split to satisfy minPartitionNum: parquet
-        # row-groups don't split, so later byte ranges carry no rows) may
-        # have pid >= len(offsets).  They are legal and yield nothing; a
-        # ROW arriving there is planning drift and must fail loudly.
-        start = offsets[pid] if pid < len(offsets) else None
-        nxt = start or 0
-        for rb in batches:
-            if start is None and rb.num_rows:
-                raise RuntimeError(
-                    f"partition {pid} has rows but the offsets pass saw only "
-                    f"{len(offsets)} partitions — input partitioning drifted "
-                    "between scans; materialize the corpus (write to parquet) "
-                    "before building"
-                )
+        nxt = offsets[pid] if pid < len(offsets) else 0
+        for rb in _aligned_batches(batches, pid, offsets, expected):
             ords = pa.array(
                 np.arange(nxt, nxt + rb.num_rows, dtype=np.int64), pa.int64()
             )
             nxt += rb.num_rows
             yield rb.append_column("ord", ords)
-        if start is not None:
-            _check_partition_count(pid, nxt - start, expected)
 
     return df.mapInArrow(run, out_schema)
+
+
+def _aligned_batches(batches, pid: int, offsets: list[int], expected):
+    """Pass one task's input batches through, failing loudly when the task
+    sees other rows than the offsets pass did.
+
+    The offsets pass sees only NON-EMPTY pids, so trailing empty
+    partitions (tiny files split to satisfy minPartitionNum: parquet
+    row-groups don't split, so later byte ranges carry no rows) may have
+    pid >= len(offsets).  They are legal and yield nothing; a ROW arriving
+    there is planning drift.  The per-partition count is checked once the
+    input is exhausted."""
+    start = offsets[pid] if pid < len(offsets) else None
+    seen = 0
+    for rb in batches:
+        if start is None and rb.num_rows:
+            raise RuntimeError(
+                f"partition {pid} has rows but the offsets pass saw only "
+                f"{len(offsets)} partitions — input partitioning drifted "
+                "between scans; materialize the corpus (write to parquet) "
+                "before building"
+            )
+        seen += rb.num_rows
+        yield rb
+    if start is not None:
+        _check_partition_count(pid, seen, expected)
 
 
 def _tokens_arrow_schema():
@@ -466,6 +477,60 @@ def _pack_sentinel(ford: int, s: dict) -> "object":
     )
 
 
+def tokenizer_specs(config: EngineConfig) -> list[tuple[str, str, list[str]]]:
+    """ChunkTokenizer specs: (field name, analyzer, source columns)."""
+    return [(f.name, f.analyzer, list(f.source_columns)) for f in config.fields]
+
+
+def tokenize_split(tok, batches, start_ord: int):
+    """One input split's Arrow batches -> its PACKED TOKENS_SCHEMA batches
+    (per field: one posting-run batch, then its doc-length sidecar).
+    Rows take dense ords ``start_ord, start_ord + 1, ...`` in input order.
+    Every input batch is consumed before the first output is yielded.
+    ``tok`` is a ChunkTokenizer over ``tokenizer_specs``; its field caches
+    hold the split's tid <-> term maps afterwards."""
+    src_cols = sorted({c for _, _, cols in tok.specs for c in cols})
+    chunk = TOKENIZE_CHUNK_DOCS  # docs per tokenizer call
+    next_ord = start_ord
+    acc: dict[int, dict] = {}
+    sent: dict[int, dict] = {}
+    for rb in batches:
+        names = rb.schema.names
+        for lo in range(0, rb.num_rows, chunk):
+            sub = rb.slice(lo, chunk)
+            doc_ids = np.arange(
+                next_ord, next_ord + sub.num_rows, dtype=np.int64
+            )
+            next_ord += sub.num_rows
+            columns = {
+                c: sub.column(names.index(c)).to_pylist() for c in src_cols
+            }
+            for r in tok.tokenize(columns, doc_ids):
+                a = acc.setdefault(
+                    r["ford"],
+                    {"tid": [], "ord": [], "tf": [], "dl": [],
+                     "pos_data": [], "pos_bounds": []},
+                )
+                a["tid"].append(r["term_id"])
+                a["ord"].append(r["doc_id"])
+                a["tf"].append(r["tf"])
+                a["dl"].append(r["dl"])
+                a["pos_data"].append(r["pos_data"])
+                a["pos_bounds"].append(r["pos_bounds"])
+                # doc-length sidecar: rows are doc-major, so each doc's
+                # first posting carries its (ord, dl) once
+                d = r["doc_id"]
+                first = np.empty(len(d), dtype=bool)
+                first[0] = True
+                first[1:] = d[1:] != d[:-1]
+                sd = sent.setdefault(r["ford"], {"ord": [], "dl": []})
+                sd["ord"].append(d[first])
+                sd["dl"].append(r["dl"][first])
+    for ford in sorted(acc):
+        yield _pack_field_runs(ford, acc[ford], tok.caches[ford])
+        yield _pack_sentinel(ford, sent[ford])
+
+
 def tokenize_corpus(
     corpus: DataFrame,
     config: EngineConfig,
@@ -492,65 +557,19 @@ def tokenize_corpus(
         ChunkTokenizer,
     )
 
-    specs = [(f.name, f.analyzer, list(f.source_columns)) for f in config.fields]
+    specs = tokenizer_specs(config)
     src_cols = sorted({c for f in config.fields for c in f.source_columns})
-    chunk = TOKENIZE_CHUNK_DOCS  # docs per tokenizer call
 
     def run(batches):
         from pyspark import TaskContext
 
-        tok = ChunkTokenizer(specs)
         pid = TaskContext.get().partitionId()
-        # same trailing-empty-partition contract as attach_ords: the offsets
-        # pass sees only non-empty pids; rows past its range = drift.
-        start_ord = offsets[pid] if pid < len(offsets) else None
-        next_ord = start_ord or 0
-        acc: dict[int, dict] = {}
-        sent: dict[int, dict] = {}
-        for rb in batches:
-            if start_ord is None and rb.num_rows:
-                raise RuntimeError(
-                    f"partition {pid} has rows but the offsets pass saw only "
-                    f"{len(offsets)} partitions — input partitioning drifted "
-                    "between scans; materialize the corpus (write to parquet) "
-                    "before building"
-                )
-            names = rb.schema.names
-            for lo in range(0, rb.num_rows, chunk):
-                sub = rb.slice(lo, chunk)
-                doc_ids = np.arange(
-                    next_ord, next_ord + sub.num_rows, dtype=np.int64
-                )
-                next_ord += sub.num_rows
-                columns = {
-                    c: sub.column(names.index(c)).to_pylist() for c in src_cols
-                }
-                for r in tok.tokenize(columns, doc_ids):
-                    a = acc.setdefault(
-                        r["ford"],
-                        {"tid": [], "ord": [], "tf": [], "dl": [],
-                         "pos_data": [], "pos_bounds": []},
-                    )
-                    a["tid"].append(r["term_id"])
-                    a["ord"].append(r["doc_id"])
-                    a["tf"].append(r["tf"])
-                    a["dl"].append(r["dl"])
-                    a["pos_data"].append(r["pos_data"])
-                    a["pos_bounds"].append(r["pos_bounds"])
-                    # doc-length sidecar: rows are doc-major, so each doc's
-                    # first posting carries its (ord, dl) once
-                    d = r["doc_id"]
-                    first = np.empty(len(d), dtype=bool)
-                    first[0] = True
-                    first[1:] = d[1:] != d[:-1]
-                    sd = sent.setdefault(r["ford"], {"ord": [], "dl": []})
-                    sd["ord"].append(d[first])
-                    sd["dl"].append(r["dl"][first])
-        if start_ord is not None:
-            _check_partition_count(pid, next_ord - start_ord, expected)
-        for ford in sorted(acc):
-            yield _pack_field_runs(ford, acc[ford], tok.caches[ford])
-            yield _pack_sentinel(ford, sent[ford])
+        # same trailing-empty-partition contract as attach_ords
+        yield from tokenize_split(
+            ChunkTokenizer(specs),
+            _aligned_batches(batches, pid, offsets, expected),
+            offsets[pid] if pid < len(offsets) else 0,
+        )
 
     if direct_out is not None:
         # staging build path: tasks parquet-encode their own packed runs
@@ -645,25 +664,38 @@ def docmap_rows(
     _end, _shift = int(end_ord), int(ord_shift)
 
     def pack(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        band, ford = int(key[0]), int(key[1])
-        band_start = band << _shift
-        band_n = min(_end - band_start, 1 << _shift)
-        o = pdf["ord"].to_numpy(np.int64)
-        vals = pdf["value"].to_numpy(np.int64)
-        if ford < 0:  # dense & complete: sort into ord order
-            arr = vals[np.argsort(o)].astype("<i8")
-        else:  # sparse per field: scatter into a dense int32 array
-            arr = np.zeros(band_n, dtype="<i4")
-            arr[o - band_start] = vals
-        rows = []
-        for seq, lo in enumerate(range(0, len(arr), DOCMAP_CHUNK)):
-            blk = arr[lo : lo + DOCMAP_CHUNK]
-            rows.append((band, ford, seq, len(blk), blk.tobytes()))
         return pd.DataFrame(
-            rows, columns=["band", "ford", "blk_seq", "n", "payload"]
+            pack_docmap_group(
+                int(key[0]), int(key[1]),
+                pdf["ord"].to_numpy(np.int64), pdf["value"].to_numpy(np.int64),
+                _end, _shift,
+            ),
+            columns=["band", "ford", "blk_seq", "n", "payload"],
         )
 
     return dm.groupBy("band", "ford").applyInPandas(pack, DOCMAP_SCHEMA)
+
+
+def pack_docmap_group(
+    band: int, ford: int, o: np.ndarray, vals: np.ndarray,
+    end_ord: int, ord_shift: int,
+) -> list[tuple]:
+    """One (band, ford) group's (ord, value) pairs -> DOCMAP rows
+    ``(band, ford, blk_seq, n, payload)``: ford < 0 packs the band's
+    doc_ids in ord order, ford >= 0 scatters field lengths into a dense
+    int32 array over the band (filled up to ``end_ord``)."""
+    band_start = band << ord_shift
+    band_n = min(end_ord - band_start, 1 << ord_shift)
+    if ford < 0:  # dense & complete: sort into ord order
+        arr = vals[np.argsort(o)].astype("<i8")
+    else:  # sparse per field: scatter into a dense int32 array
+        arr = np.zeros(band_n, dtype="<i4")
+        arr[o - band_start] = vals
+    rows = []
+    for seq, lo in enumerate(range(0, len(arr), DOCMAP_CHUNK)):
+        blk = arr[lo : lo + DOCMAP_CHUNK]
+        rows.append((band, ford, seq, len(blk), blk.tobytes()))
+    return rows
 
 
 def write_doc_stats(
@@ -912,6 +944,113 @@ def _heavy_salt_map(dict_df: DataFrame, config: EngineConfig) -> dict[int, int]:
     return {int(r["term_id"]): int(r["salt_bits"]) for r in rows}
 
 
+def salt_runs(batches, heavy_tids: np.ndarray, heavy_bits: np.ndarray, ord_bits: int):
+    """Packed-run batches -> SALTED_SCHEMA batches (see _salt_packed_runs):
+    ``heavy_tids`` sorted, ``heavy_bits`` their salt bit counts."""
+    import pyarrow as pa
+
+    ob = int(ord_bits)
+    out_names = [f.name for f in SALTED_SCHEMA.fields]
+    for rb in batches:
+        idx = {f: i for i, f in enumerate(rb.schema.names)}
+        tid = rb.column(idx["term_id"]).to_numpy(zero_copy_only=False)
+        if len(heavy_tids):
+            pos = np.searchsorted(heavy_tids, tid).clip(
+                max=len(heavy_tids) - 1
+            )
+            is_heavy = heavy_tids[pos] == tid
+        else:
+            is_heavy = np.zeros(len(tid), dtype=bool)
+        light_mask = pa.array(~is_heavy)
+        light = rb.filter(light_mask)
+        if light.num_rows:
+            yield pa.RecordBatch.from_arrays(
+                [
+                    light.column(idx["term_id"]),
+                    light.column(idx["ford"]),
+                    pa.array(
+                        np.zeros(light.num_rows, dtype=np.int32),
+                        pa.int32(),
+                    ),
+                    light.column(idx["n"]),
+                    light.column(idx["min_ord"]),
+                    light.column(idx["ord_bytes"]),
+                    light.column(idx["tf_bytes"]),
+                    light.column(idx["dl_bytes"]),
+                    light.column(idx["pos_lens"]),
+                    light.column(idx["pos_data"]),
+                    light.column(idx["wflags"]),
+                ],
+                names=out_names,
+            )
+        if not is_heavy.any():
+            continue
+        hv = rb.filter(pa.array(is_heavy))
+        bits = heavy_bits[pos[is_heavy]]
+        h_tid = hv.column(idx["term_id"]).to_pylist()
+        h_ford = hv.column(idx["ford"]).to_pylist()
+        h_mo = hv.column(idx["min_ord"]).to_pylist()
+        h_ob = hv.column(idx["ord_bytes"]).to_pylist()
+        h_tb = hv.column(idx["tf_bytes"]).to_pylist()
+        h_db = hv.column(idx["dl_bytes"]).to_pylist()
+        h_pl = hv.column(idx["pos_lens"]).to_pylist()
+        h_pd = hv.column(idx["pos_data"]).to_pylist()
+        h_wf = hv.column(idx["wflags"]).to_pylist()
+        rows = {k: [] for k in out_names}
+        for i in range(hv.num_rows):
+            rel = np.frombuffer(h_ob[i], dtype="<u4").astype(np.int64)
+            ords = int(h_mo[i]) + rel
+            wtf = 4 if (h_wf[i] & WIDE_TF) else 2
+            wpl = 4 if (h_wf[i] & WIDE_PL) else 2
+            shift = max(ob - int(bits[i]), 0)
+            salts = (ords >> shift).astype(np.int64)
+            cut = np.concatenate(
+                [[0], np.flatnonzero(salts[1:] != salts[:-1]) + 1,
+                 [len(ords)]]
+            )
+            pl = np.frombuffer(
+                h_pl[i], dtype="<u2" if wpl == 2 else "<u4"
+            ).astype(np.int64)
+            pc_off = np.concatenate([[0], np.cumsum(pl)])
+            for j0, j1 in zip(cut[:-1], cut[1:]):
+                j0, j1 = int(j0), int(j1)
+                rows["term_id"].append(h_tid[i])
+                rows["ford"].append(h_ford[i])
+                rows["salt"].append(int(salts[j0]))
+                rows["n"].append(j1 - j0)
+                rows["min_ord"].append(int(ords[j0]))
+                # sub-run streams re-base rel ords on their own first
+                # ord; tf/dl/pos widths are inherited from the parent
+                # run (sub-run maxima can only shrink, so the flags
+                # stay valid — at worst a few wastefully-wide bytes)
+                rows["ord_bytes"].append(
+                    (rel[j0:j1] - rel[j0]).astype("<u4").tobytes()
+                )
+                rows["tf_bytes"].append(h_tb[i][j0 * wtf : j1 * wtf])
+                rows["dl_bytes"].append(h_db[i][j0:j1])
+                rows["pos_lens"].append(h_pl[i][j0 * wpl : j1 * wpl])
+                rows["pos_data"].append(
+                    h_pd[i][int(pc_off[j0]) : int(pc_off[j1])]
+                )
+                rows["wflags"].append(h_wf[i])
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(rows["term_id"], pa.int64()),
+                pa.array(rows["ford"], pa.int32()),
+                pa.array(rows["salt"], pa.int32()),
+                pa.array(rows["n"], pa.int32()),
+                pa.array(rows["min_ord"], pa.int64()),
+                pa.array(rows["ord_bytes"], pa.binary()),
+                pa.array(rows["tf_bytes"], pa.binary()),
+                pa.array(rows["dl_bytes"], pa.binary()),
+                pa.array(rows["pos_lens"], pa.binary()),
+                pa.array(rows["pos_data"], pa.binary()),
+                pa.array(rows["wflags"], pa.int8()),
+            ],
+            names=out_names,
+        )
+
+
 def _salt_packed_runs(
     staged: DataFrame, heavy: dict[int, int], ord_bits: int
 ) -> DataFrame:
@@ -923,111 +1062,9 @@ def _salt_packed_runs(
     concatenation."""
     heavy_tids = np.array(sorted(heavy), dtype=np.int64)
     heavy_bits = np.array([heavy[t] for t in heavy_tids], dtype=np.int64)
-    ob = int(ord_bits)
 
     def run(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        out_names = [f.name for f in SALTED_SCHEMA.fields]
-        for rb in batches:
-            idx = {f: i for i, f in enumerate(rb.schema.names)}
-            tid = rb.column(idx["term_id"]).to_numpy(zero_copy_only=False)
-            if len(heavy_tids):
-                pos = np.searchsorted(heavy_tids, tid).clip(
-                    max=len(heavy_tids) - 1
-                )
-                is_heavy = heavy_tids[pos] == tid
-            else:
-                is_heavy = np.zeros(len(tid), dtype=bool)
-            light_mask = pa.array(~is_heavy)
-            light = rb.filter(light_mask)
-            if light.num_rows:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        light.column(idx["term_id"]),
-                        light.column(idx["ford"]),
-                        pa.array(
-                            np.zeros(light.num_rows, dtype=np.int32),
-                            pa.int32(),
-                        ),
-                        light.column(idx["n"]),
-                        light.column(idx["min_ord"]),
-                        light.column(idx["ord_bytes"]),
-                        light.column(idx["tf_bytes"]),
-                        light.column(idx["dl_bytes"]),
-                        light.column(idx["pos_lens"]),
-                        light.column(idx["pos_data"]),
-                        light.column(idx["wflags"]),
-                    ],
-                    names=out_names,
-                )
-            if not is_heavy.any():
-                continue
-            hv = rb.filter(pa.array(is_heavy))
-            bits = heavy_bits[pos[is_heavy]]
-            h_tid = hv.column(idx["term_id"]).to_pylist()
-            h_ford = hv.column(idx["ford"]).to_pylist()
-            h_mo = hv.column(idx["min_ord"]).to_pylist()
-            h_ob = hv.column(idx["ord_bytes"]).to_pylist()
-            h_tb = hv.column(idx["tf_bytes"]).to_pylist()
-            h_db = hv.column(idx["dl_bytes"]).to_pylist()
-            h_pl = hv.column(idx["pos_lens"]).to_pylist()
-            h_pd = hv.column(idx["pos_data"]).to_pylist()
-            h_wf = hv.column(idx["wflags"]).to_pylist()
-            rows = {k: [] for k in out_names}
-            for i in range(hv.num_rows):
-                rel = np.frombuffer(h_ob[i], dtype="<u4").astype(np.int64)
-                ords = int(h_mo[i]) + rel
-                wtf = 4 if (h_wf[i] & WIDE_TF) else 2
-                wpl = 4 if (h_wf[i] & WIDE_PL) else 2
-                shift = max(ob - int(bits[i]), 0)
-                salts = (ords >> shift).astype(np.int64)
-                cut = np.concatenate(
-                    [[0], np.flatnonzero(salts[1:] != salts[:-1]) + 1,
-                     [len(ords)]]
-                )
-                pl = np.frombuffer(
-                    h_pl[i], dtype="<u2" if wpl == 2 else "<u4"
-                ).astype(np.int64)
-                pc_off = np.concatenate([[0], np.cumsum(pl)])
-                for j0, j1 in zip(cut[:-1], cut[1:]):
-                    j0, j1 = int(j0), int(j1)
-                    rows["term_id"].append(h_tid[i])
-                    rows["ford"].append(h_ford[i])
-                    rows["salt"].append(int(salts[j0]))
-                    rows["n"].append(j1 - j0)
-                    rows["min_ord"].append(int(ords[j0]))
-                    # sub-run streams re-base rel ords on their own first
-                    # ord; tf/dl/pos widths are inherited from the parent
-                    # run (sub-run maxima can only shrink, so the flags
-                    # stay valid — at worst a few wastefully-wide bytes)
-                    rows["ord_bytes"].append(
-                        (rel[j0:j1] - rel[j0]).astype("<u4").tobytes()
-                    )
-                    rows["tf_bytes"].append(h_tb[i][j0 * wtf : j1 * wtf])
-                    rows["dl_bytes"].append(h_db[i][j0:j1])
-                    rows["pos_lens"].append(h_pl[i][j0 * wpl : j1 * wpl])
-                    rows["pos_data"].append(
-                        h_pd[i][int(pc_off[j0]) : int(pc_off[j1])]
-                    )
-                    rows["wflags"].append(h_wf[i])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(rows["term_id"], pa.int64()),
-                    pa.array(rows["ford"], pa.int32()),
-                    pa.array(rows["salt"], pa.int32()),
-                    pa.array(rows["n"], pa.int32()),
-                    pa.array(rows["min_ord"], pa.int64()),
-                    pa.array(rows["ord_bytes"], pa.binary()),
-                    pa.array(rows["tf_bytes"], pa.binary()),
-                    pa.array(rows["dl_bytes"], pa.binary()),
-                    pa.array(rows["pos_lens"], pa.binary()),
-                    pa.array(rows["pos_data"], pa.binary()),
-                    pa.array(rows["wflags"], pa.int8()),
-                ],
-                names=out_names,
-            )
+        return salt_runs(batches, heavy_tids, heavy_bits, ord_bits)
 
     cols = [
         "term_id", "ford", "n", "min_ord", "ord_bytes", "tf_bytes",

@@ -211,6 +211,7 @@ class IndexCatalog:
         stats_base: dict | None = None,
         compacted_salts: int | None = None,
         postings_attempts: dict | None = None,
+        bucket_bytes: dict[str, int] | None = None,
     ) -> None:
         """ONE atomic manifest write: bump table generations to the
         compacted dirs, drop the delta list, AND roll the compacted
@@ -221,7 +222,10 @@ class IndexCatalog:
         batch-seq counter resets in the SAME write (resetting without the
         renumber — or vice versa — would collide salts and corrupt the
         concatenation decode order).  A crash before this leaves the old
-        main+delta view live; after it, the compacted view."""
+        main+delta view live; after it, the compacted view.
+        ``bucket_bytes`` refreshes each committed bucket's ``bytes`` to the
+        new postings generation's size (its ``ts`` stays), so the
+        auto-compaction ratio measures against the index as it is now."""
         m = self.manifest()
         meta = m.setdefault("meta", {})
         # compacted batches must STAY replay-detectable: an at-least-once
@@ -245,6 +249,8 @@ class IndexCatalog:
             # separately, a crash between the two would re-prune the still-
             # live old generation against the new map (data loss)
             meta["postings_attempts"] = postings_attempts
+        for b, size in (bucket_bytes or {}).items():
+            m["buckets"][b]["bytes"] = int(size)
         self._write_manifest(m)
 
     #: replay-detection window for compacted batch keys (FIFO)

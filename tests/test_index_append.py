@@ -17,6 +17,7 @@ from ds_discovery_opensearch_taxonomy_spark.operators.oracle import (
     build_oracle_doc,
 )
 from ds_discovery_opensearch_taxonomy_spark.operators.search import run_categories
+from ds_discovery_opensearch_taxonomy_spark.sources.catalog import IndexCatalog
 from ds_discovery_opensearch_taxonomy_spark.sources.corpus import (
     load_categories,
     synthesize_corpus,
@@ -762,3 +763,237 @@ def test_append_docs_api_auto_compacts(spark, tmp_path_factory):
         TEST_CONFIG,
     )
     _parity(spark, eng_r, oracle, QUERIES[:3], scored=True, top_k=5)
+
+
+# --------------------------------------------------------------------------
+# Driver-built vs Spark-built deltas
+# --------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def small_index(spark, tmp_path_factory):
+    """A 60-doc TEST_CONFIG index (bands of 32 ords) and one append batch
+    of 40 new docs plus re-ingested base docs with new content.  The batch
+    is materialized, so every append reads the same rows in the same order,
+    and it spans several input partitions, so the Spark path merges more
+    than one posting run per term."""
+    import pandas as pd
+
+    from ds_discovery_opensearch_taxonomy_spark.operators.index_build import (
+        ord_shift_of,
+    )
+
+    out = tmp_path_factory.mktemp("small_index") / "idx"
+    base = with_doc_ids(synthesize_corpus(spark, 60))
+    build_index(spark, base, str(out), TEST_CONFIG)
+    raw = synthesize_corpus(spark, 100)
+    rows = sorted(
+        (r.asDict() for r in with_doc_ids(raw).collect()),
+        key=lambda r: r["doc_id"],
+    )
+    base_ids = {r["doc_id"] for r in base.select("doc_id").collect()}
+    new = [r for r in rows if r["doc_id"] not in base_ids]
+    again = [
+        dict(r, content="zanzibar expedition ledger " + r["content"])
+        for r in rows
+        if r["doc_id"] in base_ids and r["doc_id"] % 6 == 0
+    ]
+    pdf = pd.DataFrame(new + again)[raw.columns]
+    batch = with_doc_ids(spark.createDataFrame(pdf, schema=raw.schema))
+    assert batch.rdd.getNumPartitions() > 1
+    # a second batch re-ingests docs the first one wrote: some of them
+    # re-ingested already (their base ord is tombstoned), some new
+    again2 = [
+        dict(r, content="quetzalcoatl archive " + r["content"])
+        for r in again[:3] + new[:3]
+    ]
+    batch2 = with_doc_ids(
+        spark.createDataFrame(
+            pd.DataFrame(again2)[raw.columns], schema=raw.schema
+        )
+    )
+    # the re-ingested docs' old ords and the batch's new ords each span
+    # more than one eval band
+    m = IndexCatalog(out).manifest()["meta"]
+    shift = ord_shift_of(60, int(m["band_bits"]))
+    assert shift == 5 and len(again) >= 4 and len(new) == 40
+    return out, batch, batch2
+
+
+def _copy_index(src, dst):
+    import shutil
+
+    shutil.copytree(src, dst)
+    return dst
+
+
+def _append(spark, root, batch, key):
+    from ds_discovery_opensearch_taxonomy_spark.operators.index_append import (
+        append_batch,
+    )
+
+    return append_batch(spark, IndexCatalog(root), TEST_CONFIG, batch, key)
+
+
+def _assert_same_live_index(spark, a, b, seq, key):
+    """Two indexes that took the same batch hold identical delta rows
+    (every column, payload bytes included), the same delta metrics apart
+    from ts/bytes/path, and give the same (doc, score) results."""
+    for table in (
+        IndexCatalog.DELTA_DOCS,
+        IndexCatalog.DELTA_DICTIONARY,
+        IndexCatalog.DELTA_BLOCKS,
+        IndexCatalog.DELTA_DOCMAP,
+    ):
+        da = spark.read.parquet(f"{a}/{table}/batch={seq}")
+        db = spark.read.parquet(f"{b}/{table}/batch={seq}")
+        assert da.schema == db.schema, table
+        ra = sorted(map(tuple, da.collect()), key=repr)
+        rb = sorted(map(tuple, db.collect()), key=repr)
+        assert ra and ra == rb, table
+    ma = IndexCatalog(a).deltas()[key]
+    mb = IndexCatalog(b).deltas()[key]
+    skip = {"ts", "bytes", "path"}
+    assert {k: v for k, v in ma.items() if k not in skip} == {
+        k: v for k, v in mb.items() if k not in skip
+    }
+    got = []
+    for root in (a, b):
+        eng = TaxonomyEngine(spark, str(root), TEST_CONFIG)
+        got.append(
+            sorted(
+                map(tuple, run_categories(spark, eng.reader, QUERIES, scored=True).collect())
+            )
+        )
+    assert got[0] and got[0] == got[1]
+
+
+def test_driver_and_spark_appends_write_identical_deltas(
+    spark, small_index, tmp_path, monkeypatch
+):
+    """The driver path and the Spark plan build the same delta from the
+    same batch: docs, dictionary, blocks and docmap (tombstones included)
+    are row-identical, and search results are the same.  A second batch
+    re-ingests docs of the first, so its tombstone lookup must skip ords
+    the first batch already tombstoned."""
+    from ds_discovery_opensearch_taxonomy_spark.operators import index_append
+
+    src, batch, batch2 = small_index
+    a = _copy_index(src, tmp_path / "driver")
+    b = _copy_index(src, tmp_path / "spark")
+    ma = _append(spark, a, batch, "d1")
+    assert ma["path"] == "driver"
+    monkeypatch.setattr(index_append, "DRIVER_APPEND_MAX_ROWS", 0)
+    mb = _append(spark, b, batch, "d1")
+    assert mb["path"] == "spark"
+    assert ma["seq"] == mb["seq"] == 0
+    # the tombstones are there: the re-ingested docs left the live view
+    tomb = spark.read.parquet(f"{a}/delta/docmap/batch=0").where("ford = -2")
+    assert tomb.select("band").distinct().count() >= 2
+    _assert_same_live_index(spark, a, b, 0, "d1")
+    assert _append(spark, a, batch2, "d2")["path"] == "spark"
+    monkeypatch.undo()
+    assert _append(spark, b, batch2, "d2")["path"] == "driver"
+    tomb2 = spark.read.parquet(f"{a}/delta/docmap/batch=1").where("ford = -2")
+    assert sum(r["n"] for r in tomb2.collect()) == 6
+    _assert_same_live_index(spark, a, b, 1, "d2")
+
+
+def test_append_path_selection_at_row_limit(spark, small_index, tmp_path, monkeypatch):
+    """A batch of DRIVER_APPEND_MAX_ROWS + 1 rows runs the Spark plan; one
+    of DRIVER_APPEND_MAX_ROWS rows is built in the driver."""
+    from ds_discovery_opensearch_taxonomy_spark.operators import index_append
+
+    src, batch, _ = small_index
+    monkeypatch.setattr(index_append, "DRIVER_APPEND_MAX_ROWS", 5)
+    root = _copy_index(src, tmp_path / "idx")
+    ordered = batch.orderBy("doc_id")
+    m1 = _append(spark, root, ordered.limit(6), "six")
+    assert m1["path"] == "spark" and m1["n_docs"] == 6
+    m2 = _append(spark, root, ordered.offset(6).limit(5), "five")
+    assert m2["path"] == "driver" and m2["n_docs"] == 5
+    assert IndexCatalog(root).deltas()["five"]["path"] == "driver"
+
+
+def test_driver_retry_clears_crashed_spark_append(
+    spark, small_index, tmp_path, monkeypatch
+):
+    """A Spark-path append that wrote its part files but crashed before
+    its manifest commit, retried under the same batch_key through the
+    driver path: the retry reuses the seq, no file of the crashed attempt
+    survives, and the live index equals a clean driver-path append."""
+    from ds_discovery_opensearch_taxonomy_spark.operators import index_append
+
+    src, batch, _ = small_index
+    crashed = _copy_index(src, tmp_path / "crashed")
+    clean = _copy_index(src, tmp_path / "clean")
+
+    def crash(self, key, metrics):
+        raise RuntimeError("crash before commit")
+
+    monkeypatch.setattr(index_append, "DRIVER_APPEND_MAX_ROWS", 0)
+    monkeypatch.setattr(IndexCatalog, "commit_delta", crash)
+    with pytest.raises(RuntimeError, match="crash before commit"):
+        _append(spark, crashed, batch, "r1")
+    monkeypatch.undo()
+    left = {p for p in (crashed / "delta").rglob("*") if p.is_file()}
+    assert any(p.name.startswith("part-") for p in left)
+    assert any("staging" in str(p) for p in left)
+    assert not IndexCatalog(crashed).deltas()
+
+    m = _append(spark, crashed, batch, "r1")
+    assert m["path"] == "driver" and m["seq"] == 0
+    assert not {p for p in left if p.exists()}
+    assert not (crashed / "delta" / "staging" / "batch=0").exists()
+    assert _append(spark, clean, batch, "r1")["path"] == "driver"
+    _assert_same_live_index(spark, crashed, clean, 0, "r1")
+
+
+def test_compaction_ratio_measures_against_compacted_size(
+    spark, small_index, tmp_path
+):
+    """After a compaction the byte-ratio trigger compares delta bytes with
+    the COMPACTED postings size: compaction refreshes every bucket's
+    ``bytes`` (keeping its ``ts``).  For an append whose delta bytes lie
+    between the ratio of the build-time size and the ratio of the
+    compacted size, the trigger answers as the compacted size says."""
+    import dataclasses
+    from pathlib import Path
+
+    src, batch, _ = small_index
+    root = _copy_index(src, tmp_path / "idx")
+    cat = IndexCatalog(root)
+    build_buckets = cat.manifest()["buckets"]
+    build_bytes = sum(int(b["bytes"]) for b in build_buckets.values())
+    cfg = dataclasses.replace(
+        TEST_CONFIG, compact_after_batches=99, compact_after_delta_ratio=None
+    )
+    eng = TaxonomyEngine(spark, str(root), cfg)
+    assert eng.append_docs(batch, batch_key="grow", auto_compact=False)
+    assert eng.compact() is not None
+    buckets = cat.manifest()["buckets"]
+    gen_dir = Path(cat.path("postings"))
+    for b, meta in buckets.items():
+        assert meta["ts"] == build_buckets[b]["ts"]
+        assert int(meta["bytes"]) == sum(
+            f.stat().st_size for f in (gen_dir / f"bucket={b}").rglob("*.parquet")
+        )
+    compacted_bytes = sum(int(b["bytes"]) for b in buckets.values())
+    assert compacted_bytes != build_bytes
+
+    more = with_doc_ids(synthesize_corpus(spark, 130)).join(
+        eng.reader.docs().select("doc_id"), "doc_id", "left_anti"
+    )
+    more = spark.createDataFrame(more.collect(), more.schema)
+    m = eng.append_docs(more, batch_key="small", auto_compact=False)
+    delta_bytes = int(m["bytes"])
+    # a ratio between delta/build and delta/compacted: the trigger's answer
+    # depends on which base it measures against
+    ratio = delta_bytes / math.sqrt(build_bytes * compacted_bytes)
+    trips = delta_bytes >= ratio * compacted_bytes
+    assert trips != (delta_bytes >= ratio * build_bytes)
+    eng_r = TaxonomyEngine(
+        spark, str(root), dataclasses.replace(cfg, compact_after_delta_ratio=ratio)
+    )
+    assert (eng_r.maybe_compact() is not None) == trips
+    assert len(cat.deltas()) == (0 if trips else 1)
