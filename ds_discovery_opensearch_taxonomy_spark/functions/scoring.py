@@ -21,6 +21,13 @@ the engine and the brute-force oracle):
 * sloppy matching uses the advance-min window algorithm below; a match is a
   choice of one position per slot with window = max(pp) - min(pp) <= slop
   where pp = position - slot_offset.
+
+The phrase functions here are the per-doc REFERENCE: the brute-force oracle
+and the tests compare against them.  The engine does not call them; its
+phrase evaluator (``operators/search.py``, ``_exact_phrase_freqs`` and
+``_sloppy_phrase_freqs``) runs the same adjacency count and advance-min
+window loop vectorized over every doc of an eval group at once, with
+bit-identical freqs.
 """
 
 from __future__ import annotations

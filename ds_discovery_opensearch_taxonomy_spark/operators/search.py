@@ -29,7 +29,6 @@ postings" (constant-score doc-id sets, Lucene's constant-score rewrite).
 
 from __future__ import annotations
 
-import os
 import re
 from dataclasses import dataclass
 
@@ -41,6 +40,7 @@ from pyspark.sql import types as T
 
 from ds_discovery_opensearch_taxonomy_spark.config import EngineConfig
 from ds_discovery_opensearch_taxonomy_spark.functions import codec, scoring
+from ds_discovery_opensearch_taxonomy_spark.functions.vtokenize import _ragged_gather
 from ds_discovery_opensearch_taxonomy_spark.plans import queryparser as qp
 from ds_discovery_opensearch_taxonomy_spark.sources.catalog import IndexCatalog
 
@@ -540,7 +540,7 @@ _MAX_PUSHED_TERM_IDS = 8192
 #: O(postings) with tiny numpy constants.  High-band indexes make each band
 #: small, so most groups take the cheap path; the pruning path still guards
 #: the pathological wide-OR x large-band case it was built for.
-_TOPK_MIN_POSTINGS = int(os.environ.get("SPARK_GRAFT_TOPK_MIN_POSTINGS", 100_000))
+_TOPK_MIN_POSTINGS = 100_000
 
 
 @dataclass(frozen=True)
@@ -948,9 +948,9 @@ class _TermData:
     (offsets, flat) arrays on first ``pos_offsets``/``pos_flat`` access —
     a phrase whose slot-term docid intersection comes up empty (the
     common case: most phrases match nothing in a band) never pays its
-    terms' position decode, and ``_slot_keys`` skips terms with no
-    candidate overlap the same way.  ``_full_tfs``/``_keep`` carry the
-    pre-tombstone tf array + keep mask the deferred decode needs."""
+    terms' position decode (the docid pregate in ``_Evaluator._eval_phrase``).
+    ``_full_tfs``/``_keep`` carry the pre-tombstone tf array + keep mask
+    the deferred decode needs."""
 
     __slots__ = (
         "ids", "tfs", "_po", "_pf", "_raw", "_full_tfs", "_keep", "_adj",
@@ -1014,10 +1014,6 @@ class _TermData:
         _s = _t.perf_counter() if self.stats is not None else 0.0
         po, pf = codec.decode_positions(self._full_tfs, self._raw)
         if self._keep is not None:
-            from ds_discovery_opensearch_taxonomy_spark.functions.vtokenize import (
-                _ragged_gather,
-            )
-
             lens = np.diff(po)
             klens = lens[self._keep]
             pf = pf[_ragged_gather(po[:-1][self._keep], klens.astype(np.int64))]
@@ -1189,6 +1185,80 @@ def _topk_keep_ties(ids: np.ndarray, sc: np.ndarray, k: int):
     return ids[keep], sc[keep]
 
 
+def _doc_freqs(docs: np.ndarray, scored: bool, weights=None):
+    """Sorted per-occurrence ords -> (unique ords, per-ord freq).  The freq
+    sums ``weights`` in occurrence order (run lengths when None); bool
+    mode (``scored=False``) returns the ords only, freqs None."""
+    if not len(docs):
+        return _EMPTY, _EMPTY
+    bnd = np.empty(len(docs), dtype=bool)
+    bnd[0] = True
+    np.not_equal(docs[1:], docs[:-1], out=bnd[1:])
+    ids = docs[bnd]
+    if not scored:
+        return ids, None
+    run = np.cumsum(bnd) - 1
+    freqs = np.bincount(run, weights=weights, minlength=len(ids))
+    return ids, freqs.astype(np.float64)
+
+
+def _keys_in_docs(keys: np.ndarray, docs: np.ndarray) -> np.ndarray:
+    """The sorted occurrence keys ``ord << 32 | pos`` whose ord is in the
+    sorted ``docs``: one slice per doc, two searchsorteds in all."""
+    lo = np.searchsorted(keys, docs << 32)
+    hi = np.searchsorted(keys, (docs + 1) << 32)
+    return keys[_ragged_gather(lo, hi - lo)]
+
+
+def _exact_phrase_freqs(slot_arrs: list[np.ndarray], scored: bool):
+    """Exact phrase (slop <= 0) freqs over per-slot occurrence keys
+    ``ord << 32 | (pos - slot)``: aligned occurrences are the
+    smallest-first intersection chain of every slot, and a doc's freq is
+    the run length of its ord among them."""
+    order = np.argsort([len(a) for a in slot_arrs])
+    hits = slot_arrs[order[0]]
+    for oi in order[1:]:
+        if not len(hits):
+            break
+        hits = _intersect_sorted(hits, slot_arrs[oi])
+    return _doc_freqs(hits >> 32, scored)
+
+
+def _sloppy_phrase_freqs(
+    slot_arrs: list[np.ndarray], slop: int, scored: bool
+):
+    """Sloppy phrase freqs: ``scoring.sloppy_phrase_freq``'s advance-min
+    loop, run for every doc at once over per-slot occurrence keys.
+
+    The loop's heap pops occurrences in (key, slot) order, so a stable
+    sort of the concatenated slot keys replays its pops.  When x (slot i)
+    pops, slot j's head is its first key >= x, or > x for j < i (a tied
+    key of a lower slot popped first).  x is processed only while every
+    slot still has a head in x's doc — the loop stops once a slot runs
+    out — and its window is max(head) - x.  bincount sums 1/(1+window)
+    per doc in pop order, as the loop does, so the freqs are
+    bit-identical to it."""
+    keys = np.concatenate(slot_arrs)
+    slot = np.repeat(np.arange(len(slot_arrs)), [len(a) for a in slot_arrs])
+    order = np.argsort(keys, kind="stable")
+    xs, xslot = keys[order], slot[order]
+    docs = xs >> 32
+    ok = np.ones(len(xs), dtype=bool)
+    top = xs.copy()
+    for j, kj in enumerate(slot_arrs):
+        last = len(kj) - 1
+        nxt = np.searchsorted(kj, xs)
+        nxt += (xslot > j) & (kj[np.minimum(nxt, last)] == xs)
+        head = kj[np.minimum(nxt, last)]
+        ok &= (nxt <= last) & ((head >> 32) == docs)
+        np.maximum(top, head, out=top)
+    window = top - xs
+    ok &= window <= slop
+    if not scored:
+        return _doc_freqs(docs[ok], False)
+    return _doc_freqs(docs[ok], True, 1.0 / (1.0 + window[ok]))
+
+
 class _Evaluator:
     """Evaluates one compiled query against one (category, band) block group.
 
@@ -1270,10 +1340,6 @@ class _Evaluator:
         # e.g. the streaming batch path) filter here as before.
         po = pf = None
         if td._po is not None:
-            from ds_discovery_opensearch_taxonomy_spark.functions.vtokenize import (
-                _ragged_gather,
-            )
-
             lens = np.diff(td._po)
             klens = lens[keep]
             pf = td._pf[_ragged_gather(td._po[:-1][keep], klens.astype(np.int64))]
@@ -1534,54 +1600,18 @@ class _Evaluator:
     # differences, so the offset cancels everywhere it is consumed
     _POS_OFF = np.int64(1 << 12)
 
-    def _slot_keys(
-        self, tds: list[_TermData], si: int, cand: np.ndarray
-    ) -> np.ndarray:
-        """Sorted int64 keys ``doc_index << 32 | (pos - si + _POS_OFF)`` for
-        every occurrence of slot ``si``'s terms in candidate docs — fully
-        vectorized (segment gather of the per-posting position runs)."""
-        parts = []
-        for td in tds:
-            j = np.searchsorted(cand, td.ids)
-            jc = np.minimum(j, len(cand) - 1)
-            sel = np.flatnonzero(cand[jc] == td.ids)
-            if not len(sel):
-                continue
-            doc_idx = j[sel]
-            starts = td.pos_offsets[sel]
-            lens = td.pos_offsets[sel + 1] - starts
-            total = int(lens.sum())
-            if total == 0:
-                continue
-            gather = np.repeat(
-                starts - np.concatenate(([0], np.cumsum(lens)[:-1])), lens
-            ) + np.arange(total, dtype=np.int64)
-            pos = td.pos_flat[gather]
-            docr = np.repeat(doc_idx.astype(np.int64), lens)
-            parts.append((docr << 32) | (pos - si + self._POS_OFF))
-        if not parts:
-            return _EMPTY
-        if len(parts) == 1:
-            # ascending by construction (docs, then pos); dedupe stacked
-            # tokens at one position (oracle semantics: positions are a set)
-            k = parts[0]
-            if len(k) > 1:
-                k = k[np.concatenate(([True], k[1:] != k[:-1]))]
-            return k
-        return np.unique(np.concatenate(parts))
-
-    def _eval_phrase_bool(
-        self, node: qp.PhraseNode
-    ) -> tuple[np.ndarray, np.ndarray]:
-        """Match-only phrase evaluation over CACHED per-(term, slot)
-        occurrence-key arrays (_TermData.adj_keys): an exact phrase is one
-        sorted-intersection chain, a sloppy phrase one searchsorted window
-        test per slot — no per-phrase candidate gather, no per-doc python
-        loop, and terms shared across phrases amortize their key build.
-        A docid-level pregate keeps the lazy position decode: slots whose
-        docid intersection is already empty never force it."""
+    def _eval_phrase(self, node: qp.PhraseNode) -> tuple[np.ndarray, np.ndarray]:
+        """Phrase evaluation over CACHED per-(term, slot) occurrence-key
+        arrays (_TermData.adj_keys), for both bool and scored mode: one
+        frequency kernel per phrase kind (``_exact_phrase_freqs``,
+        ``_sloppy_phrase_freqs``), vectorized over every doc at once, so
+        terms shared across phrases amortize their key build and no
+        per-doc python loop runs.  Bool mode keeps the docs with a
+        non-zero freq and skips the weight sum; scored mode applies
+        ``idf_sum * tf_norm(freq)``.  A docid-level pregate keeps the lazy
+        position decode: slots whose docid intersection is already empty
+        never force it."""
         slot_tds: list[list[_TermData]] = []
-        cand = None
         for slot in node.slots:
             tds = [
                 td
@@ -1591,17 +1621,21 @@ class _Evaluator:
             if not tds:
                 return _EMPTY, _EMPTY
             for td in tds:
-                if not td.has_pos:
+                if not td.has_pos:  # cheap check — does NOT force decode
                     raise RuntimeError(
                         "phrase term arrived without positions — posdata "
                         "gating dropped a stream the evaluator needs"
                     )
             slot_tds.append(tds)
-        # docid pregate ONLY while some slot term's positions are still
-        # undecoded: it exists to protect the lazy decode, and once every
-        # term is materialized (terms shared across phrases decode once)
-        # the smallest-first key intersection below is its own gate
-        if any(td._po is None for tds in slot_tds for td in tds):
+        # docid pregate: candidate docs hold a term of every slot.  It runs
+        # while some slot term's positions are undecoded — an empty
+        # candidate set never forces the lazy decode — and for every sloppy
+        # phrase, whose kernel then sees only keys of candidate docs: a
+        # common term's keys elsewhere would cost a sort for nothing.  An
+        # exact phrase's smallest-first key chain is its own gate.
+        sloppy = node.slop > 0
+        if sloppy or any(td._po is None for tds in slot_tds for td in tds):
+            cand = None
             for tds in slot_tds:
                 slot_ids = (
                     tds[0].ids
@@ -1615,140 +1649,29 @@ class _Evaluator:
                 )
                 if len(cand) == 0:
                     return _EMPTY, _EMPTY
-        off = self._POS_OFF
         slot_arrs = []
         for si, tds in enumerate(slot_tds):
-            arrs = [td.adj_keys(si, off) for td in tds]
+            arrs = [td.adj_keys(si, self._POS_OFF) for td in tds]
+            if sloppy:
+                arrs = [_keys_in_docs(a, cand) for a in arrs]
             a = arrs[0] if len(arrs) == 1 else _union_ids_many(arrs)
             if not len(a):
                 return _EMPTY, _EMPTY
             slot_arrs.append(a)
-        if node.slop <= 0:
-            # smallest-first intersection chain over absolute keys
-            order = np.argsort([len(a) for a in slot_arrs])
-            acc = slot_arrs[order[0]]
-            for oi in order[1:]:
-                if not len(acc):
-                    return _EMPTY, _EMPTY
-                acc = _intersect_sorted(acc, slot_arrs[oi])
-            hits = acc
+        if sloppy:
+            ids, freqs = _sloppy_phrase_freqs(slot_arrs, node.slop, self.scored)
         else:
-            # existence: some occurrence x (window minimum) has every slot
-            # within [x, x+slop]; keys embed the ord in the high 32 bits
-            # and slop < _POS_OFF, so windows never cross docs
-            xs = (
-                slot_arrs[0]
-                if len(slot_arrs) == 1
-                else _union_ids_many(slot_arrs)
-            )
-            ok = np.ones(len(xs), dtype=bool)
-            for keys in slot_arrs:
-                ok &= np.searchsorted(keys, xs + node.slop + 1) > np.searchsorted(
-                    keys, xs
-                )
-            hits = xs[ok]
-        if not len(hits):
+            ids, freqs = _exact_phrase_freqs(slot_arrs, self.scored)
+        if not len(ids):
             return _EMPTY, _EMPTY
-        docs = hits >> 32
-        if len(docs) > 1:
-            docs = docs[np.concatenate(([True], docs[1:] != docs[:-1]))]
-        return docs, np.zeros(len(docs))
-
-    def _eval_phrase(self, node: qp.PhraseNode) -> tuple[np.ndarray, np.ndarray]:
         if not self.scored:
-            return self._eval_phrase_bool(node)
-        # candidate docs: intersection over slots of (union of slot terms)
-        slot_tds: list[list[_TermData]] = []
-        cand = None
-        for slot in node.slots:
-            tds = [td for t in slot if (td := self._term(node.field, t)) is not None]
-            if not tds:
-                return _EMPTY, _EMPTY
-            for td in tds:
-                if not td.has_pos:  # cheap check — does NOT force decode
-                    raise RuntimeError(
-                        "phrase term arrived without positions — posdata "
-                        "gating dropped a stream the evaluator needs"
-                    )
-            slot_ids = (
-                tds[0].ids
-                if len(tds) == 1
-                else _union_ids_many([td.ids for td in tds])
-            )
-            cand = (
-                slot_ids
-                if cand is None
-                else _intersect_sorted(cand, slot_ids)
-            )
-            if len(cand) == 0:
-                return _EMPTY, _EMPTY
-            slot_tds.append(tds)
-        if node.slop <= 0:
-            # exact scored: the SAME cached per-(term, slot) key chain as
-            # the bool path; per-doc phrase freqs are the run lengths of
-            # the doc component of the surviving alignment keys
-            off = self._POS_OFF
-            slot_arrs = []
-            for si, tds in enumerate(slot_tds):
-                arrs = [td.adj_keys(si, off) for td in tds]
-                a = arrs[0] if len(arrs) == 1 else _union_ids_many(arrs)
-                if not len(a):
-                    return _EMPTY, _EMPTY
-                slot_arrs.append(a)
-            order = np.argsort([len(a) for a in slot_arrs])
-            acc = slot_arrs[order[0]]
-            for oi in order[1:]:
-                if not len(acc):
-                    return _EMPTY, _EMPTY
-                acc = _intersect_sorted(acc, slot_arrs[oi])
-            if not len(acc):
-                return _EMPTY, _EMPTY
-            docs_all = acc >> 32
-            bnd = np.concatenate(([True], docs_all[1:] != docs_all[:-1]))
-            starts = np.flatnonzero(bnd)
-            ids = docs_all[starts]
-            freqs_hit = np.diff(
-                np.append(starts, len(docs_all))
-            ).astype(np.float64)
-            idf_sum = sum(
-                self._idf(node.field, t)
-                for slot in node.slots
-                for t in slot
-            )
-            sc = idf_sum * scoring.tf_norm(
-                freqs_hit, self._dls(node.field, ids),
-                self.avgdl[node.field], self.k1, self.b,
-            )
-            return ids, sc
-        # sloppy scored: per-doc advance-min window algorithm; per-doc
-        # slices come from two vectorized searchsorteds per slot
-        # (match-only evaluation never reaches here — _eval_phrase_bool)
-        slot_keys = [
-            self._slot_keys(tds, si, cand) for si, tds in enumerate(slot_tds)
-        ]
-        freqs = np.zeros(len(cand))
-        ranges = np.arange(len(cand) + 1, dtype=np.int64) << 32
-        bounds = [
-            (keys, np.searchsorted(keys, ranges[:-1]), np.searchsorted(keys, ranges[1:]))
-            for keys in slot_keys
-        ]
-        mask32 = np.int64(0xFFFFFFFF)
-        for ci in range(len(cand)):
-            slot_positions = []
-            for keys, lo, hi in bounds:
-                if hi[ci] <= lo[ci]:
-                    slot_positions = None
-                    break
-                slot_positions.append(keys[lo[ci]:hi[ci]] & mask32)
-            if slot_positions is not None:
-                freqs[ci] = scoring.phrase_freq(slot_positions, node.slop)
-        hit = freqs > 0
-        ids = cand[hit]
+            return ids, np.zeros(len(ids))
         idf_sum = sum(
             self._idf(node.field, t) for slot in node.slots for t in slot
         )
         sc = idf_sum * scoring.tf_norm(
-            freqs[hit], self._dls(node.field, ids), self.avgdl[node.field], self.k1, self.b
+            freqs, self._dls(node.field, ids),
+            self.avgdl[node.field], self.k1, self.b,
         )
         return ids, sc
 

@@ -161,6 +161,51 @@ def test_topk_rank_parity(built, spark):
         assert got.get(cid, []) == expected, f"{cid}"
 
 
+#: pure-SHOULD queries: a rarer clause plus one or two common ones, so
+#: the k-th score soon exceeds the remaining clauses' upper bounds and the
+#: pruning phase of the block-max path runs; with exact and sloppy phrases
+TOPK_DISJUNCTIONS = [
+    ("T_TERMS2", "pankhurst OR air"),
+    ("T_TERMS3", "emergency OR passenger OR master"),
+    ("T_PHRASE", '"emmeline pankhurst" OR royal'),
+    ("T_SLOPPY", '("sylvia pankhurst"~5) OR air OR chancery'),
+    ("T_MIXED", '"votes for women" OR ("women suffrage"~3) OR women OR '
+     'suffrage OR chartism OR "air force" OR ("air ministry"~2)'),
+]
+
+
+def test_block_max_topk_matches_full_eval(built, spark, monkeypatch):
+    """The block-max top-k path (``eval_topk``) runs only for groups of at
+    least ``_TOPK_MIN_POSTINGS`` postings; forced on for every group, it
+    must return the rows the full evaluation returns, for every category
+    and several k."""
+    from ds_discovery_opensearch_taxonomy_spark.operators import search
+
+    _, _, reader, _ = built
+    pairs = [
+        (c["category_id"], c["query_text"]) for c in load_categories()
+    ] + TOPK_DISJUNCTIONS
+
+    def rows(k):
+        return sorted(
+            (r["category_id"], r["doc_id"], r["score"])
+            for r in run_categories(
+                spark, reader, pairs, scored=True, top_k=k
+            ).collect()
+        )
+
+    for k in (1, 5, 20):
+        want = rows(k)
+        # eval_group is pickled by value with the global's current value
+        monkeypatch.setattr(search, "_TOPK_MIN_POSTINGS", 0)
+        got = rows(k)
+        monkeypatch.undo()
+        assert {c for c, _, _ in want} >= {c for c, _ in TOPK_DISJUNCTIONS}
+        assert [(c, d) for c, d, _ in got] == [(c, d) for c, d, _ in want]
+        for (_, _, g), (_, _, w) in zip(got, want):
+            assert math.isclose(g, w, rel_tol=1e-12, abs_tol=0.0)
+
+
 def test_all_136_categories_parity(built, spark):
     """Engine vs oracle on the COMPLETE 136-query reference set: equal
     per-category doc sets, identical BM25 scores."""

@@ -6,6 +6,7 @@ off-by-one in the searchsorted forms would corrupt match sets silently."""
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -94,9 +95,17 @@ def test_union_ids_many_matches_union1d(parts):
     assert (got == ref).all()
 
 
-def _mk_evaluator(term_positions, scored):
+def _mk_evaluator(term_positions, scored, *, dls=None, mode="eager",
+                  dead=()):
     """Evaluator with the decode cache seeded directly (no Spark rows):
-    term_positions = {term: {doc_ord: [positions...]}}."""
+    term_positions = {term: {doc_ord: [positions...]}}.
+
+    ``mode`` picks how positions reach the evaluator: ``"eager"`` builds
+    decoded (offsets, flat) arrays, ``"raw"`` hands over the encoded
+    posdata stream for the lazy decode, and ``"rows"`` encodes one postings
+    block per term and lets the evaluator decode it — the path that drops
+    the tombstoned ``dead`` ords.  ``dls`` gives per-ord field lengths."""
+    from ds_discovery_opensearch_taxonomy_spark.functions import codec
     from ds_discovery_opensearch_taxonomy_spark.functions.vtokenize import (
         term_id_of,
     )
@@ -106,10 +115,14 @@ def _mk_evaluator(term_positions, scored):
     )
 
     tid_map = {}
+    rows_by_term = {}
+    df_map = {("text", t): len(docs) for t, docs in term_positions.items()}
     ev = _Evaluator(
-        rows_by_term={}, df_map={}, n_docs=1000.0, k1=1.2, b=0.75,
-        avgdl={"text": 10.0}, scored=scored, needs_pos=True,
+        rows_by_term=rows_by_term, df_map=df_map, n_docs=1000.0, k1=1.2,
+        b=0.75, avgdl={"text": 10.0}, scored=scored, needs_pos=True,
         tid_map=tid_map,
+        dl_by_field=None if dls is None else {"text": np.asarray(dls)},
+        dead=np.array(sorted(dead), dtype=np.int64),
     )
     for term, docs in term_positions.items():
         tid = term_id_of("text", term)
@@ -117,6 +130,20 @@ def _mk_evaluator(term_positions, scored):
         ids = np.array(sorted(docs), dtype=np.int64)
         pos_lists = [sorted(set(docs[d])) for d in ids.tolist()]
         tfs = np.array([len(p) for p in pos_lists], dtype=np.int64)
+        if mode == "rows":
+            rows_by_term[tid] = pd.DataFrame({
+                "blk_seq": [0], "salt": [0], "n": [len(ids)],
+                "docids": [codec.encode_docids(ids, base=None)],
+                "tfs": [codec.varbyte_encode(tfs.astype(np.uint64))],
+                "posdata": [codec.encode_positions(pos_lists)],
+            })
+            continue
+        if mode == "raw":
+            ev.terms[tid] = _TermData(
+                ids, tfs, None, None,
+                pos_raw=codec.encode_positions(pos_lists), full_tfs=tfs,
+            )
+            continue
         po = np.concatenate([[0], np.cumsum(tfs)]).astype(np.int64)
         pf = (
             np.concatenate([np.array(p, dtype=np.int64) for p in pos_lists])
@@ -127,39 +154,139 @@ def _mk_evaluator(term_positions, scored):
     return ev
 
 
-@given(
-    st.dictionaries(
-        st.sampled_from(["alpha", "beta", "gamma"]),
+def _reference_phrase(tp, slots, slop, dls, dead=()):
+    """Per-doc reference: ``scoring.phrase_freq`` over each doc's
+    offset-adjusted slot positions, scored as the oracle scores a phrase.
+    Returns {ord: score} for the docs with a non-zero freq."""
+    from ds_discovery_opensearch_taxonomy_spark.functions import scoring
+
+    idf_sum = sum(
+        float(scoring.idf(float(len(tp.get(t, {}))), 1000.0))
+        for slot in slots
+        for t in slot
+    )
+    docs = {d for t in tp.values() for d in t} - set(dead)
+    out = {}
+    for d in sorted(docs):
+        slot_positions = []
+        for i, slot in enumerate(slots):
+            merged = {p - i for t in slot for p in tp.get(t, {}).get(d, ())}
+            if not merged:
+                break
+            slot_positions.append(np.array(sorted(merged), dtype=np.int64))
+        else:
+            freq = scoring.phrase_freq(slot_positions, slop)
+            if freq > 0:
+                out[d] = idf_sum * scoring.tf_norm(
+                    freq, float(dls[d]), 10.0, 1.2, 0.75
+                )
+    return out
+
+
+_VOCAB = ["alpha", "beta", "gamma", "delta"]
+
+
+@st.composite
+def _phrase_cases(draw):
+    """Random phrases over a small vocabulary: 2-4 slots, a slot may hold
+    two alternative terms, a term may fill several slots; 1-7 docs with
+    dense small positions so windows overlap and tie often."""
+    n_docs = draw(st.integers(min_value=1, max_value=7))
+    tp = draw(
         st.dictionaries(
-            st.integers(min_value=0, max_value=40),
-            st.lists(
-                st.integers(min_value=0, max_value=30),
-                min_size=1, max_size=6,
+            st.sampled_from(_VOCAB),
+            st.dictionaries(
+                st.integers(min_value=0, max_value=n_docs - 1),
+                st.lists(
+                    st.integers(min_value=0, max_value=14),
+                    min_size=1, max_size=6,
+                ),
+                min_size=1, max_size=n_docs,
             ),
-            min_size=1, max_size=12,
-        ),
-        min_size=2, max_size=3,
-    ),
-    st.integers(min_value=1, max_value=5),
-)
-@settings(max_examples=250, deadline=None)
-def test_sloppy_phrase_bool_existence_matches_advance_min(tp, slop):
-    """DIFFERENTIAL: the round-5 vectorized window-existence test (bool
-    mode, smallest-range argument over cached occurrence keys) must agree
-    doc-for-doc with the per-doc advance-min reference the scored path
-    still runs (freq > 0)."""
+            min_size=1, max_size=4,
+        )
+    )
+    term = st.sampled_from(sorted(tp))
+    slots = draw(
+        st.lists(
+            st.lists(term, min_size=1, max_size=2, unique=True).map(tuple),
+            min_size=2, max_size=4,
+        )
+    )
+    slop = draw(st.integers(min_value=0, max_value=5))
+    dls = draw(
+        st.lists(
+            st.integers(min_value=1, max_value=30),
+            min_size=n_docs, max_size=n_docs,
+        )
+    )
+    mode = draw(st.sampled_from(["eager", "raw", "rows"]))
+    dead = (
+        draw(st.sets(st.integers(min_value=0, max_value=n_docs - 1)))
+        if mode == "rows"
+        else set()
+    )
+    return tp, tuple(slots), slop, dls, mode, dead
+
+
+@given(_phrase_cases())
+@settings(max_examples=1000, deadline=None)
+def test_sloppy_phrase_bool_existence_matches_advance_min(case):
+    """DIFFERENTIAL: the one vectorized phrase kernel, bool and scored
+    mode, against the per-doc ``scoring.phrase_freq`` reference (the
+    advance-min loop for slop > 0, the adjacency count for slop 0): the
+    same docs in both modes, and every scored phrase score bit-identical
+    to ``idf_sum * tf_norm(freq)`` computed per doc."""
     from ds_discovery_opensearch_taxonomy_spark.plans.queryparser import (
         PhraseNode,
     )
 
-    terms = sorted(tp)[:2]
-    node = PhraseNode("text", tuple((t,) for t in terms), slop=slop)
-    ids_bool, _ = _mk_evaluator(tp, scored=False)._eval_phrase(node)
-    ids_scored, _ = _mk_evaluator(tp, scored=True)._eval_phrase(node)
-    assert ids_bool.tolist() == ids_scored.tolist()
+    tp, slots, slop, dls, mode, dead = case
+    node = PhraseNode("text", slots, slop=slop)
+    ref = _reference_phrase(tp, slots, slop, dls, dead)
 
-    # exact phrases must agree too (cached-key chain vs run-length freqs)
-    node0 = PhraseNode("text", tuple((t,) for t in terms), slop=0)
-    b0, _ = _mk_evaluator(tp, scored=False)._eval_phrase(node0)
-    s0, _ = _mk_evaluator(tp, scored=True)._eval_phrase(node0)
-    assert b0.tolist() == s0.tolist()
+    def run(scored):
+        return _mk_evaluator(
+            tp, scored, dls=dls, mode=mode, dead=dead
+        )._eval_phrase(node)
+
+    ids_bool, sc_bool = run(False)
+    ids_scored, sc_scored = run(True)
+    assert ids_bool.tolist() == ids_scored.tolist() == sorted(ref)
+    assert (sc_bool == 0).all()
+    assert sc_scored.tolist() == [ref[d] for d in sorted(ref)]
+
+
+def test_phrase_lazy_positions_decode_on_demand():
+    """Positions handed over raw decode only when the docid pregate
+    leaves candidates, and then score as the reference does."""
+    from ds_discovery_opensearch_taxonomy_spark.functions.vtokenize import (
+        term_id_of,
+    )
+    from ds_discovery_opensearch_taxonomy_spark.plans.queryparser import (
+        PhraseNode,
+    )
+
+    tp = {
+        "alpha": {0: [1, 7], 2: [3], 4: [0, 2]},
+        "beta": {0: [2, 9], 2: [7], 4: [4]},
+        "gamma": {1: [0]},
+    }
+    dls = [5, 6, 7, 8, 9]
+
+    def tds(ev):
+        return [ev.terms[term_id_of("text", t)] for t in tp]
+
+    # no doc holds both alpha and gamma: the pregate returns undecoded
+    ev = _mk_evaluator(tp, True, dls=dls, mode="raw")
+    ids, _ = ev._eval_phrase(PhraseNode("text", (("alpha",), ("gamma",))))
+    assert len(ids) == 0
+    assert all(td._po is None for td in tds(ev))
+
+    node = PhraseNode("text", (("alpha",), ("beta",)), slop=2)
+    ev = _mk_evaluator(tp, True, dls=dls, mode="raw")
+    ids, sc = ev._eval_phrase(node)
+    assert all(td._po is not None for td in tds(ev)[:2])
+    ref = _reference_phrase(tp, node.slots, 2, dls)
+    assert ids.tolist() == sorted(ref) == [0, 4]
+    assert sc.tolist() == [ref[d] for d in sorted(ref)]
