@@ -68,6 +68,15 @@ def _host_membw(procs: int) -> float:
     return round(best, 1)
 
 
+def _driver_heap() -> str:
+    """A third of the host's RAM, at most the package default (48g): the
+    driver JVM shares the host with one Python worker per core, and a
+    48g heap on a 16 GB host lets it grow until the workers run short."""
+    with open("/proc/meminfo") as f:
+        kb = int(next(line for line in f if line.startswith("MemTotal")).split()[1])
+    return f"{max(1, min(48, kb // 3 // 2**20))}g"
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -93,7 +102,9 @@ def main() -> int:
     # already saturate) and hi=n_cpus
     membw_lo = _host_membw(min(4, n_cpus))
     membw_hi = _host_membw(n_cpus)
-    spark = make_spark(cpus, shuffle_partitions=2 * n_cpus)
+    spark = make_spark(
+        cpus, shuffle_partitions=2 * n_cpus, driver_memory=_driver_heap()
+    )
     # n_eval_bands is CONSTANT across parallelism levels (it shapes the
     # index: blocks never cross band boundaries) so the scaling protocol
     # builds byte-identical indexes at N and 4N cores.  16 bands is the

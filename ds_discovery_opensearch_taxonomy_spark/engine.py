@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -337,6 +339,22 @@ class TaxonomyEngine:
             return res.orderBy(*order).limit(offset + limit).select(
                 "category_id", "doc_id", "score", *[c for c, _ in sort_by]
             )
+        if not sort_by:
+            hits = search_ops.run_categories_local(
+                self.reader,
+                [("__q", query_text)],
+                scored=True,
+                top_k=offset + limit,
+                config=config,
+                extra_filters=extra,
+            )
+            if hits is not None:
+                # served in the driver: finish there too (a Spark filter +
+                # sort over the rows would cost jobs again)
+                hits = hits[hits["score"] >= min_score].sort_values(
+                    ["score", "doc_id"], ascending=[False, True], kind="mergesort"
+                )
+                return search_ops.result_frame(self.spark, hits)
         res = search_ops.run_categories(
             self.spark,
             self.reader,
@@ -365,14 +383,13 @@ class TaxonomyEngine:
         return rows[offset : offset + limit]
 
     def count(self, query_text: str) -> int:
-        return (
-            search_ops.run_categories(
-                self.spark,
-                self.reader,
-                [("__q", self._effective_query(query_text))],
-                scored=False,
-            ).count()
-        )
+        pairs = [("__q", self._effective_query(query_text))]
+        hits = search_ops.run_categories_local(self.reader, pairs, scored=False)
+        if hits is not None:
+            return len(hits)
+        return search_ops.run_categories(
+            self.spark, self.reader, pairs, scored=False
+        ).count()
 
     @staticmethod
     def _effective_query(query_text: str) -> str:
@@ -406,14 +423,26 @@ class TaxonomyEngine:
         — the reference attaches terms aggregations to the search request
         (OpenSearchConnection.SetupFacets:322-336), so facets reflect the
         current result set, not the whole corpus.  The match set comes from
-        the unscored eval (no BM25 work) and semi-joins the docs scan."""
+        the unscored eval (no BM25 work) and semi-joins the docs scan.
+        A small index counts in the driver, over its snapshot's docs."""
+        query = (
+            self._effective_query(query_text) if query_text is not None else "*:*"
+        )
+        pairs = [("__f", query)]
+        snap = self.reader.snapshot()
+        if snap is not None and column in snap.docs.column_names:
+            if query == "*:*":
+                return self._facets_local(snap.docs, column, limit)
+            hits = search_ops.run_categories_local(self.reader, pairs, scored=False)
+            if hits is not None:
+                docs = snap.docs.filter(
+                    pc.is_in(snap.docs["doc_id"], pa.array(hits["doc_id"].to_numpy()))
+                )
+                return self._facets_local(docs, column, limit)
         docs = self.reader.docs()
-        if query_text is not None and self._effective_query(query_text) != "*:*":
+        if query != "*:*":
             matches = search_ops.run_categories(
-                self.spark,
-                self.reader,
-                [("__f", self._effective_query(query_text))],
-                scored=False,
+                self.spark, self.reader, pairs, scored=False
             )
             docs = docs.join(
                 matches.select("doc_id").distinct(), "doc_id", "semi"
@@ -424,6 +453,19 @@ class TaxonomyEngine:
             .orderBy(F.desc("count"), F.asc(column))
             .limit(limit)
         )
+
+    def _facets_local(self, docs: pa.Table, column: str, limit: int) -> DataFrame:
+        """The Spark facets' answer over driver-held docs: count per value,
+        ordered by count desc then value asc with nulls first (Spark's
+        ascending order), keeping the column's type."""
+        agg = docs.group_by(column).aggregate([([], "count_all")])
+        counts = pa.table({column: agg[column], "count": agg["count_all"]})
+        order = pc.sort_indices(
+            counts,
+            sort_keys=[("count", "descending"), (column, "ascending")],
+            null_placement="at_start",
+        )
+        return self.spark.createDataFrame(counts.take(order).slice(0, limit))
 
     # -- results sink -------------------------------------------------------------
 

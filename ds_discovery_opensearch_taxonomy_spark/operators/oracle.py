@@ -58,6 +58,23 @@ def levenshtein(a: str, b: str, cap: int | None = None) -> int:
     return prev[-1]
 
 
+def expand_fuzzy(
+    vocab: list[str], node: FuzzyNode, cap: int = 50
+) -> list[tuple[str, float]]:
+    """(term, boost) expansions of ``node`` over one field's vocabulary
+    within its edit distance, capped like the engine: (distance asc, term
+    asc), boost ``1 - d/min_len``.  A term whose length differs from the
+    query's by more than ``max_edits`` cannot be within it, so the length
+    test skips the distance for most of the vocabulary."""
+    q, k = node.term, node.max_edits
+    matches = sorted(
+        (d, t)
+        for t in vocab
+        if abs(len(t) - len(q)) <= k and (d := levenshtein(t, q, k)) <= k
+    )[:cap]
+    return [(t, 1.0 - d / min(len(q), len(t)) if d else 1.0) for d, t in matches]
+
+
 @dataclass
 class OracleDoc:
     doc_id: int
@@ -144,17 +161,7 @@ class OracleIndex:
         return out
 
     def expand_fuzzy(self, node: FuzzyNode, cap: int = 50) -> list[tuple[str, float]]:
-        """(term, boost) expansions within edit distance, capped like the
-        engine: (distance asc, term asc), boost ``1 - d/min_len``."""
-        matches = sorted(
-            (d, t)
-            for t in self.terms_by_field.get(node.field, [])
-            if (d := levenshtein(t, node.term, node.max_edits)) <= node.max_edits
-        )[:cap]
-        return [
-            (t, 1.0 - d / min(len(node.term), len(t)) if d else 1.0)
-            for d, t in matches
-        ]
+        return expand_fuzzy(self.terms_by_field.get(node.field, []), node, cap)
 
     # -- evaluation ------------------------------------------------------------
 

@@ -1,4 +1,4 @@
-"""Distributed query evaluation over the persistent inverted index.
+"""Query evaluation over the persistent inverted index.
 
 Spark re-plan of the reference's query path (per-category
 ``searcher.Search(query, batchSize)`` over a transient RAMDirectory,
@@ -7,16 +7,27 @@ OpenSearchConnection.cs:170-212):
 
 1. driver: parse + analyze the category queries once (mirrors the
    reference's static parsed-query cache, :337-363), expand wildcards /
-   term ranges against the dictionary table, pull df for exactly the terms
-   the queries need;
-2. fetch posting blocks for those (field, term) keys — broadcast semi-join
-   + term-bucket partition pruning, so the scan touches only the buckets
-   hosting query terms;
-3. tag blocks with the categories needing them (broadcast join), group by
-   ``(category, band)`` (bands = doc_id-prefix ranges, exact because blocks
-   never cross band boundaries), evaluate each group in one Arrow UDF with
-   NumPy sorted-set algebra (union/intersect/andnot), positional phrase
-   matching, and BM25 scoring;
+   term ranges / fuzzy terms and pull df for exactly the terms the queries
+   need.  A small index answers these lookups from a driver snapshot of
+   its dictionary, docs and docmap (``DriverSnapshot``, held when their
+   files take at most ``LOCAL_SNAPSHOT_MAX_BYTES``); a larger one runs
+   them as dictionary jobs, with wildcard / range constructs expanded
+   distributed;
+2. fetch posting blocks for those (field, term) keys, by one of two
+   fetchers feeding the same kernel:
+   * Spark: broadcast semi-join + term-bucket partition pruning, so the
+     scan touches only the buckets hosting query terms;
+   * driver: a call compiled against the snapshot whose blocks hold at
+     most ``LOCAL_MAX_POSTINGS`` postings reads them with pyarrow (bucket
+     pruning, term_id row-group filter) and builds its metadata blocks
+     from the snapshot's docs.  It runs no Spark job, and it evaluates
+     when ``run_categories`` is called, not at the action;
+3. tag blocks with the categories needing them, group by
+   ``(chunk, band)`` (bands = doc_id-prefix ranges, exact because blocks
+   never cross band boundaries) and evaluate each group in ONE kernel,
+   :func:`eval_group` — an Arrow UDF on the Spark side, a plain call in
+   the driver — with NumPy sorted-set algebra (union/intersect/andnot),
+   positional phrase matching, and BM25 scoring;
 4. scored top-k mode uses block-max dynamic pruning (MaxScore/WAND family):
    terms processed in descending max-score-upper-bound order; once the
    running k-th score exceeds the remaining upper-bound mass, later terms
@@ -29,11 +40,19 @@ postings" (constant-score doc-id sets, Lucene's constant-score rewrite).
 
 from __future__ import annotations
 
+import bisect
+import dataclasses
+import os
 import re
+import threading
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -69,10 +88,20 @@ class IndexReader:
         )
 
         reconcile_from_manifest(self.cat)
-        stats = spark.read.parquet(self.cat.path(IndexCatalog.DOC_STATS)).collect()
+        #: ONE manifest read binds every table this reader opens: the
+        #: generation dirs and committed delta batches recorded here are
+        #: the ones its stats, Spark views and driver snapshot all read
+        m = self.cat.manifest()
+        self._paths = {
+            t: self.cat.path(t, manifest=m) for t in _SNAPSHOT_PATH_TABLES
+        }
+        self._delta_seqs = self.cat.delta_seqs(m)
+        # the 4-row stats file is read in the driver: a Spark read of it
+        # cost a footer-inference job plus a collect job on every refresh()
+        stats = pq.read_table(self._paths[IndexCatalog.DOC_STATS]).to_pylist()
         self.n_docs = int(stats[0]["n_docs"]) if stats else 0
         self.avgdl = {r["field"]: float(r["avgdl"]) for r in stats}
-        meta = self.cat.manifest()["meta"]
+        meta = m["meta"]
         #: band layout is the INDEX's property (recorded at build)
         self.band_bits = int(meta["band_bits"])
         #: width of the dense ordinal space — with band_bits it fixes the
@@ -81,7 +110,7 @@ class IndexReader:
         self.ord_shift = max(self.ord_bits - self.band_bits, 0)
         #: appends since the build: main tables are read through union views
         #: (operators/index_append.py) until a compaction folds them in
-        self.has_deltas = bool(self.cat.deltas())
+        self.has_deltas = bool(self._delta_seqs)
         #: block-max bounds are encoded with the BUILD-TIME avgdl; appends
         #: drift the live avgdl, and tf_norm is monotone in avgdl with
         #: ratio <= live/encoded — multiplying bounds by this per-field
@@ -110,6 +139,8 @@ class IndexReader:
         #: keyed by the query's own needed terms).
         self.percat_cache: OrderedDict = OrderedDict()
         self.percat_cache_max = 1024
+        #: run_categories' routing per (categories, config, filters)
+        self._call_cache: OrderedDict = OrderedDict()
         #: per-(virtual key, band_bits) materialized+persisted block DFs —
         #: a metadata clause's doc set is immutable for this index snapshot,
         #: so each clause pays its docs-table scan once per reader, not once
@@ -124,6 +155,11 @@ class IndexReader:
         #: reader — see expand_constructs
         self.expansion_cache: dict[str, ExpansionInfo] = {}
         self._expansion_persists: list = []
+        #: driver-held copy of the small tables (see snapshot()); loaded on
+        #: first use, not here — every append's refresh() opens a reader
+        self._snapshot: DriverSnapshot | None = None
+        self._snapshot_checked = False
+        self._snapshot_lock = threading.Lock()
 
     # -- tables -------------------------------------------------------------
 
@@ -198,8 +234,25 @@ class IndexReader:
             self._docmap_df = df.persist()
         return self._docmap_df
 
+    def snapshot(self) -> "DriverSnapshot | None":
+        """The reader's dictionary, live docs and docmap held in the
+        driver, or None when their files take more than
+        ``LOCAL_SNAPSHOT_MAX_BYTES`` on disk.  Loaded once, on the first
+        call, under a lock: concurrent API requests share one reader."""
+        if not self._snapshot_checked:
+            with self._snapshot_lock:
+                if not self._snapshot_checked:
+                    self._snapshot = DriverSnapshot.load(
+                        self._paths, self._delta_seqs
+                    )
+                    self._snapshot_checked = True
+        return self._snapshot
+
     def unpersist(self) -> None:
         """Release this reader's cached tables (engine.refresh())."""
+        with self._snapshot_lock:
+            self._snapshot = None
+            self._snapshot_checked = False
         for attr in ("_dictionary_df", "_docmap_df"):
             df = getattr(self, attr, None)
             if df is not None:
@@ -356,13 +409,15 @@ class IndexReader:
         exact: set[tuple[str, str]],
         fuzzies: set[qp.FuzzyNode],
     ) -> tuple[dict, dict, dict, dict]:
-        """ONE dictionary job serving the BOUNDED compile-time lookups:
-        exact-term df/bucket/term_id fetch and fuzzy expansion.  (Wildcard /
-        term-range constructs expand DISTRIBUTED — see
-        :meth:`expand_constructs`; their matching terms never reach the
-        driver.)  Compile latency is job-count-bound (each Spark job costs
-        ~1-3 s of fixed scheduling/codegen before any data moves), so both
-        lookups share a single scan.
+        """The BOUNDED compile-time lookups of a reader without a driver
+        snapshot: exact-term df/bucket/term_id fetch and fuzzy expansion,
+        in one collected dictionary query (the persisted dictionary costs
+        its own jobs on first use).  A reader with a snapshot answers the
+        same lookups in the driver (:meth:`DriverSnapshot.lookup`) and runs
+        no job.  (Wildcard / term-range constructs expand DISTRIBUTED here
+        — see :meth:`expand_constructs`; their matching terms never reach
+        the driver.)  Compile latency is job-count-bound, so both lookups
+        share a single scan.
 
         Fuzzy distances run JVM-side (``F.levenshtein`` with the early-exit
         threshold); expansions are capped DISTRIBUTED at
@@ -474,6 +529,378 @@ class IndexReader:
                 for d, t in matches
             )
         return df_map, bucket_map, tid_map, fuzzy_map
+
+
+# --------------------------------------------------------------------------
+# Driver snapshot: the small tables of a small index, held in the driver
+# --------------------------------------------------------------------------
+
+#: a reader loads its driver snapshot only when the dictionary, docs and
+#: docmap files (main plus committed deltas) take at most this many bytes
+#: on disk.  On a 4-vCPU host, three runs each (load; then a first
+#: wildcard compile, which sorts the field's vocabulary; then a fuzzy
+#: compile): 1.9 MiB (800 docs, 114k terms) 0.05-0.06 s, 0.07-0.08 s,
+#: 0.34-0.37 s; 14.0 MiB (60k docs of 50-450 words, 269k terms)
+#: 0.17-0.19, 0.19-0.27, 0.61-0.67 s; 28.1 MiB (135k such docs, 408k
+#: terms) 0.31-0.36, 0.33-0.41, 0.75-0.76 s; 31.8 MiB (155k docs, 444k
+#: terms) 0.33-0.34, 0.34-0.42, 0.72-0.77 s.  At 31.8 MiB the tables hold
+#: 48 MiB of Arrow memory, and the process peak grew 270 MiB once the docs
+#: were in pandas and one vocabulary sorted.  There a fresh engine's first
+#: probe search (snapshot load and wildcard compile included) took
+#: 1.0-1.3 s against 2.6 s through Spark on a warm JVM, and warm probes
+#: 0.07-0.25 s against 0.65-1.8 s.  A 250k-doc index of such docs takes
+#: about 51 MiB, above the cap.
+LOCAL_SNAPSHOT_MAX_BYTES = 32 << 20
+
+#: a call whose blocks hold at most this many postings (the snapshot df of
+#: every term it needs plus the docs each metadata clause matches) runs in
+#: the driver; larger calls run the Spark plan.  The 136-category pass,
+#: warm, on a 4-vCPU host (Spark local[4] vs driver, two runs each):
+#: 800 docs / 52k postings, scored top-100 2.0-2.3 s vs 0.9-1.0 s, bool
+#: 2.2-2.3 vs 0.8-1.1 s; 4k docs / 266k, 2.8-2.9 vs 1.4 s; 16k docs /
+#: 1.07M, 3.5-3.8 vs 2.1-2.4 s, bool 4.1-4.5 vs 3.0-3.2 s; 20k docs of
+#: 50-450 words / 1.34M, 4.6-4.8 vs 4.4 s, bool 5.2-5.8 vs 5.2-5.6 s (the
+#: break-even); 60k such docs / 4.0M, 7.5-7.7 vs 7.8 s, bool 8.1-8.5 vs
+#: 11.5-11.8 s.  The driver runs one core, so the cap stays below it.
+LOCAL_MAX_POSTINGS = 1_000_000
+
+#: tables a reader binds at open, from its one manifest read
+_SNAPSHOT_PATH_TABLES = (
+    IndexCatalog.DOC_STATS,
+    IndexCatalog.DICTIONARY,
+    IndexCatalog.POSTINGS,
+    IndexCatalog.DOCS,
+    IndexCatalog.DOCMAP,
+    IndexCatalog.DELTA_DICTIONARY,
+    IndexCatalog.DELTA_BLOCKS,
+    IndexCatalog.DELTA_DOCS,
+    IndexCatalog.DELTA_DOCMAP,
+)
+
+#: main table -> its append-delta table
+_DELTA_OF = {
+    IndexCatalog.DICTIONARY: IndexCatalog.DELTA_DICTIONARY,
+    IndexCatalog.POSTINGS: IndexCatalog.DELTA_BLOCKS,
+    IndexCatalog.DOCS: IndexCatalog.DELTA_DOCS,
+    IndexCatalog.DOCMAP: IndexCatalog.DELTA_DOCMAP,
+}
+
+_DICT_COLS = ("term_id", "df", "term", "field", "bucket")
+
+#: arrow integer types -> pandas nullable ones (an int column with nulls
+#: would otherwise come back float)
+_NULLABLE_INTS = {
+    pa.int8(): pd.Int8Dtype(),
+    pa.int16(): pd.Int16Dtype(),
+    pa.int32(): pd.Int32Dtype(),
+    pa.int64(): pd.Int64Dtype(),
+}
+
+
+def _table_dirs(paths: dict, seqs: list[int], table: str) -> list[str]:
+    """A main table's dir plus its committed delta batch dirs."""
+    delta = paths[_DELTA_OF[table]]
+    return [paths[table]] + [f"{delta}/batch={s}" for s in seqs]
+
+
+def _dir_bytes(path: str) -> int:
+    return sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet")
+    )
+
+
+class DriverSnapshot:
+    """A small index's dictionary, live docs and docmap in driver memory,
+    as the reader's Spark views see them:
+
+    * dictionary: main plus committed delta rows, ``df`` summed per
+      ``term_id`` (``dictionary_view``); term, field and bucket come from
+      the first row of each id (main before deltas);
+    * docs: main plus delta docs minus the tombstoned ords of the
+      ``ford == -2`` docmap payloads (``docs_view``);
+    * docmap: main plus delta rows (``docmap_view``).
+
+    A call compiled against it resolves its terms and expansions here, and
+    a call under ``LOCAL_MAX_POSTINGS`` fetches its posting blocks with
+    pyarrow and runs the eval kernel in process (see run_categories)."""
+
+    def __init__(self, paths: dict, seqs: list[int], dictionary: pa.Table,
+                 docs: pa.Table, docmap: pa.Table):
+        self._paths = paths
+        self._seqs = seqs
+        tid = dictionary.column("term_id").to_numpy()
+        order = np.argsort(tid, kind="stable")
+        tid = tid[order]
+        starts = (
+            np.flatnonzero(np.r_[True, tid[1:] != tid[:-1]]) if len(tid) else _EMPTY
+        )
+        first = pa.array(order[starts])
+        #: sorted unique term_ids and their summed df / bucket / field / term
+        self.term_ids = tid[starts]
+        self.df = (
+            np.add.reduceat(dictionary.column("df").to_numpy()[order], starts)
+            if len(tid)
+            else _EMPTY
+        )
+        self.bucket = dictionary.column("bucket").take(first).to_numpy()
+        self.fields = dictionary.column("field").take(first).combine_chunks()
+        self.terms = dictionary.column("term").take(first).combine_chunks()
+        self.docs = docs
+        self.docmap = docmap
+        self._vocab: dict[str, tuple[list[str], np.ndarray]] = {}
+        self._docs_pd: pd.DataFrame | None = None
+        self._virtual: dict[str, np.ndarray] = {}
+        self._virtual_blocks: dict[tuple, pd.DataFrame] = {}
+        self._docmap_rows: dict[bool, pd.DataFrame] = {}
+        self._datasets: list | None = None
+
+    @classmethod
+    def load(cls, paths: dict, seqs: list[int]) -> "DriverSnapshot | None":
+        """Read the three tables with pyarrow, or None when their files
+        take more than ``LOCAL_SNAPSHOT_MAX_BYTES``."""
+        from ds_discovery_opensearch_taxonomy_spark.operators.index_build import (
+            TOMBSTONE_FORD,
+        )
+
+        tables = (IndexCatalog.DICTIONARY, IndexCatalog.DOCS, IndexCatalog.DOCMAP)
+        size = sum(
+            _dir_bytes(d) for t in tables for d in _table_dirs(paths, seqs, t)
+        )
+        if size > LOCAL_SNAPSHOT_MAX_BYTES:
+            return None
+
+        def read(table: str, columns=None) -> pa.Table:
+            parts = [
+                pads.dataset(d, format="parquet", partitioning="hive").to_table(
+                    columns=columns
+                )
+                for d in _table_dirs(paths, seqs, table)
+            ]
+            return pa.concat_tables(parts, promote_options="permissive")
+
+        dictionary = read(IndexCatalog.DICTIONARY, list(_DICT_COLS)).cast(
+            pa.schema([
+                ("term_id", pa.int64()), ("df", pa.int64()),
+                ("term", pa.string()), ("field", pa.string()),
+                ("bucket", pa.int64()),
+            ])
+        )
+        docmap = read(IndexCatalog.DOCMAP)
+        docs = read(IndexCatalog.DOCS)
+        tomb = docmap.filter(pc.equal(docmap["ford"], TOMBSTONE_FORD))
+        if tomb.num_rows:
+            dead = np.concatenate([
+                np.frombuffer(p, dtype="<i8")
+                for p in tomb.column("payload").to_pylist()
+            ])
+            docs = docs.filter(
+                pc.invert(pc.is_in(docs["ord"], pa.array(dead)))
+            )
+        return cls(paths, seqs, dictionary, docs, docmap)
+
+    # -- compile --------------------------------------------------------------
+
+    def vocab(self, field: str) -> tuple[list[str], np.ndarray]:
+        """One field's terms in sorted (code point) order and their
+        dictionary row numbers — the order Spark compares strings in."""
+        v = self._vocab.get(field)
+        if v is None:
+            rows = np.flatnonzero(
+                pc.equal(self.fields, field).to_numpy(zero_copy_only=False)
+            )
+            terms = self.terms.take(pa.array(rows))
+            order = pc.sort_indices(terms).to_numpy()
+            v = (terms.take(pa.array(order)).to_pylist(), rows[order])
+            self._vocab[field] = v
+        return v
+
+    def _vocab_rows(self, field: str, terms: list[str]) -> np.ndarray:
+        vocab, rows = self.vocab(field)
+        return rows[[bisect.bisect_left(vocab, t) for t in terms]].astype(np.int64)
+
+    def lookup(
+        self,
+        exact: set[tuple[str, str]],
+        fuzzies: set[qp.FuzzyNode],
+        constructs: set[qp.Node],
+        config: EngineConfig,
+    ) -> tuple[dict, dict, dict, dict, dict]:
+        """The compile's dictionary lookups in the driver, with the Spark
+        lookups' answers: (df_map, bucket_map, tid_map) for every exact,
+        fuzzy and expanded term found, fuzzy expansions as
+        :meth:`IndexReader.lookup_dictionary` returns them, and each
+        wildcard / term-range construct's terms by ``repr``."""
+        from ds_discovery_opensearch_taxonomy_spark.functions.vtokenize import (
+            term_id_of,
+        )
+        from ds_discovery_opensearch_taxonomy_spark.operators.oracle import (
+            expand_fuzzy,
+        )
+        from ds_discovery_opensearch_taxonomy_spark.streaming.incremental import (
+            _expand_range,
+            _expand_wildcard,
+        )
+
+        found: list[np.ndarray] = []
+        if exact and len(self.term_ids):
+            tids = np.fromiter(
+                (term_id_of(f, t) for f, t in exact), np.int64, len(exact)
+            )
+            i = np.minimum(
+                np.searchsorted(self.term_ids, tids), len(self.term_ids) - 1
+            )
+            found.append(i[self.term_ids[i] == tids])
+        fuzzy_map: dict[qp.FuzzyNode, tuple[tuple[str, float], ...]] = {}
+        for node in fuzzies:
+            tb = tuple(
+                expand_fuzzy(self.vocab(node.field)[0], node, _MAX_FUZZY_EXPANSIONS)
+            )
+            fuzzy_map[node] = tb
+            found.append(self._vocab_rows(node.field, [t for t, _ in tb]))
+        cap = getattr(config, "max_term_expansions", None)
+        expanded: dict[str, tuple[str, ...]] = {}
+        for node in sorted(constructs, key=repr):
+            vocab = self.vocab(node.field)[0]
+            if isinstance(node, qp.WildcardNode):
+                terms = _expand_wildcard(vocab, node.pattern)
+            else:
+                terms = _expand_range(vocab, node)
+            rows = self._vocab_rows(node.field, terms)
+            if cap and len(rows) > int(cap):
+                # deterministic keep, as the Spark expansion: term_id asc
+                keep = np.sort(
+                    np.argsort(self.term_ids[rows], kind="stable")[: int(cap)]
+                )
+                rows = rows[keep]
+                terms = [terms[k] for k in keep]
+            if cap and len(rows) >= int(cap):
+                import logging
+
+                logging.getLogger(__name__).warning(
+                    "construct %s expansion truncated at %d terms "
+                    "(max_term_expansions)", repr(node), len(rows),
+                )
+            expanded[repr(node)] = tuple(terms)
+            found.append(rows)
+        df_map: dict[tuple[str, str], int] = {}
+        bucket_map: dict[tuple[str, str], int] = {}
+        tid_map: dict[tuple[str, str], int] = {}
+        if found:
+            idx = np.unique(np.concatenate(found).astype(np.int64))
+            sel = pa.array(idx)
+            for i, f, t in zip(
+                idx.tolist(),
+                self.fields.take(sel).to_pylist(),
+                self.terms.take(sel).to_pylist(),
+            ):
+                df_map[(f, t)] = int(self.df[i])
+                bucket_map[(f, t)] = int(self.bucket[i])
+                tid_map[(f, t)] = int(self.term_ids[i])
+        return df_map, bucket_map, tid_map, fuzzy_map, expanded
+
+    # -- fetch ----------------------------------------------------------------
+
+    def docs_pandas(self) -> pd.DataFrame:
+        """The live docs as pandas, integer columns kept integer (nullable)
+        so a filter value casts to the column's own type, as in Spark."""
+        if self._docs_pd is None:
+            self._docs_pd = self.docs.to_pandas(types_mapper=_NULLABLE_INTS.get)
+        return self._docs_pd
+
+    def virtual_ords(self, key: str, node: qp.Node) -> np.ndarray:
+        """Sorted ords of the live docs a metadata clause matches."""
+        ords = self._virtual.get(key)
+        if ords is None:
+            from ds_discovery_opensearch_taxonomy_spark.streaming.incremental import (
+                _virtual_ids,
+            )
+
+            pdf = self.docs_pandas()
+            ids = _virtual_ids(node, pdf, len(pdf))
+            ords = np.sort(pdf["ord"].to_numpy(np.int64)[ids])
+            self._virtual[key] = ords
+        return ords
+
+    def virtual_blocks(
+        self, key: str, node: qp.Node, vtid: int, ord_bits: int,
+        band_bits: int, block_size: int,
+    ) -> pd.DataFrame:
+        """A metadata clause's posting blocks, grouped and encoded as
+        :func:`_encode_virtual_key` does in Spark."""
+        ckey = (key, band_bits)
+        out = self._virtual_blocks.get(ckey)
+        if out is None:
+            ords = self.virtual_ords(key, node)
+            ord_shift = max(ord_bits - band_bits, 0)
+            vsalt_bits = min(_VIRTUAL_SALT_BITS, ord_shift)
+            band = ords >> ord_shift
+            salt = (
+                (ords >> (ord_shift - vsalt_bits)) % (1 << vsalt_bits)
+                if vsalt_bits
+                else np.zeros(len(ords), dtype=np.int64)
+            )
+            frames = [
+                encode_virtual_group(
+                    (vtid, bd, sl),
+                    pd.DataFrame({"doc_id": g["doc_id"].to_numpy()}),
+                    block_size,
+                )
+                for (bd, sl), g in pd.DataFrame(
+                    {"doc_id": ords, "band": band, "salt": salt}
+                ).groupby(["band", "salt"], sort=True)
+            ]
+            out = pd.concat(frames, ignore_index=True) if frames else None
+            self._virtual_blocks[ckey] = out
+        return out
+
+    def docmap_rows(self, scored: bool) -> pd.DataFrame:
+        """The docmap as sentinel block rows under ``DOCMAP_TID`` — the
+        rows the Spark plan's docmap projection unions in."""
+        out = self._docmap_rows.get(scored)
+        if out is None:
+            dm = self.docmap
+            if not scored:
+                dm = dm.filter(pc.less(dm["ford"], 0))
+            n = dm.num_rows
+            out = pd.DataFrame({
+                "term_id": np.full(n, DOCMAP_TID, dtype=np.int64),
+                "salt": dm.column("ford").to_numpy().astype(np.int32),
+                "band": dm.column("band").to_numpy().astype(np.int32),
+                "blk_seq": dm.column("blk_seq").to_numpy().astype(np.int32),
+                "n": dm.column("n").to_numpy().astype(np.int32),
+                "min_docid": np.zeros(n, dtype=np.int64),
+                "max_docid": np.zeros(n, dtype=np.int64),
+                "max_norm": np.zeros(n),
+                "docids": dm.column("payload").to_pandas(),
+                "tfs": pd.Series([None] * n, dtype=object),
+                "posdata": pd.Series([None] * n, dtype=object),
+            })
+            self._docmap_rows[scored] = out
+        return out
+
+    def postings(
+        self, tids: list[int], buckets: list[int], columns: list[str]
+    ) -> pd.DataFrame:
+        """The posting blocks of ``tids``: the main table read with bucket
+        partition pruning and the term_id filter pushed to row-group
+        statistics, plus the committed delta batches."""
+        if self._datasets is None:
+            self._datasets = [
+                pads.dataset(d, format="parquet", partitioning="hive")
+                for d in _table_dirs(
+                    self._paths, self._seqs, IndexCatalog.POSTINGS
+                )
+            ]
+        main, *deltas = self._datasets
+        sel = pads.field("term_id").isin(tids)
+        in_buckets = pads.field("bucket").isin(buckets)
+        parts = [main.to_table(columns=columns, filter=in_buckets & sel)] + [
+            d.to_table(columns=columns, filter=sel) for d in deltas
+        ]
+        return pa.concat_tables(parts, promote_options="permissive").to_pandas()
 
 
 def re_escape_java(ch: str) -> str:
@@ -604,10 +1031,13 @@ def compile_queries(
 ) -> tuple[dict[str, qp.Node], dict[str, np.ndarray], dict[tuple[str, str], int]]:
     """Parse all query strings, expand dictionary-dependent constructs,
     rewrite metadata clauses to virtual-postings nodes, and pull GLOBAL df
-    for every needed term (one dictionary semi-join) — scoring must use
-    global df everywhere, including phrase terms absent from the index
-    (df=0, Lucene still sums their idf) and bands where a term has no
-    postings.
+    for every needed term — scoring must use global df everywhere,
+    including phrase terms absent from the index (df=0, Lucene still sums
+    their idf) and bands where a term has no postings.  When the reader
+    holds a driver snapshot (small index) every lookup runs there and
+    wildcard / term-range constructs carry their expanded terms; otherwise
+    the lookups are Spark jobs over the dictionary and constructs expand
+    distributed (terms=None).
 
     Returns (compiled nodes by category_id, virtual clause nodes by key,
     df by (field, term), hosting bucket by (field, term), term_id by
@@ -656,7 +1086,15 @@ def compile_queries(
     constructs: set[qp.Node] = {
         qp.WildcardNode(f, p) for f, p in patterns
     } | set(ranges)
-    if constructs and (exact or fuzzies):
+    snap = reader.snapshot()
+    expanded: dict[str, tuple[str, ...]] = {}
+    if snap is not None:
+        # small index: every lookup and expansion resolves against the
+        # driver snapshot, and constructs carry their terms explicitly
+        df_map, bucket_map, tid_map, fuzzy_map, expanded = snap.lookup(
+            exact, fuzzies, constructs, config
+        )
+    elif constructs and (exact or fuzzies):
         # the exact/fuzzy lookup job and the construct-expansion job are
         # independent scans of the same persisted dictionary — submit them
         # CONCURRENTLY (Spark schedules both) instead of paying two
@@ -685,7 +1123,7 @@ def compile_queries(
     def rewrite(node: qp.Node) -> qp.Node:
         if isinstance(node, (qp.WildcardNode, qp.TermRangeNode)):
             return ExpandedTermsNode(
-                node.field, None, node, key=repr(node)
+                node.field, expanded.get(repr(node)), node, key=repr(node)
             )
         if isinstance(node, qp.FuzzyNode):
             tb = fuzzy_map.get(node, ())
@@ -857,6 +1295,55 @@ def build_virtual_blocks(
     return vdf
 
 
+def encode_virtual_group(
+    key: tuple, pdf: pd.DataFrame, block_size: int
+) -> pd.DataFrame:
+    """One (virtual term_id, band, salt) group's doc ords -> posting block
+    rows (BLOCKS_SCHEMA): sorted ids in ``block_size`` blocks, constant-1
+    tfs and one position 0 per posting, so the normal decode path reads
+    them.  The Spark fetcher runs it per group in ``applyInPandas``, the
+    driver fetcher over the snapshot's docs."""
+    vtid, band, salt = int(key[0]), int(key[1]), int(key[2])
+    ids = np.sort(pdf["doc_id"].to_numpy(np.int64))
+    n = len(ids)
+    starts = np.arange(0, n, block_size, dtype=np.int64)
+    ends = np.minimum(starts + block_size, n)
+    rows = {k: [] for k in (
+        "blk_seq", "n", "min_docid", "max_docid", "docids", "tfs",
+        "posdata",
+    )}
+    ones = None
+    for seq, (lo, hi) in enumerate(zip(starts, ends)):
+        blk = ids[lo:hi]
+        rows["blk_seq"].append(seq)
+        rows["n"].append(hi - lo)
+        rows["min_docid"].append(int(blk[0]))
+        rows["max_docid"].append(int(blk[-1]))
+        # base=None: first gap absolute — _decode_rows' segmented
+        # cumsum treats every block's first gap as an absolute value
+        rows["docids"].append(codec.encode_docids(blk, base=None))
+        if ones is None or len(ones) != hi - lo:
+            ones = codec.varbyte_encode(np.ones(hi - lo, dtype=np.uint64))
+        rows["tfs"].append(ones)
+        rows["posdata"].append(b"\x00" * (hi - lo))  # one pos=0 per posting
+    k = len(rows["blk_seq"])
+    return pd.DataFrame(
+        {
+            "term_id": np.full(k, vtid, dtype=np.int64),
+            "salt": np.full(k, salt, dtype=np.int32),
+            "band": np.full(k, band, dtype=np.int32),
+            "blk_seq": np.asarray(rows["blk_seq"], dtype=np.int32),
+            "n": np.asarray(rows["n"], dtype=np.int32),
+            "min_docid": np.asarray(rows["min_docid"], dtype=np.int64),
+            "max_docid": np.asarray(rows["max_docid"], dtype=np.int64),
+            "max_norm": np.ones(k),
+            "docids": rows["docids"],
+            "tfs": rows["tfs"],
+            "posdata": rows["posdata"],
+        }
+    )
+
+
 def _encode_virtual_key(
     reader: IndexReader,
     node: qp.Node,
@@ -892,45 +1379,7 @@ def _encode_virtual_key(
     block_size = config.block_size
 
     def encode(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        vtid, band, salt = int(key[0]), int(key[1]), int(key[2])
-        ids = np.sort(pdf["doc_id"].to_numpy(np.int64))
-        n = len(ids)
-        starts = np.arange(0, n, block_size, dtype=np.int64)
-        ends = np.minimum(starts + block_size, n)
-        rows = {k: [] for k in (
-            "blk_seq", "n", "min_docid", "max_docid", "docids", "tfs",
-            "posdata",
-        )}
-        ones = None
-        for seq, (lo, hi) in enumerate(zip(starts, ends)):
-            blk = ids[lo:hi]
-            rows["blk_seq"].append(seq)
-            rows["n"].append(hi - lo)
-            rows["min_docid"].append(int(blk[0]))
-            rows["max_docid"].append(int(blk[-1]))
-            # base=None: first gap absolute — _decode_rows' segmented
-            # cumsum treats every block's first gap as an absolute value
-            rows["docids"].append(codec.encode_docids(blk, base=None))
-            if ones is None or len(ones) != hi - lo:
-                ones = codec.varbyte_encode(np.ones(hi - lo, dtype=np.uint64))
-            rows["tfs"].append(ones)
-            rows["posdata"].append(b"\x00" * (hi - lo))  # one pos=0 per posting
-        k = len(rows["blk_seq"])
-        return pd.DataFrame(
-            {
-                "term_id": np.full(k, vtid, dtype=np.int64),
-                "salt": np.full(k, salt, dtype=np.int32),
-                "band": np.full(k, band, dtype=np.int32),
-                "blk_seq": np.asarray(rows["blk_seq"], dtype=np.int32),
-                "n": np.asarray(rows["n"], dtype=np.int32),
-                "min_docid": np.asarray(rows["min_docid"], dtype=np.int64),
-                "max_docid": np.asarray(rows["max_docid"], dtype=np.int64),
-                "max_norm": np.ones(k),
-                "docids": rows["docids"],
-                "tfs": rows["tfs"],
-                "posdata": rows["posdata"],
-            }
-        )
+        return encode_virtual_group(key, pdf, block_size)
 
     return vdf.groupBy("term_id", "band", "salt").applyInPandas(
         encode, BLOCKS_SCHEMA
@@ -1032,7 +1481,52 @@ _EMPTY = np.empty(0, dtype=np.int64)
 _U64_SHIFT = np.uint64(1 << 63)
 
 
-def _decode_rows(rows: pd.DataFrame, need_positions: bool) -> _TermData:
+def _take_rows(rows: dict[str, np.ndarray], mask: np.ndarray) -> dict[str, np.ndarray]:
+    """The rows of one term's blocks under a boolean mask."""
+    return {c: a[mask] for c, a in rows.items()}
+
+
+def _split_by_term(pdf: pd.DataFrame) -> dict[int, dict[str, np.ndarray]]:
+    """A group's block rows per term_id, as column arrays: the kernel
+    reads a term's columns on every decode, and a pandas per-term frame
+    built a Series on each of those reads."""
+    tids = pdf["term_id"].to_numpy()
+    order = np.argsort(tids, kind="stable")
+    tids = tids[order]
+    cols = {c: pdf[c].to_numpy()[order] for c in pdf.columns}
+    cuts = (np.flatnonzero(tids[1:] != tids[:-1]) + 1).tolist()
+    return {
+        int(tids[lo]): {c: a[lo:hi] for c, a in cols.items()}
+        for lo, hi in zip([0] + cuts, cuts + [len(tids)])
+    }
+
+
+def band_sidecars(dm_rows, field_names: list[str]) -> tuple:
+    """A band's docmap sentinel rows (the band is a contiguous ord range
+    starting at band << ord_shift) -> (ord -> doc_id array from the
+    salt == -1 rows, sorted tombstoned ords from the salt == -2 rows or
+    None, {field: per-doc lengths} from the salt == k rows)."""
+    ordmap = dead = None
+    dl_by_field: dict[str, np.ndarray] = {}
+    if dm_rows is None:
+        return ordmap, dead, dl_by_field
+    fords = dm_rows["salt"]
+    for ford_v in np.unique(fords).tolist():
+        at = np.flatnonzero(fords == ford_v)
+        at = at[np.argsort(dm_rows["blk_seq"][at], kind="stable")]
+        buf = b"".join(dm_rows["docids"][at])
+        if ford_v == -2:
+            # tombstoned ords: one payload per append batch touching this
+            # band; unique() sorts + dedups the union
+            dead = np.unique(np.frombuffer(buf, dtype="<i8"))
+        elif ford_v < 0:
+            ordmap = np.frombuffer(buf, dtype="<i8")
+        else:
+            dl_by_field[field_names[ford_v]] = np.frombuffer(buf, dtype="<i4")
+    return ordmap, dead, dl_by_field
+
+
+def _decode_rows(rows: dict[str, np.ndarray], need_positions: bool) -> _TermData:
     """Decode all blocks of one (field, term): salts are contiguous
     signed-order ranges, so sorting rows by (salt, blk_seq) and concatenating
     yields globally sorted doc ids.
@@ -1045,12 +1539,10 @@ def _decode_rows(rows: pd.DataFrame, need_positions: bool) -> _TermData:
     # numpy lexsort + object-array gather: pandas sort_values cost ~1 ms
     # per term (~0.3 s/group over ~300 terms — profiled), all of it
     # categorical/indexing overhead the two int columns don't need
-    order = np.lexsort(
-        (rows["blk_seq"].to_numpy(), rows["salt"].to_numpy())
-    )
-    ns = rows["n"].to_numpy().astype(np.int64)[order]
-    doc_b = rows["docids"].to_numpy()
-    tf_b = rows["tfs"].to_numpy()
+    order = np.lexsort((rows["blk_seq"], rows["salt"]))
+    ns = rows["n"].astype(np.int64)[order]
+    doc_b = rows["docids"]
+    tf_b = rows["tfs"]
     total = int(ns.sum())
     gaps = codec.varbyte_decode(b"".join(doc_b[i] for i in order), count=total)
     with np.errstate(over="ignore"):
@@ -1064,14 +1556,14 @@ def _decode_rows(rows: pd.DataFrame, need_positions: bool) -> _TermData:
         b"".join(tf_b[i] for i in order), count=total
     ).astype(np.int64)
     pos_raw = None
-    if need_positions and rows["posdata"].iloc[0] is not None:
+    pos_b = rows["posdata"]
+    if need_positions and pos_b[0] is not None:
         # per-posting position counts == tfs (no separate poslens stream);
         # per-posting delta chains restart absolute, so one decode suffices.
         # posdata arrives null for terms no phrase in this chunk uses —
         # their positions were dropped before the eval shuffle.  The decode
         # itself is DEFERRED (see _TermData): only phrases that reach a
         # non-empty candidate set force it.
-        pos_b = rows["posdata"].to_numpy()
         pos_raw = b"".join(pos_b[i] for i in order)
     return _TermData(ids, tfs, None, None, pos_raw=pos_raw, full_tfs=tfs)
 
@@ -1272,7 +1764,8 @@ class _Evaluator:
                  dl_by_field: dict | None = None, band_start: int = 0,
                  dead: np.ndarray | None = None,
                  norm_safety: dict | None = None):
-        # rows_by_term is keyed by term_id (numeric postings key); tid_map
+        # rows_by_term is keyed by term_id (numeric postings key), each
+        # term's block rows as column arrays (_split_by_term); tid_map
         # translates the AST's (field, term) to it.  Virtual doc sets arrive
         # as ordinary rows under their ``(__virtual__, key)`` term_id.
         self.rows_by_term = rows_by_term
@@ -1310,7 +1803,7 @@ class _Evaluator:
             self.terms[tid] = td
         return td
 
-    def _decode(self, rows: pd.DataFrame) -> _TermData:
+    def _decode(self, rows: dict[str, np.ndarray]) -> _TermData:
         """Decode + tombstone-filter one term's blocks (all decode paths
         come through here so dead ords can never reach scoring or top-k)."""
         if self.stats is not None:
@@ -1492,17 +1985,15 @@ class _Evaluator:
             if rows is None:
                 return _EMPTY, _EMPTY
             lo, hi = int(acc_ids[0]), int(acc_ids[-1])
-            keep = (rows["max_docid"].to_numpy() >= lo) & (
-                rows["min_docid"].to_numpy() <= hi
-            )
+            keep = (rows["max_docid"] >= lo) & (rows["min_docid"] <= hi)
             # block-max test: can this block lift ANY candidate over theta?
             # per-block ub = idf * max_norm * drift safety (see _term_ub)
             idf_t = self._idf(node.field, node.term)
             safety = self.norm_safety.get(node.field, 1.0)
-            keep &= (max_acc + idf_t * safety * rows["max_norm"].to_numpy() + (rest - self._term_ub(node.field, node.term))) >= theta
+            keep &= (max_acc + idf_t * safety * rows["max_norm"] + (rest - self._term_ub(node.field, node.term))) >= theta
             if not keep.any():
                 return _EMPTY, _EMPTY
-            td = self._decode(rows[keep])
+            td = self._decode(_take_rows(rows, keep))
             sc = self._idf(node.field, node.term) * scoring.tf_norm(
                 td.tfs.astype(np.float64), self._dls(node.field, td.ids),
                 self.avgdl[node.field], self.k1, self.b,
@@ -1734,8 +2225,177 @@ class _Evaluator:
 
 
 # --------------------------------------------------------------------------
-# The distributed run
+# The run: one eval kernel, two fetchers
 # --------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class EvalPlan:
+    """What the eval kernel reads besides its blocks: the compile, the
+    index stats and the run's mode.  The Spark fetcher builds it in each
+    task from broadcasts, the driver fetcher once per call."""
+
+    field_names: list[str]
+    compiled: dict[str, qp.Node]
+    df_map: dict
+    tid_map: dict
+    chunk_cids: dict[int, list[str]]
+    n_docs: float
+    avgdl: dict[str, float]
+    norm_safety: dict[str, float]
+    ord_shift: int
+    k1: float
+    b: float
+    scored: bool
+    top_k: int | None
+    #: block-max top-k threshold (``_TOPK_MIN_POSTINGS`` at plan time)
+    topk_min_postings: int
+    #: cid -> (needed term_ids, distributed construct keys), filled on
+    #: use; the driver fetcher shares one across a compile's calls
+    needed: dict = dataclasses.field(default_factory=dict)
+
+    def needed_tids(self, cid: str) -> tuple[list, list[str]]:
+        out = self.needed.get(cid)
+        if out is None:
+            node = self.compiled[cid]
+            out = (
+                [self.tid_map.get(k) for k in needed_terms(node)],
+                sorted(distributed_constructs(node)),
+            )
+            self.needed[cid] = out
+        return out
+
+
+def _plan_scalars(
+    reader: IndexReader, config: EngineConfig, scored: bool, top_k: int | None
+) -> dict:
+    return dict(
+        n_docs=float(reader.n_docs),
+        avgdl=dict(reader.avgdl),
+        norm_safety=dict(reader.norm_safety),
+        ord_shift=reader.ord_shift,
+        k1=config.k1,
+        b=config.b,
+        scored=scored,
+        top_k=top_k,
+        topk_min_postings=_TOPK_MIN_POSTINGS,
+    )
+
+
+def eval_group(key: tuple, pdf: pd.DataFrame, plan: EvalPlan) -> pd.DataFrame:
+    """THE eval kernel: one (chunk, band) group's blocks -> its
+    (category_id, doc_id, score) rows.  Both fetchers call it: the Spark
+    one inside ``applyInPandas``, the driver one in process."""
+    import os as _os
+    import time as _time
+
+    _trace = _os.environ.get("SPARK_GRAFT_EVAL_TRACE") == "1"
+    _t0 = _time.perf_counter()
+    chunk, band = int(key[0]), int(key[1])
+    _dumpdir = _os.environ.get("SPARK_GRAFT_EVAL_DUMP")
+    if _dumpdir:  # diagnostic: replay one group in tools/kernel_bench.py
+        try:
+            pdf.to_parquet(f"{_dumpdir}/group_{chunk}_{band}.parquet")
+        except Exception:
+            pass
+    cids = plan.chunk_cids[chunk]
+    nodes = {cid: plan.compiled[cid] for cid in cids}
+    needs_pos = any(_node_has_phrase(n) for n in nodes.values())
+    rows_by_term = _split_by_term(pdf)
+    ordmap, dead, dl_by_field = band_sidecars(
+        rows_by_term.pop(DOCMAP_TID, None), plan.field_names
+    )
+    band_start = np.int64(band) << np.int64(plan.ord_shift)
+    ev = _Evaluator(
+        rows_by_term, plan.df_map, plan.n_docs, plan.k1, plan.b, plan.avgdl,
+        plan.scored, needs_pos, plan.tid_map, dl_by_field, int(band_start),
+        dead=dead, norm_safety=plan.norm_safety,
+    )
+    if "vkeys" in pdf.columns:
+        # distributed expansion tags: which of this group's term_ids
+        # belong to which construct (one pass over rows with tags)
+        cmap: dict[str, set[int]] = {}
+        vk_col = pdf["vkeys"]
+        mask = vk_col.map(lambda v: v is not None and len(v) > 0)
+        for tid_v, vk in zip(
+            pdf.loc[mask, "term_id"].to_numpy(), vk_col[mask]
+        ):
+            for k in vk:
+                cmap.setdefault(k, set()).add(int(tid_v))
+        ev.construct_tids = {k: sorted(v) for k, v in cmap.items()}
+    # block-max top-k needs each category's postings count in this group
+    count = plan.top_k is not None and plan.scored
+    if count:
+        n_by_term = {t: int(rows["n"].sum()) for t, rows in rows_by_term.items()}
+    if _trace:
+        ev.stats = {
+            "decode_s": 0.0, "n_decoded": 0, "decoded_postings": 0,
+            "n_pos_carried": 0, "pos_decode_s": 0.0,
+            "n_pos_decoded": 0, "pos_ints": 0,
+        }
+    cid_walls: dict[str, float] = {}
+    frames = []
+    for cid in cids:
+        _tc = _time.perf_counter() if _trace else 0.0
+        node = nodes[cid]
+        if count:
+            tids, ckeys = plan.needed_tids(cid)
+            group_postings = sum(n_by_term.get(t, 0) for t in tids) + sum(
+                n_by_term.get(t, 0)
+                for ckey in ckeys
+                for t in ev.construct_tids.get(ckey, ())
+            )
+        if count and group_postings >= plan.topk_min_postings:
+            # per-band block-max top-k: the in-band cut keeps boundary
+            # score-TIES (ord order is not doc_id order) so the global
+            # (score desc, doc_id asc) window stays exact
+            ids, sc = ev.eval_topk(node, plan.top_k)
+        else:
+            ids, sc = ev.eval(node)
+        if ordmap is not None and len(ids):
+            ids = ordmap[ids - band_start]  # ord -> external doc_id
+        if plan.top_k is not None and len(ids) > plan.top_k:
+            ids, sc = _partial_topk(ids, sc, plan.top_k)
+        frames.append(pd.DataFrame({"category_id": cid, "doc_id": ids, "score": sc}))
+        if _trace:
+            cid_walls[cid] = _time.perf_counter() - _tc
+    if _trace:
+        top = sorted(cid_walls.items(), key=lambda kv: -kv[1])[:8]
+        print(
+            f"EVAL_TRACE chunk={chunk} band={band} rows={len(pdf)} "
+            f"n_cids={len(cids)} wall={_time.perf_counter() - _t0:.3f} "
+            f"stats={ev.stats} "
+            f"top_cids={[(c, round(w, 3)) for c, w in top]}",
+            flush=True,
+        )
+    return pd.concat(frames, ignore_index=True)
+
+
+RESULT_ARROW_SCHEMA = pa.schema(
+    [("category_id", pa.string()), ("doc_id", pa.int64()), ("score", pa.float64())]
+)
+
+
+def result_frame(spark: SparkSession, hits: pd.DataFrame) -> DataFrame:
+    """Driver-held rows as a DataFrame over a LocalRelation: collecting it
+    runs no Spark job (an Arrow table, not pandas: an empty pandas frame
+    takes the row-conversion path, which does)."""
+    return spark.createDataFrame(
+        pa.Table.from_pandas(
+            hits[["category_id", "doc_id", "score"]],
+            schema=RESULT_ARROW_SCHEMA,
+            preserve_index=False,
+        ),
+        RESULT_SCHEMA,
+    )
+
+
+def _empty_hits() -> pd.DataFrame:
+    return pd.DataFrame({
+        "category_id": pd.Series([], dtype=object),
+        "doc_id": _EMPTY,
+        "score": np.empty(0),
+    })
 
 
 def run_categories(
@@ -1757,13 +2417,98 @@ def run_categories(
     query — compiled as virtual posting sets that intersect candidates
     INSIDE the evaluator, before scoring accumulation and before the
     per-band top-k cut (the reference's Must/Filter split,
-    OpenSearchConnection.cs:393-402), never as a post-join."""
+    OpenSearchConnection.cs:393-402), never as a post-join.
+
+    Two fetchers feed one eval kernel (:func:`eval_group`).  A call the
+    driver serves (see :func:`run_categories_local`) is EVALUATED HERE,
+    when this function is called, and comes back as a DataFrame over the
+    driver-held rows; every other call returns the lazy Spark plan, which
+    evaluates at the action."""
     config = config or reader.config
+    call = _prepare_call(reader, categories, config, extra_filters)
+    if call is None:
+        return result_frame(spark, _empty_hits())
+    hits = _run_local(reader, call, scored, top_k, config)
+    if hits is not None:
+        return result_frame(spark, hits)
+    return _run_spark(spark, reader, call, scored, top_k, config)
+
+
+def run_categories_local(
+    reader: IndexReader,
+    categories: list[tuple[str, str]],
+    scored: bool = True,
+    top_k: int | None = None,
+    config: EngineConfig | None = None,
+    extra_filters: tuple[qp.Node, ...] | None = None,
+) -> pd.DataFrame | None:
+    """:func:`run_categories`' rows as a pandas frame when the driver
+    serves the call, else None (the caller then runs the Spark plan).
+
+    The driver serves a call when the reader holds a driver snapshot
+    (``LOCAL_SNAPSHOT_MAX_BYTES``) and the call's blocks hold at most
+    ``LOCAL_MAX_POSTINGS`` postings: it reads them with pyarrow and runs
+    the same kernel per (chunk, band) in process, with no Spark job."""
+    config = config or reader.config
+    call = _prepare_call(reader, categories, config, extra_filters)
+    if call is None:
+        return _empty_hits()
+    return _run_local(reader, call, scored, top_k, config)
+
+
+@dataclass
+class _Call:
+    """One run's compile plus the routing both fetchers share."""
+
+    compiled: dict[str, qp.Node]
+    virtual: dict[str, qp.Node]
+    df_map: dict
+    bucket_map: dict
+    tid_map: dict
+    #: (field, term) -> categories needing it
+    term_cats: dict
+    #: distributed construct key -> categories needing it
+    construct_cats: dict
+    chunk_of: dict[str, int]
+    chunk_cids: dict[int, list[str]]
+    #: (term_id, chunk) -> ship positions; docmap rows included per chunk
+    term_chunks: dict[tuple[int, int], bool]
+    #: cache key for per-compile artifacts (routing rows, broadcasts)
+    bkey: tuple
+    #: the driver fetcher's per-category needed term ids (EvalPlan.needed)
+    needed: dict = dataclasses.field(default_factory=dict)
+
+
+def _prepare_call(
+    reader: IndexReader,
+    categories: list[tuple[str, str]],
+    config: EngineConfig,
+    extra_filters: tuple[qp.Node, ...] | None,
+) -> _Call | None:
+    """Compile, fold in the filters and route terms to category chunks;
+    None when no category needs any posting.  Cached per reader like the
+    compile: the routing of a compile never changes."""
+    bkey = (tuple(categories), config, extra_filters)
+    if bkey in reader._call_cache:
+        reader._call_cache.move_to_end(bkey)
+        return reader._call_cache[bkey]
+    call = _route_call(reader, categories, config, extra_filters, bkey)
+    reader._call_cache[bkey] = call
+    while len(reader._call_cache) > reader.compile_cache_max:
+        reader._call_cache.popitem(last=False)
+    return call
+
+
+def _route_call(
+    reader: IndexReader,
+    categories: list[tuple[str, str]],
+    config: EngineConfig,
+    extra_filters: tuple[qp.Node, ...] | None,
+    bkey: tuple,
+) -> _Call | None:
     compiled, virtual, df_map, bucket_map, tid_map = compile_queries(
         reader, categories, config
     )
-    #: cache key for per-compile artifacts (routing rows, broadcasts)
-    bkey = (tuple(categories), config, extra_filters)
     if extra_filters:
         from ds_discovery_opensearch_taxonomy_spark.functions.vtokenize import (
             term_id_of,
@@ -1791,7 +2536,7 @@ def run_categories(
         for ckey in distributed_constructs(node):
             construct_cats.setdefault(ckey, []).append(cid)
     if not term_cats and not construct_cats:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+        return None
 
     # categories are evaluated in CHUNKS of one task per (chunk, band); all
     # categories of a chunk share one decoded-term cache per task.  The
@@ -1825,29 +2570,134 @@ def run_categories(
             ch = chunk_of[c]
             term_chunks[(tid, ch)] = term_chunks.get((tid, ch), False) or (c in pcs)
     if not term_chunks and not construct_cats:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    # one DOCMAP row set per chunk: the broadcast join below replicates the
-    # per-band ord->doc_id arrays into every (chunk, band) eval task.  A
-    # side effect worth keeping: every (chunk, band) group EXISTS even when
-    # no real posting lands in it, so virtual-only categories evaluate in
-    # every band deterministically regardless of chunk packing.
+        return None
+    # one DOCMAP row set per chunk: the per-band ord->doc_id arrays reach
+    # every (chunk, band) eval group.  A side effect worth keeping: every
+    # (chunk, band) group EXISTS even when no real posting lands in it, so
+    # virtual-only categories evaluate in every band deterministically
+    # regardless of chunk packing.
     for ch in chunk_cids:
         term_chunks[(DOCMAP_TID, ch)] = False
+    return _Call(
+        compiled, virtual, df_map, bucket_map, tid_map, term_cats,
+        construct_cats, chunk_of, chunk_cids, term_chunks, bkey,
+    )
+
+
+def _routing_rows(call: _Call) -> pd.DataFrame:
+    """(term_id, chunk, needs_pos): the rows that tag blocks with the
+    chunks needing them (a block of a term shared by chunks repeats)."""
+    rows = sorted((tid, ch, np_) for (tid, ch), np_ in call.term_chunks.items())
+    return pd.DataFrame(rows, columns=["term_id", "chunk", "needs_pos"]).astype(
+        {"term_id": "int64", "chunk": "int32", "needs_pos": "bool"}
+    )
+
+
+def _eval_cols(scored: bool) -> list[str]:
+    # bool matching needs neither length norms (dls) nor block-max metadata
+    cols = ["term_id", "chunk", "salt", "band", "blk_seq", "n",
+            "docids", "tfs", "posdata"]
+    if scored:
+        cols += ["min_docid", "max_docid", "max_norm"]
+    return cols
+
+
+def _run_local(
+    reader: IndexReader,
+    call: _Call,
+    scored: bool,
+    top_k: int | None,
+    config: EngineConfig,
+) -> pd.DataFrame | None:
+    """The driver fetcher: None unless the call was compiled against the
+    reader's snapshot and its blocks hold at most LOCAL_MAX_POSTINGS
+    postings; otherwise the call's rows, evaluated in process."""
+    snap = reader.snapshot()
+    if snap is None or call.construct_cats:
+        return None
+    estimate = sum(call.df_map.get(k, 0) for k in call.term_cats) + sum(
+        len(snap.virtual_ords(key, node)) for key, node in call.virtual.items()
+    )
+    if estimate > LOCAL_MAX_POSTINGS:
+        return None
+    from ds_discovery_opensearch_taxonomy_spark.operators.index_build import (
+        BLOCKS_SCHEMA,
+    )
+
+    parts = []
+    tids = sorted({t for t, _ in call.term_chunks} - {DOCMAP_TID})
+    buckets = sorted(
+        {call.bucket_map[k] for k in call.term_cats if k in call.bucket_map}
+    )
+    if buckets:
+        parts.append(
+            snap.postings(tids, buckets, [f.name for f in BLOCKS_SCHEMA.fields])
+        )
+    for key in sorted(call.virtual):
+        vb = snap.virtual_blocks(
+            key, call.virtual[key], call.tid_map[(VIRTUAL_FIELD, key)],
+            reader.ord_bits, reader.band_bits, config.block_size,
+        )
+        if vb is not None:
+            parts.append(vb)
+    parts.append(snap.docmap_rows(scored))
+    # the Spark plan's routing join and position drop, in pandas
+    tagged = pd.concat(parts, ignore_index=True).merge(
+        _routing_rows(call), on="term_id"
+    )
+    tagged["posdata"] = tagged["posdata"].where(tagged["needs_pos"], None)
+    cols = _eval_cols(scored)
+    plan = EvalPlan(
+        field_names=[f.name for f in config.fields],
+        compiled=call.compiled,
+        df_map=call.df_map,
+        tid_map=call.tid_map,
+        chunk_cids=call.chunk_cids,
+        needed=call.needed,
+        **_plan_scalars(reader, config, scored, top_k),
+    )
+    frames = [
+        eval_group(key, g[cols].reset_index(drop=True), plan)
+        for key, g in tagged.groupby(["chunk", "band"], sort=True)
+    ]
+    hits = pd.concat(frames, ignore_index=True) if frames else _empty_hits()
+    if top_k is not None:
+        # the Spark plan's window: per category (score desc, doc_id asc)
+        hits = (
+            hits.sort_values(
+                ["category_id", "score", "doc_id"],
+                ascending=[True, False, True],
+                kind="mergesort",
+            )
+            .groupby("category_id", sort=False)
+            .head(top_k)
+            .reset_index(drop=True)
+        )
+    return hits
+
+
+def _run_spark(
+    spark: SparkSession,
+    reader: IndexReader,
+    call: _Call,
+    scored: bool,
+    top_k: int | None,
+    config: EngineConfig,
+) -> DataFrame:
+    """The Spark fetcher: block scan + routing join + one applyInPandas
+    group per (chunk, band)."""
+    compiled, virtual, tid_map = call.compiled, call.virtual, call.tid_map
+    bkey = call.bkey
     # pandas -> Arrow path: a plain-list createDataFrame goes through the
     # Python-RDD converter (~150-250 ms of driver time PER QUERY); the
     # Arrow path is ~10x cheaper and dominates warm single-query latency
-    tdf_rows = sorted((tid, ch, np_) for (tid, ch), np_ in term_chunks.items())
-    terms_df = spark.createDataFrame(
-        pd.DataFrame(tdf_rows, columns=["term_id", "chunk", "needs_pos"]).astype(
-            {"term_id": "int64", "chunk": "int32", "needs_pos": "bool"}
-        )
-    )
+    terms_df = spark.createDataFrame(_routing_rows(call))
     # DISTRIBUTED expansions: each used construct's term_id DataFrame joins
     # into the term routing, tagged with its construct key — the driver
     # knows only counts + hosting buckets (bounded), never the terms
     construct_chunks = {
-        ckey: sorted({chunk_of[c] for c in cids})
-        for ckey, cids in construct_cats.items()
+        ckey: sorted({call.chunk_of[c] for c in cids})
+        for ckey, cids in call.construct_cats.items()
     }
     exp_infos = {
         ckey: reader.expansion_cache[ckey] for ckey in construct_chunks
@@ -1933,7 +2783,7 @@ def run_categories(
     # filter by the evaluated categories' own terms.  Construct buckets
     # come from the expansion's bounded stats.
     buckets = sorted(
-        {bucket_map[k] for k in term_cats if k in bucket_map}
+        {call.bucket_map[k] for k in call.term_cats if k in call.bucket_map}
         | set(exp_buckets)
     )
     from ds_discovery_opensearch_taxonomy_spark.operators.index_build import (
@@ -1955,7 +2805,7 @@ def run_categories(
         # selection.  Construct expansions can't enumerate term_ids driver-
         # side, so their buckets stay un-skipped via the OR leg (both legs
         # push down to parquet stats).
-        tids = sorted({t for t, _ in term_chunks})
+        tids = sorted({t for t, _ in call.term_chunks})
         if len(tids) <= _MAX_PUSHED_TERM_IDS:
             sel = F.col("term_id").isin(tids)
             if exp_buckets:
@@ -2007,22 +2857,13 @@ def run_categories(
             F.lit(None).cast("binary")
         ),
     ).drop("needs_pos")
-    # shuffle only what the evaluator reads: bool matching needs neither
-    # length norms (dls) nor block-max metadata.  Catalyst prunes the
-    # dropped columns all the way down to the parquet scan.
-    eval_cols = ["term_id", "chunk", "salt", "band", "blk_seq", "n",
-                 "docids", "tfs", "posdata"]
-    if scored:
-        eval_cols += ["min_docid", "max_docid", "max_norm"]
+    # shuffle only what the evaluator reads.  Catalyst prunes the dropped
+    # columns all the way down to the parquet scan.
+    eval_cols = _eval_cols(scored)
     if exp_parts:
         eval_cols.append("vkeys")
     tagged = tagged.select(*eval_cols)
 
-    n_docs = float(reader.n_docs)
-    avgdl = dict(reader.avgdl)
-    norm_safety = dict(reader.norm_safety)
-    ord_shift = reader.ord_shift
-    k1, b = config.k1, config.b
     field_names = [f.name for f in config.fields]
     # per-compile broadcasts cached on the reader: re-broadcasting the
     # shared df/tid maps on every single-query call costs pickling + an
@@ -2036,9 +2877,9 @@ def run_categories(
         cached_b = (
             spark.sparkContext.broadcast(field_names),
             spark.sparkContext.broadcast(compiled),
-            spark.sparkContext.broadcast(df_map),
+            spark.sparkContext.broadcast(call.df_map),
             spark.sparkContext.broadcast(tid_map),
-            spark.sparkContext.broadcast(chunk_cids),
+            spark.sparkContext.broadcast(call.chunk_cids),
         )
         reader._bcast_cache[bkey] = cached_b
         while len(reader._bcast_cache) > 256:
@@ -2049,110 +2890,22 @@ def run_categories(
         reader._bcast_cache.move_to_end(bkey)
     field_names_b, compiled_b, df_map_b, tid_map_b, chunk_cids_b = cached_b
 
-    def eval_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        import os as _os
-        import time as _time
+    # the block-max threshold is read HERE, on the driver, and travels in
+    # the closure: eval_group is module-level and pickles by reference,
+    # so a worker would otherwise read its own import of the module
+    scalars = _plan_scalars(reader, config, scored, top_k)
 
-        _trace = _os.environ.get("SPARK_GRAFT_EVAL_TRACE") == "1"
-        _t0 = _time.perf_counter()
-        chunk, band = int(key[0]), int(key[1])
-        _dumpdir = _os.environ.get("SPARK_GRAFT_EVAL_DUMP")
-        if _dumpdir:  # diagnostic: replay one group in tools/kernel_bench.py
-            try:
-                pdf.to_parquet(f"{_dumpdir}/group_{chunk}_{band}.parquet")
-            except Exception:
-                pass
-        cids = chunk_cids_b.value[chunk]
-        nodes = {cid: compiled_b.value[cid] for cid in cids}
-        needs_pos = any(_node_has_phrase(n) for n in nodes.values())
-        rows_by_term: dict[int, pd.DataFrame] = {
-            int(t): rows for t, rows in pdf.groupby("term_id", sort=False)
-        }
-        # the band's sidecars (sentinel rows; the band is a contiguous ord
-        # range starting at band << ord_shift): salt == -1 rows are the
-        # packed int64 ord -> doc_id array, salt == k rows field k's packed
-        # int32 per-doc lengths (BM25 norms)
-        dm_rows = rows_by_term.pop(DOCMAP_TID, None)
-        band_start = np.int64(band) << np.int64(ord_shift)
-        ordmap = None
-        dead = None
-        dl_by_field: dict[str, np.ndarray] = {}
-        if dm_rows is not None:
-            for ford_v, gr in dm_rows.groupby("salt", sort=False):
-                buf = b"".join(gr.sort_values("blk_seq")["docids"])
-                if int(ford_v) == -2:
-                    # tombstoned ords: one payload per append batch touching
-                    # this band; unique() sorts + dedups the union
-                    dead = np.unique(np.frombuffer(buf, dtype="<i8"))
-                elif int(ford_v) < 0:
-                    ordmap = np.frombuffer(buf, dtype="<i8")
-                else:
-                    dl_by_field[field_names_b.value[int(ford_v)]] = (
-                        np.frombuffer(buf, dtype="<i4")
-                    )
-        ev = _Evaluator(
-            rows_by_term, df_map_b.value, n_docs, k1, b, avgdl, scored,
-            needs_pos, tid_map_b.value, dl_by_field, int(band_start),
-            dead=dead, norm_safety=norm_safety,
-        )
-        if "vkeys" in pdf.columns:
-            # distributed expansion tags: which of this group's term_ids
-            # belong to which construct (one pass over rows with tags)
-            cmap: dict[str, set[int]] = {}
-            vk_col = pdf["vkeys"]
-            mask = vk_col.map(lambda v: v is not None and len(v) > 0)
-            for tid_v, vk in zip(
-                pdf.loc[mask, "term_id"].to_numpy(), vk_col[mask]
-            ):
-                for k in vk:
-                    cmap.setdefault(k, set()).add(int(tid_v))
-            ev.construct_tids = {k: sorted(v) for k, v in cmap.items()}
-        tid_map = tid_map_b.value
-        n_by_term = {t: int(rows["n"].sum()) for t, rows in rows_by_term.items()}
-        if _trace:
-            ev.stats = {
-                "decode_s": 0.0, "n_decoded": 0, "decoded_postings": 0,
-                "n_pos_carried": 0, "pos_decode_s": 0.0,
-                "n_pos_decoded": 0, "pos_ints": 0,
-            }
-        cid_walls: dict[str, float] = {}
-        frames = []
-        for cid in cids:
-            _tc = _time.perf_counter() if _trace else 0.0
-            node = nodes[cid]
-            group_postings = sum(
-                n_by_term.get(tid_map.get(key), 0) for key in needed_terms(node)
-            ) + sum(
-                n_by_term.get(t, 0)
-                for ckey in distributed_constructs(node)
-                for t in ev.construct_tids.get(ckey, ())
-            )
-            if top_k is not None and scored and group_postings >= _TOPK_MIN_POSTINGS:
-                # per-band block-max top-k: the in-band cut keeps boundary
-                # score-TIES (ord order is not doc_id order) so the global
-                # (score desc, doc_id asc) window stays exact
-                ids, sc = ev.eval_topk(node, top_k)
-            else:
-                ids, sc = ev.eval(node)
-            if ordmap is not None and len(ids):
-                ids = ordmap[ids - band_start]  # ord -> external doc_id
-            if top_k is not None and len(ids) > top_k:
-                ids, sc = _partial_topk(ids, sc, top_k)
-            frames.append(pd.DataFrame({"category_id": cid, "doc_id": ids, "score": sc}))
-            if _trace:
-                cid_walls[cid] = _time.perf_counter() - _tc
-        if _trace:
-            top = sorted(cid_walls.items(), key=lambda kv: -kv[1])[:8]
-            print(
-                f"EVAL_TRACE chunk={chunk} band={band} rows={len(pdf)} "
-                f"n_cids={len(cids)} wall={_time.perf_counter() - _t0:.3f} "
-                f"stats={ev.stats} "
-                f"top_cids={[(c, round(w, 3)) for c, w in top]}",
-                flush=True,
-            )
-        return pd.concat(frames, ignore_index=True)
+    def eval_spark(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        return eval_group(key, pdf, EvalPlan(
+            field_names=field_names_b.value,
+            compiled=compiled_b.value,
+            df_map=df_map_b.value,
+            tid_map=tid_map_b.value,
+            chunk_cids=chunk_cids_b.value,
+            **scalars,
+        ))
 
-    results = tagged.groupBy("chunk", "band").applyInPandas(eval_group, RESULT_SCHEMA)
+    results = tagged.groupBy("chunk", "band").applyInPandas(eval_spark, RESULT_SCHEMA)
 
     if top_k is not None:
         if len(compiled) == 1:

@@ -174,8 +174,13 @@ class IndexCatalog:
         """{batch_key: {"seq": int, "n_docs": ..., ...}} — committed appends."""
         return self.manifest().get("deltas", {})
 
-    def delta_seqs(self) -> list[int]:
-        return sorted(int(d["seq"]) for d in self.deltas().values())
+    def delta_seqs(self, manifest: dict | None = None) -> list[int]:
+        """Committed batch seqs, from ``manifest`` when the caller already
+        read one (a reader binds every table path to ONE manifest read)."""
+        deltas = (
+            self.deltas() if manifest is None else manifest.get("deltas", {})
+        )
+        return sorted(int(d["seq"]) for d in deltas.values())
 
     def next_delta_seq(self) -> int:
         """Monotone within one compaction interval; compaction renumbers
@@ -266,15 +271,18 @@ class IndexCatalog:
 
     # -- tables ----------------------------------------------------------------
 
-    def _resolve(self, table: str) -> str:
+    def _resolve(self, table: str, manifest: dict | None = None) -> str:
         """Physical dir of a table: compactions commit by bumping the
         table's generation in the manifest (``<table>__g<N>``), so readers
         flip atomically with the manifest write."""
-        gen = self.manifest().get("meta", {}).get("gen", {}).get(table)
+        m = self.manifest() if manifest is None else manifest
+        gen = m.get("meta", {}).get("gen", {}).get(table)
         return table if gen is None else f"{table}__g{int(gen)}"
 
-    def path(self, table: str, bucket: int | None = None) -> str:
-        p = self.root / self._resolve(table)
+    def path(
+        self, table: str, bucket: int | None = None, manifest: dict | None = None
+    ) -> str:
+        p = self.root / self._resolve(table, manifest)
         if bucket is not None:
             p = p / f"bucket={bucket}"
         return str(p)

@@ -186,23 +186,70 @@ def _collect_virtual(node: qp.Node, out: dict) -> None:
             _collect_virtual(c, out)
 
 
+#: a string Spark's ANSI cast reads as a BIGINT (after trimming)
+_SPARK_INT_RE = re.compile(r"[+-]?\d+")
+
+
+def _spark_cast(v: str, integral: bool):
+    """A string as Spark's ANSI cast reads it for a BIGINT (``integral``)
+    or DOUBLE comparison: trimmed and strict; a malformed one raises, as
+    Spark's CAST_INVALID_INPUT does at the action."""
+    s = v.strip()
+    if integral and _SPARK_INT_RE.fullmatch(s):
+        return int(s)
+    if not integral:
+        try:
+            return float(s)
+        except ValueError:
+            pass
+    raise ValueError(
+        f"[CAST_INVALID_INPUT] the value {v!r} cannot be cast to "
+        f"{'BIGINT' if integral else 'DOUBLE'}"
+    )
+
+
+def _in_mask(col: pd.Series, values) -> np.ndarray:
+    """``col.isin(values)`` with the coercion of Spark's ANSI ``isin``:
+    string values against a numeric column cast to a number, a string
+    column against numeric values casts to a number; null never
+    matches."""
+    vals = [v for v in values if v is not None]
+
+    def number(v) -> bool:
+        return isinstance(v, (int, float, np.number)) and not isinstance(v, bool)
+
+    integral = not any(isinstance(v, (float, np.floating)) for v in vals)
+    if pd.api.types.is_numeric_dtype(col) and not pd.api.types.is_bool_dtype(col):
+        integral = integral and pd.api.types.is_integer_dtype(col)
+        vals = [_spark_cast(v, integral) if isinstance(v, str) else v for v in vals]
+    elif any(number(v) for v in vals):
+        vals = [_spark_cast(v, integral) if isinstance(v, str) else v for v in vals]
+        col = col.map(lambda s: _spark_cast(s, integral) if isinstance(s, str) else s)
+    return col.isin(vals).to_numpy(dtype=bool, na_value=False)
+
+
+def _numeric(col: pd.Series) -> np.ndarray:
+    """A column as float64, nulls and non-numbers as NaN."""
+    return pd.to_numeric(col, errors="coerce").to_numpy(
+        dtype=np.float64, na_value=np.nan
+    )
+
+
 def _virtual_ids(node: qp.Node, pdf: pd.DataFrame, n: int) -> np.ndarray:
     """Batch-local doc indices matching a metadata clause — the vectorized
     twin of search.virtual_condition (Int32Field semantics,
-    InMemoryCategoriserRepository.cs:236-244)."""
+    InMemoryCategoriserRepository.cs:236-244; ``isin`` and ``concat_ws``
+    as Spark evaluates them)."""
     if isinstance(node, qp.MatchAllNode):
         return np.arange(n, dtype=np.int64)
     if isinstance(node, qp.IntTermNode):
         if node.field not in pdf:
             return np.empty(0, dtype=np.int64)
-        col = pd.to_numeric(pdf[node.field], errors="coerce").to_numpy()
-        return np.flatnonzero(col == node.value).astype(np.int64)
+        return np.flatnonzero(_numeric(pdf[node.field]) == node.value).astype(np.int64)
     if isinstance(node, qp.IntRangeNode):
         if node.field not in pdf:
             return np.empty(0, dtype=np.int64)
-        col = pd.to_numeric(pdf[node.field], errors="coerce").to_numpy(
-            dtype=np.float64
-        )
+        col = _numeric(pdf[node.field])
         mask = ~np.isnan(col)
         if node.lo is not None:
             mask &= (col >= node.lo) if node.inc_lo else (col > node.lo)
@@ -212,21 +259,21 @@ def _virtual_ids(node: qp.Node, pdf: pd.DataFrame, n: int) -> np.ndarray:
     if isinstance(node, qp.MetaInNode):
         if node.column not in pdf:
             return np.empty(0, dtype=np.int64)
-        return np.flatnonzero(
-            pdf[node.column].isin(list(node.values)).to_numpy()
-        ).astype(np.int64)
-    if isinstance(node, qp.IdNode):
-        for c in ("repo", "path", "commit"):
-            if c not in pdf:
-                return np.empty(0, dtype=np.int64)
-        refs = (
-            pdf["repo"].astype(str)
-            + "/" + pdf["path"].astype(str)
-            + "/" + pdf["commit"].astype(str)
-        ).str.lower()
-        return np.flatnonzero((refs == node.doc_ref).to_numpy()).astype(
+        return np.flatnonzero(_in_mask(pdf[node.column], node.values)).astype(
             np.int64
         )
+    if isinstance(node, qp.IdNode):
+        cols = ("repo", "path", "commit")
+        if any(c not in pdf for c in cols):
+            return np.empty(0, dtype=np.int64)
+        # concat_ws: nulls are skipped, not written
+        refs = [
+            "/".join(str(v) for v in row if not pd.isna(v)).lower()
+            for row in zip(*(pdf[c] for c in cols))
+        ]
+        return np.flatnonzero(
+            np.asarray(refs, dtype=object) == node.doc_ref
+        ).astype(np.int64)
     raise TypeError(type(node))  # pragma: no cover
 
 

@@ -11,6 +11,7 @@ from ds_discovery_opensearch_taxonomy_spark.config import (
     EngineConfig,
     FieldSpec,
 )
+from ds_discovery_opensearch_taxonomy_spark.operators import search
 from ds_discovery_opensearch_taxonomy_spark.operators.index_build import build_index
 from ds_discovery_opensearch_taxonomy_spark.operators.search import (
     IndexReader,
@@ -26,6 +27,15 @@ CONFIG = EngineConfig(
     n_term_buckets=4,
     n_eval_bands=2,
 )
+
+
+@pytest.fixture(autouse=True)
+def spark_fetcher(monkeypatch):
+    """These tests read the distributed expansion's state
+    (``reader.expansion_cache``), which only a reader without a driver
+    snapshot builds: keep every reader here off the snapshot (the cap
+    test turns it back on for its second half)."""
+    monkeypatch.setattr(search, "LOCAL_SNAPSHOT_MAX_BYTES", -1)
 
 
 @pytest.fixture(scope="module")
@@ -79,8 +89,16 @@ def test_wildcard_mixed_with_scoring(big_vocab, spark):
     assert res[0]["score"] > 1.0  # BM25(x0) + constant 1.0
 
 
-def test_expansion_cap_truncates_deterministically(spark, tmp_path):
+def test_expansion_cap_truncates_deterministically(spark, tmp_path, monkeypatch, caplog):
+    """``max_term_expansions`` keeps the first terms by term_id, logs the
+    truncation and is deterministic — in the distributed expansion and in
+    a driver snapshot's, which keep the same terms and match the same
+    docs."""
     import dataclasses
+    import logging
+
+    from ds_discovery_opensearch_taxonomy_spark.functions.vtokenize import term_id_of
+    from ds_discovery_opensearch_taxonomy_spark.operators.search import compile_queries
 
     base = F.col("id") * 8
     content = F.array_join(
@@ -100,15 +118,33 @@ def test_expansion_cap_truncates_deterministically(spark, tmp_path):
     )
     capped = dataclasses.replace(CONFIG, max_term_expansions=100)
     build_index(spark, corpus, str(tmp_path / "idx"), capped)
+    caplog.set_level(logging.WARNING, logger=search.__name__)
     reader = IndexReader(spark, str(tmp_path / "idx"), capped)
     res = run_categories(spark, reader, [("Y", "y*")], scored=False).collect()
     node = qp.WildcardNode(TEXT_NO_CAS_NO_PUNC, "y*")
     info = reader.expansion_cache[repr(node)]
     assert info.n_terms == 100  # capped (800 would match)
     assert 0 < len(res) < 100  # some docs dropped by the truncation
+    assert "expansion truncated at 100 terms" in caplog.text
     # deterministic: a second compile on a fresh reader agrees
     reader2 = IndexReader(spark, str(tmp_path / "idx"), capped)
     res2 = run_categories(spark, reader2, [("Y", "y*")], scored=False).collect()
-    assert sorted(r["doc_id"] for r in res) == sorted(
-        r["doc_id"] for r in res2
-    )
+    docs = sorted(r["doc_id"] for r in res)
+    assert docs == sorted(r["doc_id"] for r in res2)
+    kept = {
+        r["term_id"]
+        for r in info.parent.where(F.col("ckey") == repr(node)).collect()
+    }
+    assert len(kept) == 100
+
+    # the driver snapshot's expansion: same kept terms, docs and warning
+    monkeypatch.setattr(search, "LOCAL_SNAPSHOT_MAX_BYTES", 1 << 62)
+    monkeypatch.setattr(search, "LOCAL_MAX_POSTINGS", 1 << 62)
+    caplog.clear()
+    local = IndexReader(spark, str(tmp_path / "idx"), capped)
+    assert local.snapshot() is not None
+    res3 = run_categories(spark, local, [("Y", "y*")], scored=False).collect()
+    assert "expansion truncated at 100 terms" in caplog.text
+    terms = compile_queries(local, [("Y", "y*")])[0]["Y"].terms
+    assert {term_id_of(TEXT_NO_CAS_NO_PUNC, t) for t in terms} == kept
+    assert sorted(r["doc_id"] for r in res3) == docs

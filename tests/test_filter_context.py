@@ -13,6 +13,7 @@ from ds_discovery_opensearch_taxonomy_spark.operators.oracle import (
     OracleIndex,
     build_oracle_doc,
 )
+from ds_discovery_opensearch_taxonomy_spark.operators import search
 from ds_discovery_opensearch_taxonomy_spark.operators.search import run_categories
 from ds_discovery_opensearch_taxonomy_spark.plans import queryparser as qp
 from ds_discovery_opensearch_taxonomy_spark.sources.corpus import (
@@ -70,10 +71,13 @@ def test_filtered_search_matches_oracle(built, spark):
     assert len(unfiltered) > len(got)
 
 
-def test_filter_clause_inside_eval_not_post_join(built, spark):
+def test_filter_clause_inside_eval_not_post_join(built, spark, monkeypatch):
     """The filtered plan contains NO join against the docs table after the
     evaluator — the filter rides the eval shuffle as virtual posting
-    blocks (the docs scan feeds block ENCODING, before applyInPandas)."""
+    blocks (the docs scan feeds block ENCODING, before applyInPandas).
+    The plan under test is the Spark fetcher's: forced, since this small
+    index is otherwise served in the driver."""
+    monkeypatch.setattr(search, "LOCAL_MAX_POSTINGS", -1)
     eng, _, _ = built
     df = eng.search('"women"', limit=10, filters={"lang": ["python"]})
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -140,10 +144,13 @@ def test_scoped_facets(built, spark):
     assert total == 200
 
 
-def test_virtual_cache_is_lru_bounded(built, spark):
+def test_virtual_cache_is_lru_bounded(built, spark, monkeypatch):
     """The per-reader virtual-block cache evicts (and unpersists) its
     oldest entries past the cap — an API serving varied filter clauses
-    must not accumulate persisted storage for the reader's lifetime."""
+    must not accumulate persisted storage for the reader's lifetime.
+    The cache is the Spark fetcher's: forced, since this small index is
+    otherwise served in the driver."""
+    monkeypatch.setattr(search, "LOCAL_MAX_POSTINGS", -1)
     eng, _, _ = built
     reader = eng.reader
     reader._virtual_cache_max = 2

@@ -178,13 +178,14 @@ def test_block_max_topk_matches_full_eval(built, spark, monkeypatch):
     """The block-max top-k path (``eval_topk``) runs only for groups of at
     least ``_TOPK_MIN_POSTINGS`` postings; forced on for every group, it
     must return the rows the full evaluation returns, for every category
-    and several k."""
+    and several k — under the Spark fetcher and the driver fetcher."""
     from ds_discovery_opensearch_taxonomy_spark.operators import search
 
     _, _, reader, _ = built
     pairs = [
         (c["category_id"], c["query_text"]) for c in load_categories()
     ] + TOPK_DISJUNCTIONS
+    threshold = search._TOPK_MIN_POSTINGS
 
     def rows(k):
         return sorted(
@@ -194,16 +195,19 @@ def test_block_max_topk_matches_full_eval(built, spark, monkeypatch):
             ).collect()
         )
 
-    for k in (1, 5, 20):
-        want = rows(k)
-        # eval_group is pickled by value with the global's current value
-        monkeypatch.setattr(search, "_TOPK_MIN_POSTINGS", 0)
-        got = rows(k)
-        monkeypatch.undo()
-        assert {c for c, _, _ in want} >= {c for c, _ in TOPK_DISJUNCTIONS}
-        assert [(c, d) for c, d, _ in got] == [(c, d) for c, d, _ in want]
-        for (_, _, g), (_, _, w) in zip(got, want):
-            assert math.isclose(g, w, rel_tol=1e-12, abs_tol=0.0)
+    # LOCAL_MAX_POSTINGS -1 sends every call to Spark, a huge one to the
+    # driver; the threshold is read at plan time and reaches the workers
+    for local_max in (-1, 1 << 62):
+        monkeypatch.setattr(search, "LOCAL_MAX_POSTINGS", local_max)
+        for k in (1, 5, 20):
+            monkeypatch.setattr(search, "_TOPK_MIN_POSTINGS", threshold)
+            want = rows(k)
+            monkeypatch.setattr(search, "_TOPK_MIN_POSTINGS", 0)
+            got = rows(k)
+            assert {c for c, _, _ in want} >= {c for c, _ in TOPK_DISJUNCTIONS}
+            assert [(c, d) for c, d, _ in got] == [(c, d) for c, d, _ in want]
+            for (_, _, g), (_, _, w) in zip(got, want):
+                assert math.isclose(g, w, rel_tol=1e-12, abs_tol=0.0)
 
 
 def test_all_136_categories_parity(built, spark):

@@ -111,6 +111,7 @@ def _mk_evaluator(term_positions, scored, *, dls=None, mode="eager",
     )
     from ds_discovery_opensearch_taxonomy_spark.operators.search import (
         _Evaluator,
+        _split_by_term,
         _TermData,
     )
 
@@ -131,12 +132,12 @@ def _mk_evaluator(term_positions, scored, *, dls=None, mode="eager",
         pos_lists = [sorted(set(docs[d])) for d in ids.tolist()]
         tfs = np.array([len(p) for p in pos_lists], dtype=np.int64)
         if mode == "rows":
-            rows_by_term[tid] = pd.DataFrame({
-                "blk_seq": [0], "salt": [0], "n": [len(ids)],
+            rows_by_term.update(_split_by_term(pd.DataFrame({
+                "term_id": [tid], "blk_seq": [0], "salt": [0], "n": [len(ids)],
                 "docids": [codec.encode_docids(ids, base=None)],
                 "tfs": [codec.varbyte_encode(tfs.astype(np.uint64))],
                 "posdata": [codec.encode_positions(pos_lists)],
-            })
+            })))
             continue
         if mode == "raw":
             ev.terms[tid] = _TermData(

@@ -81,24 +81,11 @@ def main() -> None:
     spark.stop()  # everything below is pure numpy/pandas
 
     def build_ev():
-        rows_by_term = {
-            int(t): rows for t, rows in pdf.groupby("term_id", sort=False)
-        }
-        dm_rows = rows_by_term.pop(so.DOCMAP_TID, None)
+        rows_by_term = so._split_by_term(pdf)
+        _, dead, dl_by_field = so.band_sidecars(
+            rows_by_term.pop(so.DOCMAP_TID, None), field_names
+        )
         band_start = np.int64(band) << np.int64(ord_shift)
-        dl_by_field: dict[str, np.ndarray] = {}
-        dead = None
-        if dm_rows is not None:
-            for ford_v, gr in dm_rows.groupby("salt", sort=False):
-                buf = b"".join(gr.sort_values("blk_seq")["docids"])
-                if int(ford_v) == -2:
-                    dead = np.unique(np.frombuffer(buf, dtype="<i8"))
-                elif int(ford_v) < 0:
-                    pass  # ordmap: not needed for kernel timing
-                else:
-                    dl_by_field[field_names[int(ford_v)]] = np.frombuffer(
-                        buf, dtype="<i4"
-                    )
         ev = so._Evaluator(
             rows_by_term, df_map, n_docs, config.k1, config.b, avgdl,
             scored, needs_pos, tid_map, dl_by_field, int(band_start),
