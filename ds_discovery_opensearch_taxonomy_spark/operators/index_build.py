@@ -606,6 +606,19 @@ DOCMAP_SCHEMA = T.StructType(
     ]
 )
 
+#: DICTIONARY file columns; the main table keeps ``bucket`` (term_id mod
+#: n_term_buckets) in its ``bucket=<b>`` partition dirs
+DICTIONARY_SCHEMA = T.StructType(
+    [
+        T.StructField("term_id", T.LongType(), False),
+        T.StructField("df", T.LongType(), False),
+        T.StructField("cf", T.LongType(), False),
+        T.StructField("term", T.StringType(), True),
+        T.StructField("ford", T.IntegerType(), False),
+        T.StructField("field", T.StringType(), False),
+    ]
+)
+
 TOMBSTONE_FORD = -2
 
 #: docmap payload chunking — no parquet cell or eval allocation exceeds
@@ -1288,21 +1301,8 @@ def make_direct_block_writer(builder, out_dir: str, n_buckets: int):
                 )
             writers[b][0].write_table(pa.Table.from_batches(batches_b))
 
-        import time as _time
-
-        trace = os.environ.get("SPARK_GRAFT_WRITER_TRACE") == "1"
-        t_kernel = t_split = t_write = 0.0
-        t0 = _time.perf_counter()
-        it = builder(batches)
-        while True:
-            try:
-                rb = next(it)
-            except StopIteration:
-                break
-            t1 = _time.perf_counter()
-            t_kernel += t1 - t0
+        for rb in builder(batches):
             if rb.num_rows == 0:
-                t0 = _time.perf_counter()
                 continue
             tid = rb.column(0).to_numpy()
             nvals = rb.column(4).to_numpy()
@@ -1315,28 +1315,13 @@ def make_direct_block_writer(builder, out_dir: str, n_buckets: int):
                 postings_n[b] = postings_n.get(b, 0) + int(nvals[idx].sum())
                 buf.setdefault(b, []).append(sub)
                 buf_bytes[b] = buf_bytes.get(b, 0) + sub.nbytes
-                t2 = _time.perf_counter()
-                t_split += t2 - t1
                 if buf_bytes[b] >= _DIRECT_WRITE_FLUSH_BYTES:
                     flush(b)
-                    t1 = _time.perf_counter()
-                    t_write += t1 - t2
-                else:
-                    t1 = t2
-            t0 = _time.perf_counter()
-        t1 = _time.perf_counter()
         for b in list(buf):
             flush(b)
         for b, (w, tmp, final) in writers.items():
             w.close()
             os.rename(tmp, final)
-        t_write += _time.perf_counter() - t1
-        if trace:
-            print(
-                f"WRITER_TRACE pid={pid} kernel={t_kernel:.2f} "
-                f"split={t_split:.2f} write={t_write:.2f}",
-                flush=True,
-            )
         if blocks_n:
             yield pa.RecordBatch.from_arrays(
                 [
@@ -1605,20 +1590,13 @@ def make_direct_staging_writer(inner, out_dir: str, n_buckets: int):
                     os.remove(os.path.join(out_dir, fn))
                 except OSError:
                     pass
-        import time as _time
-
-        trace = os.environ.get("SPARK_GRAFT_WRITER_TRACE") == "1"
-        t_kernel = t_write = 0.0
         schema = _arrow_staging_schema()
         final = os.path.join(out_dir, f"{prefix}{att}.parquet")
         tmp = final + ".inprogress"
         writer = None
         sums: dict[int, int] = {}
-        t0 = _time.perf_counter()
         for rb in inner(batches):
-            t_kernel += _time.perf_counter() - t0
             if rb.num_rows == 0:
-                t0 = _time.perf_counter()
                 continue
             tid = rb.column(1).to_numpy()
             bucket = (tid % n_buckets).astype(np.int32)
@@ -1636,21 +1614,10 @@ def make_direct_staging_writer(inner, out_dir: str, n_buckets: int):
                     sums[f] = sums.get(f, 0) + int(cfs[fords == f].sum())
             if writer is None:
                 writer = pq.ParquetWriter(tmp, schema, compression="snappy")
-            t1 = _time.perf_counter()
             writer.write_table(pa.Table.from_batches([out_rb]))
-            t0 = _time.perf_counter()
-            t_write += t0 - t1
-        t1 = _time.perf_counter()
         if writer is not None:
             writer.close()
             os.rename(tmp, final)
-        t_write += _time.perf_counter() - t1
-        if trace:
-            print(
-                f"STAGING_TRACE pid={pid} kernel={t_kernel:.2f} "
-                f"write={t_write:.2f}",
-                flush=True,
-            )
         if not sums:
             # ALWAYS report this attempt, even with no kind-0 rows (empty
             # trailing partition, or all-empty content that still wrote a

@@ -577,14 +577,6 @@ _SNAPSHOT_PATH_TABLES = (
     IndexCatalog.DELTA_DOCMAP,
 )
 
-#: main table -> its append-delta table
-_DELTA_OF = {
-    IndexCatalog.DICTIONARY: IndexCatalog.DELTA_DICTIONARY,
-    IndexCatalog.POSTINGS: IndexCatalog.DELTA_BLOCKS,
-    IndexCatalog.DOCS: IndexCatalog.DELTA_DOCS,
-    IndexCatalog.DOCMAP: IndexCatalog.DELTA_DOCMAP,
-}
-
 _DICT_COLS = ("term_id", "df", "term", "field", "bucket")
 
 #: arrow integer types -> pandas nullable ones (an int column with nulls
@@ -599,7 +591,7 @@ _NULLABLE_INTS = {
 
 def _table_dirs(paths: dict, seqs: list[int], table: str) -> list[str]:
     """A main table's dir plus its committed delta batch dirs."""
-    delta = paths[_DELTA_OF[table]]
+    delta = paths[IndexCatalog.DELTA_OF[table]]
     return [paths[table]] + [f"{delta}/batch={s}" for s in seqs]
 
 
@@ -661,8 +653,8 @@ class DriverSnapshot:
     def load(cls, paths: dict, seqs: list[int]) -> "DriverSnapshot | None":
         """Read the three tables with pyarrow, or None when their files
         take more than ``LOCAL_SNAPSHOT_MAX_BYTES``."""
-        from ds_discovery_opensearch_taxonomy_spark.operators.index_build import (
-            TOMBSTONE_FORD,
+        from ds_discovery_opensearch_taxonomy_spark.operators.index_append import (
+            drop_tombstoned,
         )
 
         tables = (IndexCatalog.DICTIONARY, IndexCatalog.DOCS, IndexCatalog.DOCMAP)
@@ -689,16 +681,7 @@ class DriverSnapshot:
             ])
         )
         docmap = read(IndexCatalog.DOCMAP)
-        docs = read(IndexCatalog.DOCS)
-        tomb = docmap.filter(pc.equal(docmap["ford"], TOMBSTONE_FORD))
-        if tomb.num_rows:
-            dead = np.concatenate([
-                np.frombuffer(p, dtype="<i8")
-                for p in tomb.column("payload").to_pylist()
-            ])
-            docs = docs.filter(
-                pc.invert(pc.is_in(docs["ord"], pa.array(dead)))
-            )
+        docs = drop_tombstoned(read(IndexCatalog.DOCS), docmap)
         return cls(paths, seqs, dictionary, docs, docmap)
 
     # -- compile --------------------------------------------------------------

@@ -48,6 +48,14 @@ class IndexCatalog:
     DELTA_DICTIONARY = "delta/dictionary"
     DELTA_DOCMAP = "delta/docmap"
     DELTA_STAGING = "delta/staging"
+    #: main table -> its append-delta table (the four tables a compaction
+    #: rewrites)
+    DELTA_OF = {
+        DICTIONARY: DELTA_DICTIONARY,
+        POSTINGS: DELTA_BLOCKS,
+        DOCS: DELTA_DOCS,
+        DOCMAP: DELTA_DOCMAP,
+    }
 
     def __init__(self, root: str | Path):
         self.root = Path(root)
@@ -300,8 +308,11 @@ class IndexCatalog:
             w = w.partitionBy(*partition_by)
         w.parquet(self.path(table, bucket))
 
-    def read(self, spark: SparkSession, table: str) -> DataFrame:
+    def read(self, spark: SparkSession, table: str, schema=None) -> DataFrame:
+        """One table as a DataFrame; a ``schema`` (partition column
+        included) spares Spark the job that infers it from a footer."""
         p = self.root / self._resolve(table)
+        reader = spark.read if schema is None else spark.read.schema(schema)
         if table in (self.POSTINGS, self.DICTIONARY) and not (p / "_SUCCESS").exists():
             # bucket-partitioned directory tree, written bucket-at-a-time;
             # enumerate real dirs (a literal "bucket=*" glob path makes
@@ -313,8 +324,8 @@ class IndexCatalog:
             )
             if not parts:
                 raise FileNotFoundError(f"no bucket partitions under {p}")
-            return spark.read.option("basePath", str(p)).parquet(*parts)
-        return spark.read.parquet(str(p))
+            return reader.option("basePath", str(p)).parquet(*parts)
+        return reader.parquet(str(p))
 
     def table_bytes(self, table: str) -> int:
         p = self.root / self._resolve(table)

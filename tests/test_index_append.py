@@ -6,6 +6,7 @@ Reference contract: daily-update docs land in the live OpenSearch index
 (OpenSearchIAViewUpdateRepository.cs:32-70)."""
 
 import math
+from pathlib import Path
 
 import pytest
 
@@ -67,6 +68,21 @@ def appended(spark, tmp_path_factory):
         TEST_CONFIG,
     )
     return eng, oracle, rows
+
+
+def _on_both_paths(monkeypatch):
+    """Yield "driver", then "spark", with the compaction cap set so that a
+    test index compacts on that path (every test index is far below the
+    default cap; a cap of -1 sends it to Spark)."""
+    from ds_discovery_opensearch_taxonomy_spark.operators import index_append
+
+    for path, cap in (
+        ("driver", index_append.DRIVER_COMPACT_MAX_BYTES),
+        ("spark", -1),
+    ):
+        with monkeypatch.context() as m:
+            m.setattr(index_append, "DRIVER_COMPACT_MAX_BYTES", cap)
+            yield path
 
 
 def _parity(spark, eng, oracle, queries, scored, top_k=None):
@@ -183,32 +199,37 @@ def test_update_supersedes_old_version(spark, tmp_path_factory):
     assert eng.categorise_all().count() == 60
 
 
-def test_compaction_preserves_results(appended, spark):
+def test_compaction_preserves_results(appended, spark, tmp_path, monkeypatch):
     """compact() folds every delta into generation-versioned main tables:
-    same match/score results, no delta batches left, delta dirs gone."""
-    eng, oracle, _ = appended
-    before = {
-        (r["category_id"], r["doc_id"]): r["score"]
-        for r in run_categories(
-            spark, eng.reader, QUERIES, scored=True
-        ).collect()
-    }
-    out = eng.compact()
-    assert out is not None and out["batches_compacted"] >= 1
-    assert not eng.reader.cat.deltas()
-    assert not (eng.reader.cat.root / "delta").exists() or not any(
-        (eng.reader.cat.root / "delta").rglob("*.parquet")
-    )
-    after = {
-        (r["category_id"], r["doc_id"]): r["score"]
-        for r in run_categories(
-            spark, eng.reader, QUERIES, scored=True
-        ).collect()
-    }
-    assert before == after
-    # still exact vs the oracle, and a further append still works
-    _parity(spark, eng, oracle, QUERIES[:2], scored=True)
-    assert eng.compact() is None  # nothing left to compact
+    same match/score results, no delta batches left, delta dirs gone — on
+    both compaction paths."""
+    src, oracle, _ = appended
+    for path in _on_both_paths(monkeypatch):
+        root = _copy_index(src.reader.cat.root, tmp_path / path)
+        eng = TaxonomyEngine(spark, str(root), TEST_CONFIG)
+        before = {
+            (r["category_id"], r["doc_id"]): r["score"]
+            for r in run_categories(
+                spark, eng.reader, QUERIES, scored=True
+            ).collect()
+        }
+        out = eng.compact()
+        assert out is not None and out["batches_compacted"] >= 1
+        assert out["path"] == path
+        assert not eng.reader.cat.deltas()
+        assert not (eng.reader.cat.root / "delta").exists() or not any(
+            (eng.reader.cat.root / "delta").rglob("*.parquet")
+        )
+        after = {
+            (r["category_id"], r["doc_id"]): r["score"]
+            for r in run_categories(
+                spark, eng.reader, QUERIES, scored=True
+            ).collect()
+        }
+        assert before == after
+        # still exact vs the oracle, and a further append still works
+        _parity(spark, eng, oracle, QUERIES[:2], scored=True)
+        assert eng.compact() is None  # nothing left to compact
 
 
 def test_alignment_guard_rejects_partition_drift(spark):
@@ -229,12 +250,18 @@ def test_alignment_guard_rejects_partition_drift(spark):
         bad.count()
 
 
-def test_append_compact_append_chain(spark, tmp_path_factory):
+def test_append_compact_append_chain(spark, tmp_path_factory, monkeypatch):
     """The decode order must stay exact across a compaction boundary:
     compaction renumbers the folded batches' delta salts densely into the
     compacted range [2^16, 2^20) and RESETS the batch-seq counter in the
     same atomic commit, so a post-compaction append's fresh seq-0 salt
-    (2^20) is again above every salt in the main table."""
+    (2^20) is again above every salt in the main table.  Both compaction
+    paths."""
+    for path in _on_both_paths(monkeypatch):
+        _append_compact_append_chain(spark, tmp_path_factory, path)
+
+
+def _append_compact_append_chain(spark, tmp_path_factory, path):
     out = tmp_path_factory.mktemp("chain")
     full = with_doc_ids(synthesize_corpus(spark, 240))
     b0 = with_doc_ids(synthesize_corpus(spark, 120))
@@ -248,7 +275,7 @@ def test_append_compact_append_chain(spark, tmp_path_factory):
     eng = TaxonomyEngine(spark, str(out), TEST_CONFIG)
     assert eng.append_docs(b1, batch_key="c1", auto_compact=False) is not None
     assert eng.reader.cat.next_delta_seq() == 1
-    assert eng.compact() is not None
+    assert eng.compact()["path"] == path
     # the seq counter reset with the salt renumber (atomic manifest write)
     assert eng.reader.cat.next_delta_seq() == 0
     assert int(eng.reader.cat.get_meta("compacted_salts")) == 1
@@ -284,7 +311,7 @@ def test_append_compact_append_chain(spark, tmp_path_factory):
     assert eng.reader.docs().count() == 240
     # compact once more and stay exact: the second generation lands in the
     # next dense slot, previously compacted salts keep theirs
-    assert eng.compact() is not None
+    assert eng.compact()["path"] == path
     assert int(eng.reader.cat.get_meta("compacted_salts")) == 2
     assert eng.reader.cat.next_delta_seq() == 0
     salts = [
@@ -422,12 +449,19 @@ def test_next_ord_commit_is_atomic_and_self_repairing(spark, tmp_path_factory):
     _parity(spark, eng, oracle, QUERIES[:3], scored=True)
 
 
-def test_compaction_remaps_arbitrary_salt_domains(spark, tmp_path_factory):
+def test_compaction_remaps_arbitrary_salt_domains(
+    spark, tmp_path_factory, monkeypatch
+):
     """The remap domain is derived from the DATA (distinct salts >= 2^16
     in the view), not assumed dense-from-base — so any seq drift
     renumbers correctly.  Emulated by starting the seq counter at 5: the
     folded salts are high and non-dense, and must land at the dense base
-    with the counter reset."""
+    with the counter reset.  Both compaction paths."""
+    for path in _on_both_paths(monkeypatch):
+        _compaction_remaps_arbitrary_salt_domains(spark, tmp_path_factory, path)
+
+
+def _compaction_remaps_arbitrary_salt_domains(spark, tmp_path_factory, path):
     from ds_discovery_opensearch_taxonomy_spark.operators.index_append import (
         COMPACTED_SALT_BASE,
         DELTA_SALT_BASE,
@@ -448,7 +482,7 @@ def test_compaction_remaps_arbitrary_salt_domains(spark, tmp_path_factory):
         for r in eng.reader.postings().select("salt").distinct().collect()
     }
     assert delta_salt(5) in salts
-    assert eng.compact() is not None
+    assert eng.compact()["path"] == path
     assert eng.reader.cat.next_delta_seq() == 0
     salts = {
         int(r["salt"])
@@ -637,13 +671,21 @@ def F_col_mod3(df):
     return F.pmod(F.col("doc_id"), F.lit(3))
 
 
-def test_reader_open_prunes_zombie_attempt_files(spark, tmp_path_factory):
+def test_reader_open_prunes_zombie_attempt_files(
+    spark, tmp_path_factory, monkeypatch
+):
     """Cluster-speculation defense-in-depth: the build persists the
     committed (pid -> attempt) maps for both direct-write tables, and
     IndexReader open re-prunes any file those maps don't know — a zombie
     speculative attempt can os.rename its output AFTER the post-job sweep,
     and an unpruned duplicate would silently double posting blocks at
-    decode.  Compaction must flip the map with the generation pointer."""
+    decode.  Compaction must flip the map with the generation pointer, on
+    both compaction paths."""
+    for path in _on_both_paths(monkeypatch):
+        _reader_open_prunes_zombie_attempt_files(spark, tmp_path_factory, path)
+
+
+def _reader_open_prunes_zombie_attempt_files(spark, tmp_path_factory, path):
     from pathlib import Path
 
     out = tmp_path_factory.mktemp("zombie")
@@ -681,7 +723,7 @@ def test_reader_open_prunes_zombie_attempt_files(spark, tmp_path_factory):
         "zb-1",
         auto_compact=False,
     )
-    eng.compact()
+    assert eng.compact()["path"] == path
     cat2 = eng.reader.cat
     atts2 = cat2.get_meta("postings_attempts")
     assert atts2 is not None
@@ -997,3 +1039,196 @@ def test_compaction_ratio_measures_against_compacted_size(
     )
     assert (eng_r.maybe_compact() is not None) == trips
     assert len(cat.deltas()) == (0 if trips else 1)
+
+
+# --------------------------------------------------------------------------
+# Driver vs Spark compaction
+# --------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def compaction_index(spark, small_index, tmp_path_factory):
+    """small_index after one append and a compaction (an earlier compacted
+    generation, with its salt in the compacted range), then two more
+    deltas: batch 2 re-ingests docs of batch 1, batch 3 adds 30 new docs
+    and re-ingests 4 base docs."""
+    import pandas as pd
+
+    src, batch, batch2 = small_index
+    root = _copy_index(src, tmp_path_factory.mktemp("compaction") / "idx")
+    assert _append(spark, root, batch, "c1") is not None
+    eng = TaxonomyEngine(spark, str(root), TEST_CONFIG)
+    assert eng.compact() is not None
+    assert _append(spark, root, batch2, "c2") is not None
+    raw = synthesize_corpus(spark, 130)
+    rows = sorted(
+        (r.asDict() for r in with_doc_ids(raw).collect()),
+        key=lambda r: r["doc_id"],
+    )
+    live = {r["doc_id"] for r in eng.reader.docs().select("doc_id").collect()}
+    new = [r for r in rows if r["doc_id"] not in live][:30]
+    again = [
+        dict(r, content="votes for women " + r["content"])
+        for r in rows
+        if r["doc_id"] in live
+    ][:4]
+    batch3 = with_doc_ids(
+        spark.createDataFrame(pd.DataFrame(new + again)[raw.columns], raw.schema)
+    )
+    assert _append(spark, root, batch3, "c3") is not None
+    assert len(IndexCatalog(root).deltas()) == 2
+    return root
+
+
+def _compact(spark, root, path, monkeypatch) -> tuple[dict, int]:
+    """compact_index on ``path`` -> (its result, the Spark jobs it ran)."""
+    from ds_discovery_opensearch_taxonomy_spark.operators import index_append
+
+    with monkeypatch.context() as m:
+        if path == "spark":
+            m.setattr(index_append, "DRIVER_COMPACT_MAX_BYTES", -1)
+        first = _last_job(spark)
+        out = index_append.compact_index(
+            spark, IndexCatalog(root), TEST_CONFIG
+        )
+        jobs = _last_job(spark) - first
+    assert out["path"] == path
+    return out, jobs
+
+
+def _last_job(spark) -> int:
+    return max(
+        spark.sparkContext.statusTracker().getJobIdsForGroup(None), default=-1
+    )
+
+
+def _answers(spark, root, monkeypatch) -> list:
+    """Scored (category, doc, score) rows over QUERIES, asserted `==`
+    between the driver fetcher and the Spark one."""
+    from ds_discovery_opensearch_taxonomy_spark.operators import search
+
+    got = []
+    for cap in (search.LOCAL_SNAPSHOT_MAX_BYTES, -1):
+        with monkeypatch.context() as m:
+            m.setattr(search, "LOCAL_SNAPSHOT_MAX_BYTES", cap)
+            eng = TaxonomyEngine(spark, str(root), TEST_CONFIG)
+            got.append(
+                sorted(
+                    map(
+                        tuple,
+                        run_categories(
+                            spark, eng.reader, QUERIES, scored=True
+                        ).collect(),
+                    )
+                )
+            )
+    assert got[0] and got[0] == got[1]
+    return got[0]
+
+
+def _assert_same_compaction(spark, a, b):
+    """Two compacted indexes hold row-identical postings, dictionary, docs
+    and docmap (every column, payload bytes included) and the same
+    compaction state in their manifests."""
+    ca, cb = IndexCatalog(a), IndexCatalog(b)
+    for table in (
+        IndexCatalog.POSTINGS,
+        IndexCatalog.DICTIONARY,
+        IndexCatalog.DOCS,
+        IndexCatalog.DOCMAP,
+    ):
+        da = spark.read.parquet(ca.path(table))
+        db = spark.read.parquet(cb.path(table))
+        assert da.schema == db.schema, table
+        ra = sorted(map(tuple, da.collect()), key=repr)
+        rb = sorted(map(tuple, db.collect()), key=repr)
+        assert ra and ra == rb, table
+    ma, mb = ca.manifest()["meta"], cb.manifest()["meta"]
+    for key in ("stats_base", "compacted_salts", "next_delta_seq", "gen"):
+        assert ma[key] == mb[key], key
+
+
+def test_driver_and_spark_compactions_write_identical_tables(
+    spark, compaction_index, tmp_path, monkeypatch
+):
+    """The driver compaction and the Spark one fold the same two deltas
+    (re-ingested docs, an earlier compacted generation in the view) into
+    row-identical tables and the same manifest state, and both answer
+    QUERIES as the uncompacted index does, under both fetchers.  The
+    driver runs no Spark job; the Spark plan's job count is pinned (each
+    schemaless parquet read adds a footer-inference job)."""
+    expected = _answers(spark, compaction_index, monkeypatch)
+    a = _copy_index(compaction_index, tmp_path / "driver")
+    b = _copy_index(compaction_index, tmp_path / "spark")
+    out_a, jobs_a = _compact(spark, a, "driver", monkeypatch)
+    out_b, jobs_b = _compact(spark, b, "spark", monkeypatch)
+    assert (jobs_a, jobs_b) == (0, 9)
+    assert out_a["batches_compacted"] == out_b["batches_compacted"] == 2
+    assert out_a["generations"] == out_b["generations"]
+    for root, out in ((a, out_a), (b, out_b)):
+        cat = IndexCatalog(root)
+        assert out["bytes_written"] == sum(
+            cat.table_bytes(t)
+            for t in ("postings", "dictionary", "docs", "docmap")
+        )
+    assert int(IndexCatalog(a).get_meta("compacted_salts")) == 3
+    _assert_same_compaction(spark, a, b)
+    assert _answers(spark, a, monkeypatch) == expected
+    assert _answers(spark, b, monkeypatch) == expected
+
+
+def test_compaction_path_selection_at_cap(
+    spark, compaction_index, tmp_path, monkeypatch
+):
+    """An index whose main and committed delta files take exactly
+    DRIVER_COMPACT_MAX_BYTES compacts in the driver; one byte less of cap
+    sends it to Spark."""
+    from ds_discovery_opensearch_taxonomy_spark.operators import index_append
+
+    cat = IndexCatalog(compaction_index)
+    dirs = [
+        cat.path(t) for t in ("postings", "dictionary", "docs", "docmap")
+    ] + [
+        f"{cat.path(t)}/batch={s}"
+        for t in ("delta/blocks", "delta/dictionary", "delta/docs", "delta/docmap")
+        for s in cat.delta_seqs()
+    ]
+    size = sum(
+        f.stat().st_size for d in dirs for f in Path(d).rglob("*.parquet")
+    )
+    for cap, path in ((size, "driver"), (size - 1, "spark")):
+        root = _copy_index(compaction_index, tmp_path / path)
+        monkeypatch.setattr(index_append, "DRIVER_COMPACT_MAX_BYTES", cap)
+        out = index_append.compact_index(spark, IndexCatalog(root), TEST_CONFIG)
+        assert out["path"] == path
+
+
+@pytest.mark.parametrize("crashed_path", ["driver", "spark"])
+def test_compaction_retry_after_crash_before_commit(
+    spark, compaction_index, tmp_path, crashed_path, monkeypatch
+):
+    """A compaction that wrote its generation dirs and then raised in the
+    manifest commit (clear_deltas) leaves the old main+delta view serving
+    the same answers; a driver retry then equals a clean compaction.  The
+    retry must clear the crashed attempt's files first: after a crashed
+    Spark attempt, its dictionary files beside the driver's would
+    double every dictionary row."""
+    expected = _answers(spark, compaction_index, monkeypatch)
+    crashed = _copy_index(compaction_index, tmp_path / "crashed")
+    clean = _copy_index(compaction_index, tmp_path / "clean")
+
+    def crash(self, *args, **kwargs):
+        raise RuntimeError("crash before commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(IndexCatalog, "clear_deltas", crash)
+        with pytest.raises(RuntimeError, match="crash before commit"):
+            _compact(spark, crashed, crashed_path, monkeypatch)
+    assert len(IndexCatalog(crashed).deltas()) == 2
+    assert any((crashed / "dictionary__g2").rglob("*.parquet"))
+    assert _answers(spark, crashed, monkeypatch) == expected
+
+    _compact(spark, crashed, "driver", monkeypatch)
+    _compact(spark, clean, "driver", monkeypatch)
+    _assert_same_compaction(spark, crashed, clean)
+    assert _answers(spark, crashed, monkeypatch) == expected
