@@ -115,7 +115,6 @@ def main() -> int:
         n_term_buckets=8,
         n_eval_bands=int(os.environ.get("BENCH_EVAL_BANDS", 16)),
         salt_target_postings=int(os.environ.get("BENCH_SALT_TARGET", 20_000)),
-        build_parallelism=8,
     )
     idx_dir = Path(".scratch") / f"bench_index_{n_cpus}_{n_rows}"
     shutil.rmtree(idx_dir, ignore_errors=True)

@@ -83,8 +83,11 @@ class EngineConfig:
     b: float = BM25_B
     block_size: int = BLOCK_SIZE
 
-    #: number of term-hash buckets the postings build is partitioned into;
-    #: the build commits one bucket at a time (checkpoint/resume unit).
+    #: number of term-hash buckets the postings and dictionary are
+    #: partitioned into.  The build writes every bucket in one job and
+    #: commits each to the manifest (resume reruns the whole postings
+    #: stage); a compaction streams one bucket dir at a time, so its driver
+    #: memory is bounded per bucket, not by the index.
     n_term_buckets: int = 8
     #: auto-compaction policy (Lucene segment-merge-trigger analogue):
     #: ``TaxonomyEngine.maybe_compact`` folds append deltas into the main
@@ -151,20 +154,10 @@ class EngineConfig:
     #: term per chunk).
     eval_chunk_size: int = 68
 
-    #: concurrent bucket-build jobs (reference runs 5 concurrent batches,
-    #: FullReindexCategoriser.cs:87-213); each commits independently.
-    #: Only used when ``bucket_resume`` is True.
+    #: (retired) read by nothing: the postings build is one Spark job for
+    #: every bucket, so no per-bucket job loop is left for this to size.
+    #: Kept so callers that still pass it construct unchanged.
     build_parallelism: int = 4
-
-    #: True -> build postings one bucket-job at a time with per-bucket
-    #: manifest commits (finest kill/resume granularity; driver-crash
-    #: recovery skips committed buckets).  False (default) -> ONE Spark job
-    #: for every bucket: one wide shuffle at full cluster parallelism, one
-    #: partitioned write — no per-job scheduling tails or repeated staging
-    #: scans (measured ~40% less bucket-stage wall locally); resume
-    #: granularity is the whole postings stage (Spark task retry handles
-    #: executor failures either way).
-    bucket_resume: bool = False
 
     #: (retired round 2) the postings build no longer joins the dictionary
     #: at all: blocks store the df-independent ``max_norm`` (idf folds in

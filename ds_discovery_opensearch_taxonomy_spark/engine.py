@@ -132,7 +132,7 @@ class TaxonomyEngine:
             compact_index,
         )
 
-        out = compact_index(self.spark, self.reader.cat, self.config)
+        out = compact_index(self.reader.cat, self.config)
         if out is not None:
             self.refresh()
         return out

@@ -40,12 +40,12 @@ postings + periodic compaction"):
   moves files, not postings; it also renumbers the interval's delta salts
   densely into [COMPACTED_SALT_BASE, DELTA_SALT_BASE) and resets the
   batch-seq counter in the same commit, keeping the int32 salt space
-  bounded for the index's lifetime.  An index of at most
-  ``DRIVER_COMPACT_MAX_BYTES`` compacts in the driver (pyarrow reads and
-  the build's direct block writer, no Spark job); a larger one runs the
-  same steps as Spark jobs.  Both paths write identical rows and share one
-  commit.  A full purge of tombstoned postings is a rebuild (like a Lucene
-  forceMerge expunging deletes).
+  bounded for the index's lifetime.  Compaction runs in the driver
+  (pyarrow reads and the build's direct block writer, no Spark job) and
+  streams every table one term bucket dir at a time, so its memory is
+  bounded per bucket, not by the index — the Lucene IndexWriter merge,
+  run by the process that owns the index.  A full purge of tombstoned
+  postings is a rebuild (like a Lucene forceMerge expunging deletes).
 
 At-least-once streams replay safely: ``batch_key`` is recorded in the
 manifest and a committed key is a no-op.
@@ -69,7 +69,7 @@ from ds_discovery_opensearch_taxonomy_spark.operators.index_build import (
     DICTIONARY_SCHEMA,
     DOCMAP_SCHEMA,
     TOMBSTONE_FORD,
-    WRITER_STATS_SCHEMA,
+    _DIRECT_WRITE_FLUSH_BYTES,
     _MERGE_TARGET_BYTES,
     _arrow_blocks_schema,
     _int_keys,
@@ -775,22 +775,6 @@ def dictionary_view(
 # --------------------------------------------------------------------------
 
 
-#: an index whose main and committed delta postings, dictionary, docs and
-#: docmap files take at most this many bytes compacts in the driver
-#: (``_compact_in_driver``: pyarrow reads, the build's direct block writer
-#: run in process, no Spark job); a larger one runs the Spark plan.
-#: Measured on a 4-vCPU host, warm JVM, docs of 50-450 words with two
-#: deltas of 10% of the index each, three runs a side (driver vs Spark):
-#: 7.5 MiB (450 docs) 0.41-0.46 s vs 4.25-6.58 s; 29.9 MiB (4k docs)
-#: 0.92-1.02 vs 4.52-5.83 s; 70.0 MiB (16k) 1.16-1.45 vs 4.78-7.20 s;
-#: 215 MiB (64k) 2.49-2.80 vs 8.31-12.09 s.  The paths did not break even
-#: by 215 MiB, so the cap bounds driver memory instead: at 215 MiB the
-#: process peak grew 0.5 GiB (the direct writer buffers up to 32 MiB a
-#: bucket; dictionary, docs and docmap are held whole), and the cap stays
-#: just above the largest size measured.
-DRIVER_COMPACT_MAX_BYTES = 256 << 20
-
-
 def _table_dirs(cat: IndexCatalog, table: str) -> list[str]:
     """A main table's dir plus its committed delta batch dirs."""
     return [cat.path(table)] + [
@@ -859,9 +843,7 @@ def _check_salt_space(old_salts: np.ndarray) -> None:
         )
 
 
-def compact_index(
-    spark: SparkSession, cat: IndexCatalog, config: EngineConfig
-) -> dict | None:
+def compact_index(cat: IndexCatalog, config: EngineConfig) -> dict | None:
     """Fold every committed delta into generation-versioned main tables.
 
     Block payloads are concatenation-valid across generations (disjoint ord
@@ -873,10 +855,13 @@ def compact_index(
     generation dirs are GC'd post-commit.  Tombstone docmap rows are
     carried along (purging dead postings from block payloads = rebuild).
 
-    An index of at most ``DRIVER_COMPACT_MAX_BYTES`` compacts in the
-    driver, a larger one with Spark jobs; both write the same rows.  The
-    result records the path taken and the bytes of the four new
-    generations."""
+    The whole fold runs in the driver with pyarrow and starts no Spark job.
+    Its memory is bounded by term buckets, not by the index: postings
+    stream one bucket dir at a time through the salt remap into the
+    build's direct block writer (which buffers at most
+    ``_DIRECT_WRITE_FLUSH_BYTES`` a bucket), the dictionary folds one
+    bucket at a time, and docs and docmap stream by record batch.  The
+    result records the bytes of the four new generations."""
     if not cat.deltas():
         return None
     meta = cat.manifest().get("meta", {})
@@ -887,20 +872,16 @@ def compact_index(
     old_dirs = {t: cat.path(t) for t in gens}
     # a compaction that crashed before its manifest commit leaves files in
     # these same (uncommitted) generation dirs.  The direct writer never
-    # truncates, and the two paths name their files differently, so a
-    # retry would commit the leftovers alongside its own output (duplicate
-    # rows, stale salt remap)
+    # truncates, so a retry would commit the leftovers alongside its own
+    # output (duplicate rows, stale salt remap)
     for d in gen_dirs.values():
         shutil.rmtree(d, ignore_errors=True)
-    size = sum(_parquet_bytes(d) for t in gens for d in _table_dirs(cat, t))
-    if size <= DRIVER_COMPACT_MAX_BYTES:
-        path = "driver"
-        n_salts, post_atts = _compact_in_driver(cat, config, gen_dirs)
-    else:
-        path = "spark"
-        n_salts, post_atts = _compact_with_spark(spark, cat, config, gen_dirs)
-
+    nb = config.n_term_buckets
     post_dir = gen_dirs[IndexCatalog.POSTINGS]
+    n_salts, post_atts = _compact_postings(cat, nb, post_dir)
+    _compact_dictionary(cat, nb, gen_dirs[IndexCatalog.DICTIONARY])
+    _compact_docs(cat, gen_dirs[IndexCatalog.DOCS], gen_dirs[IndexCatalog.DOCMAP])
+
     _reconcile_direct_write(post_dir, _int_keys(post_atts))
     n_batches = len(cat.deltas())
     # roll the compacted batches' doc/dl totals into the stats base in the
@@ -928,162 +909,155 @@ def compact_index(
     return {
         "batches_compacted": n_batches,
         "generations": gens,
-        "path": path,
         "bytes_written": sum(_parquet_bytes(d) for d in gen_dirs.values()),
     }
 
 
-def _compact_in_driver(
-    cat: IndexCatalog, config: EngineConfig, gen_dirs: dict[str, str]
-) -> tuple[int, dict]:
-    """Write the four compacted tables of a small index from the driver:
-    postings stream through the salt remap into the build's direct block
-    writer, the dictionary folds with one pyarrow group-by, docs and
-    docmap are concatenated.  Writes the same rows as
-    :func:`_compact_with_spark`.  Returns (compacted salts, postings
-    attempts map)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
+def _parquet_files(dirs) -> list[str]:
+    """Every parquet file under ``dirs``, each dir's in path order."""
+    return [str(f) for d in dirs for f in sorted(Path(d).rglob("*.parquet"))]
+
+
+def _scan(files: list[str], schema, **kwargs):
+    """Record batches of ``schema`` from parquet files, without the
+    pre-buffering meant for remote stores: on local files it made scans
+    slower and larger (one bucket dir of a 450-doc index: 106 ms with it,
+    37 ms without)."""
     import pyarrow.dataset as pads
-    import pyarrow.parquet as pq
 
-    nb = config.n_term_buckets
-
-    def read(table: str, schema=None) -> pa.Table:
-        parts = [
-            pads.dataset(d, format="parquet").to_table(
-                columns=None if schema is None else schema.names
-            )
-            for d in _table_dirs(cat, table)
-        ]
-        if schema is not None:
-            parts = [p.cast(schema) for p in parts]
-        return pa.concat_tables(parts, promote_options="permissive")
-
-    # -- postings: streamed, never one table -----------------------------------
-    blocks = pads.dataset(
-        [
-            str(f) for d in _table_dirs(cat, IndexCatalog.POSTINGS)
-            for f in sorted(Path(d).rglob("*.parquet"))
-        ],
-        schema=_arrow_blocks_schema(),
-        format="parquet",
+    return pads.dataset(files, schema=schema, format="parquet").to_batches(
+        fragment_scan_options=pads.ParquetFragmentScanOptions(pre_buffer=False),
+        **kwargs,
     )
-    salts = pc.unique(
-        blocks.to_table(
-            columns=["salt"], filter=pc.field("salt") >= COMPACTED_SALT_BASE
-        )["salt"]
-    )
-    old_salts = np.sort(salts.to_numpy().astype(np.int64))
-    _check_salt_space(old_salts)
-    writer = make_direct_block_writer(
-        partial(remap_salts, old_salts=old_salts),
-        gen_dirs[IndexCatalog.POSTINGS],
-        nb,
-    )
-    stats = [r for rb in writer(blocks.to_batches()) for r in rb.to_pylist()]
-
-    # -- dictionary: df/cf summed per term_id, as dictionary_view -------------
-    dict_schema = pa.schema([
-        ("term_id", pa.int64()), ("df", pa.int64()), ("cf", pa.int64()),
-        ("term", pa.string()), ("ford", pa.int32()), ("field", pa.string()),
-    ])
-    folded = (
-        read(IndexCatalog.DICTIONARY, dict_schema)
-        .group_by("term_id")
-        .aggregate([
-            ("df", "sum"), ("cf", "sum"), ("term", "max"), ("ford", "max"),
-            ("field", "max"),
-        ])
-        .rename_columns(dict_schema.names)
-    )
-    bucket = np.mod(folded["term_id"].to_numpy(), nb)
-    for b in np.unique(bucket).tolist():
-        out = Path(gen_dirs[IndexCatalog.DICTIONARY], f"bucket={b}")
-        out.mkdir(parents=True)
-        _write_dictionary_file(
-            folded.filter(pa.array(bucket == b)), out / "part-00000.parquet"
-        )
-
-    # -- docmap, and docs minus the tombstoned ords (as docs_view) -----------
-    docmap = read(
-        IndexCatalog.DOCMAP,
-        pa.schema([
-            ("band", pa.int32()), ("ford", pa.int32()), ("blk_seq", pa.int32()),
-            ("n", pa.int32()), ("payload", pa.binary()),
-        ]),
-    )
-    docs = drop_tombstoned(read(IndexCatalog.DOCS), docmap)
-    for table, tbl in ((IndexCatalog.DOCS, docs), (IndexCatalog.DOCMAP, docmap)):
-        out = Path(gen_dirs[table])
-        out.mkdir(parents=True)
-        pq.write_table(tbl, out / "part-00000.parquet", compression="snappy")
-    return len(old_salts), attempts_map(stats)
 
 
-def _compact_with_spark(
-    spark: SparkSession,
-    cat: IndexCatalog,
-    config: EngineConfig,
-    gen_dirs: dict[str, str],
+def _compact_postings(
+    cat: IndexCatalog, n_buckets: int, out_dir: str
 ) -> tuple[int, dict]:
-    """Write the four compacted tables with Spark jobs.  Returns
-    (compacted salts, postings attempts map)."""
-    # the postings rewrite moves every block payload: use the same
-    # task-direct pyarrow writer as the build's merge stage instead of
-    # df.write.partitionBy("bucket") (JVM re-encode + planned-write sort,
-    # measured 4->16 efficiency 0.29 on this exact table shape); the
-    # transform feeding it renumbers this interval's delta salts densely
-    # into the compacted range (module header: keeps the salt space and
-    # the batch-seq counter bounded for the index's lifetime) and the
-    # writer re-derives bucket = term_id % n_buckets (identical to the
-    # stored column)
-    #
-    # remap domain comes from the DATA, not the manifest: every delta-era
-    # salt (>= COMPACTED_SALT_BASE) actually present in the view — earlier
+    """Stream the main and delta blocks through the salt remap into the
+    build's direct block writer, run in process.  Returns (compacted
+    salts, postings attempts map)."""
+    import pyarrow.compute as pc
+
+    schema = _arrow_blocks_schema()
+    main, *deltas = _table_dirs(cat, IndexCatalog.POSTINGS)
+    # the remap domain comes from the DATA, not the manifest: every
+    # delta-era salt (>= COMPACTED_SALT_BASE) present in the view — earlier
     # compacted generations in their dense slots PLUS this interval's live
     # deltas, whatever seqs they were appended at.  Sorted salt order
     # equals ord order for both (seqs are monotone within an interval;
     # dense slots are rank-assigned), so one dense order-preserving
-    # renumber is exact.  The distinct scan is bounded by the number of
-    # generations, one narrow column off a table compaction full-scans
-    # anyway.
-    old_salts = np.array(
-        sorted(
-            int(r["salt"])
-            for r in postings_view(spark, cat)
-            .where(F.col("salt") >= COMPACTED_SALT_BASE)
-            .select("salt")
-            .distinct()
-            .collect()
-        ),
-        dtype=np.int64,
-    )
+    # renumber is exact.
+    salts = [
+        np.unique(rb.column(0).to_numpy())
+        for rb in _scan(
+            _parquet_files([main] + deltas), schema, columns=["salt"],
+            filter=pc.field("salt") >= COMPACTED_SALT_BASE,
+        )
+    ]
+    old_salts = np.unique(
+        np.concatenate(salts or [np.empty(0, np.int32)])
+    ).astype(np.int64)
     _check_salt_space(old_salts)
-    block_cols = [f.name for f in _arrow_blocks_schema()]
+    # one scan per main bucket dir, then per delta batch dir, each started
+    # only when the one before is drained: a single scan over every file
+    # read ahead of the (slower) writer by up to the whole index
+    dirs = [Path(main, f"bucket={b}") for b in range(n_buckets)] + deltas
+    blocks = (rb for d in dirs for rb in _scan(_parquet_files([d]), schema))
     writer = make_direct_block_writer(
-        partial(remap_salts, old_salts=old_salts),
-        gen_dirs[IndexCatalog.POSTINGS],
-        config.n_term_buckets,
+        partial(remap_salts, old_salts=old_salts), out_dir, n_buckets
     )
-    w_stats = (
-        postings_view(spark, cat)
-        .select(*block_cols)
-        .mapInArrow(writer, WRITER_STATS_SCHEMA)
-        .collect()
+    stats = [r for rb in writer(blocks) for r in rb.to_pylist()]
+    return len(old_salts), attempts_map(stats)
+
+
+def _compact_dictionary(cat: IndexCatalog, n_buckets: int, out_dir: str) -> None:
+    """Fold the dictionary one bucket at a time: the main ``bucket=<b>``
+    dir plus the committed delta rows with ``term_id % n_buckets == b``
+    (their stored ``bucket`` column), df/cf summed per term_id as
+    dictionary_view sums them.  The delta rows, one per batch term, are
+    read once; only the main table is read bucket by bucket."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    schema = pa.schema([
+        ("term_id", pa.int64()), ("df", pa.int64()), ("cf", pa.int64()),
+        ("term", pa.string()), ("ford", pa.int32()), ("field", pa.string()),
+    ])
+    main, *deltas = _table_dirs(cat, IndexCatalog.DICTIONARY)
+    delta_schema = schema.append(pa.field("bucket", pa.int64()))
+    delta = pa.Table.from_batches(
+        _scan(_parquet_files(deltas), delta_schema), delta_schema
     )
-    dictionary_view(spark, cat, config).repartition(
-        2 * config.n_term_buckets, "bucket"
-    ).write.mode("overwrite").partitionBy("bucket").parquet(
-        gen_dirs[IndexCatalog.DICTIONARY]
+    for b in range(n_buckets):
+        main_b = _scan(_parquet_files([Path(main, f"bucket={b}")]), schema)
+        rows = pa.concat_tables([
+            pa.Table.from_batches(main_b, schema),
+            delta.filter(pc.equal(delta["bucket"], b)).select(schema.names),
+        ])
+        # single-threaded: rows keep first-appearance order (main before
+        # deltas), so a rerun writes the same bytes
+        folded = (
+            rows.group_by("term_id", use_threads=False)
+            .aggregate([
+                ("df", "sum"), ("cf", "sum"), ("term", "max"),
+                ("ford", "max"), ("field", "max"),
+            ])
+            .rename_columns(schema.names)
+        )
+        if folded.num_rows:
+            out = Path(out_dir, f"bucket={b}")
+            out.mkdir(parents=True)
+            _write_dictionary_file(folded, out / "part-00000.parquet")
+
+
+def _compact_docs(cat: IndexCatalog, docs_dir: str, docmap_dir: str) -> None:
+    """Stream docmap, and docs minus the tombstoned ords (as docs_view), by
+    record batch into one file each.  The docs writer takes one schema
+    unified across the main and delta footers (deltas may lack columns)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    dm_schema = pa.schema([
+        ("band", pa.int32()), ("ford", pa.int32()), ("blk_seq", pa.int32()),
+        ("n", pa.int32()), ("payload", pa.binary()),
+    ])
+    dm_files = _parquet_files(_table_dirs(cat, IndexCatalog.DOCMAP))
+    tomb = pa.Table.from_batches(
+        _scan(dm_files, dm_schema, filter=pc.field("ford") == TOMBSTONE_FORD),
+        dm_schema,
     )
-    # docs keep tombstoned rows OUT (they are gone from docmap's live view
-    # only logically; the ord -> doc_id arrays still cover dead ords, which
-    # the evaluator never surfaces because tombstone rows persist)
-    docs_view(spark, cat).write.mode("overwrite").parquet(
-        gen_dirs[IndexCatalog.DOCS]
+    _write_batches(_scan(dm_files, dm_schema), dm_schema, docmap_dir)
+    files = _parquet_files(_table_dirs(cat, IndexCatalog.DOCS))
+    schema = pa.unify_schemas(
+        [pq.read_schema(f) for f in files], promote_options="permissive"
     )
-    docmap_view(spark, cat).write.mode("overwrite").parquet(
-        gen_dirs[IndexCatalog.DOCMAP]
+    _write_batches(
+        (drop_tombstoned(rb, tomb) for rb in _scan(files, schema)),
+        schema,
+        docs_dir,
     )
-    return len(old_salts), attempts_map(w_stats)
+
+
+def _write_batches(batches, schema, out_dir: str) -> None:
+    """Write record batches to one parquet file under ``out_dir``, a row
+    group per ``_DIRECT_WRITE_FLUSH_BYTES`` buffered (so a small table is
+    one row group, as a single write_table would make it)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    out = Path(out_dir)
+    out.mkdir(parents=True)
+    buf, size = [], 0
+    with pq.ParquetWriter(
+        out / "part-00000.parquet", schema, compression="snappy"
+    ) as w:
+        for rb in batches:
+            buf.append(rb)
+            size += rb.nbytes
+            if size >= _DIRECT_WRITE_FLUSH_BYTES:
+                w.write_table(pa.Table.from_batches(buf, schema))
+                buf, size = [], 0
+        if buf:
+            w.write_table(pa.Table.from_batches(buf, schema))

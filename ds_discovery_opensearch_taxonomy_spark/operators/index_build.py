@@ -25,7 +25,8 @@ Scale levers (north rule):
   globally mergeable by concatenation (no k-way merge at read time);
 * blocks never cross an eval-band boundary (ord prefix), so query-time
   per-(category, band) grouping is exact;
-* per-bucket manifest commits give kill/resume with lineage + metrics.
+* per-stage manifest commits give kill/resume with lineage + metrics;
+  the postings stage is one job, so a killed one reruns whole.
 """
 
 from __future__ import annotations
@@ -1363,10 +1364,11 @@ def _reconcile_dir(bdir, expected: dict[int, int]) -> None:
 def _direct_file_key(f) -> tuple[int, int] | None:
     """(pid, attempt) from a DIRECT-writer file name, or None for any
     other file.  Direct writers name exactly ``part-<pid>-<attempt>
-    .parquet``; anything else (a JVM-committer ``part-00000-<uuid>-c000
-    .snappy.parquet``, a driver-side ``part-00000.parquet``) is not ours
-    to reconcile — parsing it as ours would either crash reader open
-    (ValueError on the uuid) or delete live data ("unknown attempt")."""
+    .parquet``; anything else (a driver-side ``part-00000.parquet``, or a
+    JVM-committer ``part-00000-<uuid>-c000.snappy.parquet`` should one
+    ever land in a reconciled dir) is not ours to reconcile — parsing it
+    as ours would either crash reader open (ValueError on the uuid) or
+    delete live data ("unknown attempt")."""
     parts = f.stem.split("-")
     if len(parts) != 3:
         return None
@@ -1404,8 +1406,8 @@ def reconcile_from_manifest(cat) -> None:
     file AFTER the post-job sweep ran; any reader opened later (same
     Spark app — executors of a dead app die with it, so crash-restart
     cannot produce new zombies) prunes it here before the first scan.
-    Postings written by the JVM committer (``bucket_resume`` builds)
-    persist no map: the committer already handles speculation."""
+    Every postings generation is written by the direct writer (the build's
+    merge job, or a compaction run in process) and persists its map."""
     post = cat.get_meta("postings_attempts")
     if post is not None:
         _reconcile_direct_write(cat.path("postings"), _int_keys(post))
@@ -1418,8 +1420,9 @@ def _reprune_staged(cat) -> None:
     also calls this right before each overlapped consumer (docmap,
     dictionary, postings) lists those directories: a speculative tokenize
     attempt killed mid-task can os.rename its final AFTER the post-job
-    sweep.  JVM-written docs generations (compaction) are untouched:
-    _direct_file_key rejects committer file names."""
+    sweep.  A compacted docs generation (one driver-written
+    ``part-00000.parquet``) is untouched: _direct_file_key rejects any
+    name the direct writers do not make."""
     from pathlib import Path
 
     stg = _int_keys(cat.manifest()["stages"]["staging"]["metrics"]["attempts"])
@@ -1648,21 +1651,17 @@ def make_direct_staging_writer(inner, out_dir: str, n_buckets: int):
 _MERGE_TARGET_BYTES = 256 << 20
 
 
-def _merge_partitions(
-    spark: SparkSession, cat: IndexCatalog, config: EngineConfig,
-    frac: float = 1.0,
-) -> int:
+def _merge_partitions(spark: SparkSession, cat: IndexCatalog) -> int:
     """Partition count for the (term_id, salt) merge shuffle: scaled from
-    committed staging bytes (``frac`` = share of staging this job reads,
-    e.g. 1/n_term_buckets for a single-bucket resume), floored at 2x cores
-    so small builds still use the whole cluster."""
+    committed staging bytes, floored at 2x cores so small builds still use
+    the whole cluster."""
     staging_bytes = (
         cat.manifest()["stages"]
         .get("staging", {})
         .get("metrics", {})
         .get("bytes")
     ) or cat.table_bytes(IndexCatalog.STAGING)
-    by_bytes = -(-int(staging_bytes * frac) // _MERGE_TARGET_BYTES)
+    by_bytes = -(-int(staging_bytes) // _MERGE_TARGET_BYTES)
     return max(2 * spark.sparkContext.defaultParallelism, 16, by_bytes)
 
 
@@ -1688,7 +1687,7 @@ def _build_postings_single_job(
         staged_all.groupBy("term_id").agg(F.sum("n").alias("df")), config
     )
     salted = _salt_packed_runs(staged_all, heavy, ord_bits)
-    n_parts = _merge_partitions(spark, cat, config)
+    n_parts = _merge_partitions(spark, cat)
     nb = config.n_term_buckets
     # fresh output dir: the job is all-or-nothing at the manifest level
     # (commit_bucket below), so a leftover partial tree is always garbage
@@ -1753,7 +1752,7 @@ def build_index(
     config: EngineConfig | None = None,
     resume: bool = True,
 ) -> IndexCatalog:
-    """Full index build with per-bucket checkpoint/resume."""
+    """Full index build with per-stage checkpoint/resume."""
     config = config or EngineConfig()
     cat = IndexCatalog(out_dir)
     # an index left by another on-disk format is never resumed (its
@@ -1814,11 +1813,10 @@ def build_index(
         # postings build) full-scans staging, so hive-partitioning by
         # bucket bought nothing there while costing a sort-based
         # dynamic-partition write (measured 45.6 s vs 6.2 s plain at 25k
-        # docs).  The rare ``bucket_resume`` path filters on the bucket
-        # COLUMN instead (row-group stats).  Tasks write their own parquet
-        # (make_direct_staging_writer) and return per-field cf sums —
-        # sum(cf) over a field's kind-0 rows == sum of per-doc field
-        # lengths, so avgdl needs no second pass over staging at all.
+        # docs).  Tasks write their own parquet (make_direct_staging_writer)
+        # and return per-field cf sums — sum(cf) over a field's kind-0 rows
+        # == sum of per-doc field lengths, so avgdl needs no second pass
+        # over staging at all.
         import shutil as _shutil
         import time as _time
         from pathlib import Path as _Path
@@ -2030,97 +2028,22 @@ def build_index(
 
     postings_err = None
     try:
-        # -- stage 5: per-bucket postings build (resumable loop) ----------------
-        # one Spark job per bucket; metrics come from Observation (no read-back)
-        avgdl_ord = np.array([avgdl.get(fn, 1.0) for fn in field_names], dtype=np.float64)
-        ord_bits = ord_bits_of(n_docs)
-        done = cat.committed_buckets()
-        todo = [b for b in range(config.n_term_buckets) if b not in done]
-        builder = make_merge_builder(
-            float(n_docs), avgdl_ord, config.k1, config.b,
-            config.block_size, ord_shift,
-        )
-        if todo:
+        # -- stage 5: postings, ONE Spark job for every bucket ------------------
+        # resume granularity is the whole stage: a build killed between two
+        # bucket commits rewrites every bucket (see _build_postings_single_job)
+        if len(cat.committed_buckets()) < config.n_term_buckets:
+            avgdl_ord = np.array(
+                [avgdl.get(fn, 1.0) for fn in field_names], dtype=np.float64
+            )
+            builder = make_merge_builder(
+                float(n_docs), avgdl_ord, config.k1, config.b,
+                config.block_size, ord_shift,
+            )
             _reprune_staged(cat)
-        if todo and not config.bucket_resume:
             _build_postings_single_job(
-                spark, cat, config, builder, ord_bits, dict_ready=dict_ready
+                spark, cat, config, builder, ord_bits_of(n_docs),
+                dict_ready=dict_ready,
             )
-            todo = []
-        if todo:
-            import threading
-            from concurrent.futures import ThreadPoolExecutor
-
-            # the per-bucket loop reads the dictionary TABLE (per-bucket
-            # heavy maps) — join the overlapped stage before starting
-            dict_ready()
-
-            staged_all = spark.read.parquet(cat.path(IndexCatalog.STAGING)).where(
-                F.col("kind") == 0
-            )
-            dict_all = cat.read(spark, IndexCatalog.DICTIONARY)
-            terms_per_bucket = {
-                int(r["bucket"]): int(r["n"])
-                for r in dict_all.groupBy("bucket").agg(F.count("*").alias("n")).collect()
-            }
-            manifest_lock = threading.Lock()
-
-            def do_bucket(bucket: int) -> None:
-                # ALL-NUMERIC from here on: parquet column pruning drops the
-                # term string column of staging; the field ordinal rides
-                # staging and only the bounded heavy-term salt map is applied
-                staged_b = staged_all.where(F.col("bucket") == bucket)
-                n_terms = terms_per_bucket.get(bucket, 0)
-                heavy_b = _heavy_salt_map(
-                    dict_all.where(F.col("bucket") == bucket), config
-                )
-                salted = _salt_packed_runs(staged_b, heavy_b, ord_bits)
-                # enough tasks per job that concurrent bucket jobs can fill
-                # freed slots (finer granularity costs little; too-coarse tasks
-                # leave cores idle during each job's tail); data-scaled so
-                # per-task memory stays bounded at any corpus size
-                n_parts = max(
-                    spark.sparkContext.defaultParallelism, 8,
-                    _merge_partitions(
-                        spark, cat, config, frac=1.0 / config.n_term_buckets
-                    ),
-                )
-                blocks = (
-                    salted.repartition(n_parts, "term_id", "salt")
-                    .mapInArrow(builder, BLOCKS_SCHEMA)
-                )
-                obs = Observation(f"bucket_{bucket}")
-                blocks = blocks.observe(
-                    obs, F.count(F.lit(1)).alias("blocks"), F.sum("n").alias("postings")
-                )
-                cat.write(blocks, IndexCatalog.POSTINGS, bucket=bucket)
-                m = obs.get
-                with manifest_lock:
-                    cat.commit_bucket(
-                        bucket,
-                        {
-                            "blocks": int(m["blocks"]),
-                            "postings": int(m["postings"]),
-                            "terms": int(n_terms),
-                            "bytes": cat.table_bytes(
-                                f"{IndexCatalog.POSTINGS}/bucket={bucket}"
-                            ),
-                        },
-                    )
-
-            # concurrent bucket jobs (the reference runs 5 categorisation
-            # batches concurrently, FullReindexCategoriser.cs:87-213) — Spark's
-            # scheduler interleaves them, hiding each job's serial phases;
-            # commits stay per-bucket, so kill/resume granularity is unchanged
-            workers = min(config.build_parallelism, len(todo))
-            if workers <= 1:
-                for bkt in todo:
-                    do_bucket(bkt)
-            else:
-                with ThreadPoolExecutor(max_workers=workers) as ex:
-                    futures = [ex.submit(do_bucket, bkt) for bkt in todo]
-                    for f in futures:
-                        f.result()
     except Exception as e:
         postings_err = e
     # join + commit any still-overlapped background stages (dictionary is

@@ -60,6 +60,7 @@ from pyspark.sql import types as T
 from ds_discovery_opensearch_taxonomy_spark.config import EngineConfig
 from ds_discovery_opensearch_taxonomy_spark.functions import codec, scoring
 from ds_discovery_opensearch_taxonomy_spark.functions.vtokenize import _ragged_gather
+from ds_discovery_opensearch_taxonomy_spark.operators import index_append
 from ds_discovery_opensearch_taxonomy_spark.plans import queryparser as qp
 from ds_discovery_opensearch_taxonomy_spark.sources.catalog import IndexCatalog
 
@@ -108,9 +109,6 @@ class IndexReader:
         #: ord -> band mapping (band = ord >> ord_shift); an index property
         self.ord_bits = int(meta["ord_bits"])
         self.ord_shift = max(self.ord_bits - self.band_bits, 0)
-        #: appends since the build: main tables are read through union views
-        #: (operators/index_append.py) until a compaction folds them in
-        self.has_deltas = bool(self._delta_seqs)
         #: block-max bounds are encoded with the BUILD-TIME avgdl; appends
         #: drift the live avgdl, and tf_norm is monotone in avgdl with
         #: ratio <= live/encoded — multiplying bounds by this per-field
@@ -162,6 +160,9 @@ class IndexReader:
         self._snapshot_lock = threading.Lock()
 
     # -- tables -------------------------------------------------------------
+    # all four read through the live views (operators/index_append.py):
+    # they fold in committed deltas, if any, and read with explicit
+    # schemas, so building one starts no footer-inference job
 
     def dictionary(self) -> DataFrame:
         """Term dictionary (field, term, term_id, df, cf, bucket) — persisted
@@ -169,17 +170,9 @@ class IndexReader:
         is ~|vocab| rows (executors cache their slices; spills to disk at
         real vocabulary scale)."""
         if not hasattr(self, "_dictionary_df"):
-            if self.has_deltas:
-                from ds_discovery_opensearch_taxonomy_spark.operators import (
-                    index_append,
-                )
-
-                df = index_append.dictionary_view(
-                    self.spark, self.cat, self.config
-                )
-            else:
-                df = self.cat.read(self.spark, IndexCatalog.DICTIONARY)
-            self._dictionary_df = df.persist()
+            self._dictionary_df = index_append.dictionary_view(
+                self.spark, self.cat, self.config
+            ).persist()
         return self._dictionary_df
 
     def postings(self) -> DataFrame:
@@ -188,32 +181,12 @@ class IndexReader:
         call (~80 ms), which dominated warm single-query latency.  The
         index snapshot a reader binds to is immutable, so reuse is safe."""
         if not hasattr(self, "_postings_df"):
-            if self.has_deltas:
-                from ds_discovery_opensearch_taxonomy_spark.operators import (
-                    index_append,
-                )
-
-                self._postings_df = index_append.postings_view(
-                    self.spark, self.cat
-                )
-            else:
-                self._postings_df = self.cat.read(
-                    self.spark, IndexCatalog.POSTINGS
-                )
+            self._postings_df = index_append.postings_view(self.spark, self.cat)
         return self._postings_df
 
     def docs(self) -> DataFrame:
         if not hasattr(self, "_docs_df"):
-            if self.has_deltas:
-                from ds_discovery_opensearch_taxonomy_spark.operators import (
-                    index_append,
-                )
-
-                self._docs_df = index_append.docs_view(self.spark, self.cat)
-            else:
-                self._docs_df = self.spark.read.parquet(
-                    self.cat.path(IndexCatalog.DOCS)
-                )
+            self._docs_df = index_append.docs_view(self.spark, self.cat)
         return self._docs_df
 
     def docmap(self) -> DataFrame:
@@ -223,15 +196,9 @@ class IndexReader:
         per reader — every query run ships these into its eval tasks, and
         the table is ~16 bytes/doc."""
         if not hasattr(self, "_docmap_df"):
-            if self.has_deltas:
-                from ds_discovery_opensearch_taxonomy_spark.operators import (
-                    index_append,
-                )
-
-                df = index_append.docmap_view(self.spark, self.cat)
-            else:
-                df = self.spark.read.parquet(self.cat.path(IndexCatalog.DOCMAP))
-            self._docmap_df = df.persist()
+            self._docmap_df = index_append.docmap_view(
+                self.spark, self.cat
+            ).persist()
         return self._docmap_df
 
     def snapshot(self) -> "DriverSnapshot | None":
@@ -653,10 +620,6 @@ class DriverSnapshot:
     def load(cls, paths: dict, seqs: list[int]) -> "DriverSnapshot | None":
         """Read the three tables with pyarrow, or None when their files
         take more than ``LOCAL_SNAPSHOT_MAX_BYTES``."""
-        from ds_discovery_opensearch_taxonomy_spark.operators.index_append import (
-            drop_tombstoned,
-        )
-
         tables = (IndexCatalog.DICTIONARY, IndexCatalog.DOCS, IndexCatalog.DOCMAP)
         size = sum(
             _dir_bytes(d) for t in tables for d in _table_dirs(paths, seqs, t)
@@ -681,7 +644,7 @@ class DriverSnapshot:
             ])
         )
         docmap = read(IndexCatalog.DOCMAP)
-        docs = drop_tombstoned(read(IndexCatalog.DOCS), docmap)
+        docs = index_append.drop_tombstoned(read(IndexCatalog.DOCS), docmap)
         return cls(paths, seqs, dictionary, docs, docmap)
 
     # -- compile --------------------------------------------------------------

@@ -1,10 +1,10 @@
 """Index catalog: manifest-committed parquet tables with per-bucket lineage.
 
 Stands in for the Iceberg catalog named by the north rule: each table is a
-parquet directory; the build commits term-hash buckets one at a time by
-atomically rewriting ``manifest.json`` (temp file + rename), recording
-per-bucket lineage + metrics (docs/terms/bytes).  A killed build resumes by
-skipping committed buckets (SURVEY.md §2.2 I7).  On a real cluster the same
+parquet directory; the build commits each stage, and each term-hash bucket
+of the postings, by atomically rewriting ``manifest.json`` (temp file +
+rename), recording per-bucket lineage + metrics (docs/terms/bytes).  A
+killed build resumes by skipping committed stages (SURVEY.md §2.2 I7).  On a real cluster the same
 layout maps 1:1 onto Iceberg partitions + snapshot commits (``MERGE INTO``
 for the upsert sink).
 """
@@ -287,26 +287,20 @@ class IndexCatalog:
         gen = m.get("meta", {}).get("gen", {}).get(table)
         return table if gen is None else f"{table}__g{int(gen)}"
 
-    def path(
-        self, table: str, bucket: int | None = None, manifest: dict | None = None
-    ) -> str:
-        p = self.root / self._resolve(table, manifest)
-        if bucket is not None:
-            p = p / f"bucket={bucket}"
-        return str(p)
+    def path(self, table: str, manifest: dict | None = None) -> str:
+        return str(self.root / self._resolve(table, manifest))
 
     def write(
         self,
         df: DataFrame,
         table: str,
-        bucket: int | None = None,
         mode: str = "overwrite",
         partition_by: list[str] | None = None,
     ) -> None:
         w = df.write.mode(mode)
         if partition_by:
             w = w.partitionBy(*partition_by)
-        w.parquet(self.path(table, bucket))
+        w.parquet(self.path(table))
 
     def read(self, spark: SparkSession, table: str, schema=None) -> DataFrame:
         """One table as a DataFrame; a ``schema`` (partition column
@@ -314,10 +308,10 @@ class IndexCatalog:
         p = self.root / self._resolve(table)
         reader = spark.read if schema is None else spark.read.schema(schema)
         if table in (self.POSTINGS, self.DICTIONARY) and not (p / "_SUCCESS").exists():
-            # bucket-partitioned directory tree, written bucket-at-a-time;
-            # enumerate real dirs (a literal "bucket=*" glob path makes
-            # Spark's FileStreamSink metadata probe log a spurious
-            # FileNotFoundException stack on every read)
+            # bucket-partitioned tree written without the JVM committer
+            # (no _SUCCESS); enumerate real dirs (a literal "bucket=*" glob
+            # path makes Spark's FileStreamSink metadata probe log a
+            # spurious FileNotFoundException stack on every read)
             parts = sorted(
                 (str(d) for d in p.glob("bucket=*") if d.is_dir()),
                 key=lambda s: int(s.rsplit("=", 1)[1]),

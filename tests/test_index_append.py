@@ -70,21 +70,6 @@ def appended(spark, tmp_path_factory):
     return eng, oracle, rows
 
 
-def _on_both_paths(monkeypatch):
-    """Yield "driver", then "spark", with the compaction cap set so that a
-    test index compacts on that path (every test index is far below the
-    default cap; a cap of -1 sends it to Spark)."""
-    from ds_discovery_opensearch_taxonomy_spark.operators import index_append
-
-    for path, cap in (
-        ("driver", index_append.DRIVER_COMPACT_MAX_BYTES),
-        ("spark", -1),
-    ):
-        with monkeypatch.context() as m:
-            m.setattr(index_append, "DRIVER_COMPACT_MAX_BYTES", cap)
-            yield path
-
-
 def _parity(spark, eng, oracle, queries, scored, top_k=None):
     from ds_discovery_opensearch_taxonomy_spark.plans.queryparser import parse_query
 
@@ -199,37 +184,30 @@ def test_update_supersedes_old_version(spark, tmp_path_factory):
     assert eng.categorise_all().count() == 60
 
 
-def test_compaction_preserves_results(appended, spark, tmp_path, monkeypatch):
+def test_compaction_preserves_results(appended, spark, tmp_path):
     """compact() folds every delta into generation-versioned main tables:
-    same match/score results, no delta batches left, delta dirs gone — on
-    both compaction paths."""
+    same match/score results, no delta batches left, delta dirs gone."""
     src, oracle, _ = appended
-    for path in _on_both_paths(monkeypatch):
-        root = _copy_index(src.reader.cat.root, tmp_path / path)
-        eng = TaxonomyEngine(spark, str(root), TEST_CONFIG)
-        before = {
-            (r["category_id"], r["doc_id"]): r["score"]
-            for r in run_categories(
-                spark, eng.reader, QUERIES, scored=True
-            ).collect()
-        }
-        out = eng.compact()
-        assert out is not None and out["batches_compacted"] >= 1
-        assert out["path"] == path
-        assert not eng.reader.cat.deltas()
-        assert not (eng.reader.cat.root / "delta").exists() or not any(
-            (eng.reader.cat.root / "delta").rglob("*.parquet")
-        )
-        after = {
-            (r["category_id"], r["doc_id"]): r["score"]
-            for r in run_categories(
-                spark, eng.reader, QUERIES, scored=True
-            ).collect()
-        }
-        assert before == after
-        # still exact vs the oracle, and a further append still works
-        _parity(spark, eng, oracle, QUERIES[:2], scored=True)
-        assert eng.compact() is None  # nothing left to compact
+    root = _copy_index(src.reader.cat.root, tmp_path / "idx")
+    eng = TaxonomyEngine(spark, str(root), TEST_CONFIG)
+    before = {
+        (r["category_id"], r["doc_id"]): r["score"]
+        for r in run_categories(spark, eng.reader, QUERIES, scored=True).collect()
+    }
+    out = eng.compact()
+    assert out is not None and out["batches_compacted"] >= 1
+    assert not eng.reader.cat.deltas()
+    assert not (eng.reader.cat.root / "delta").exists() or not any(
+        (eng.reader.cat.root / "delta").rglob("*.parquet")
+    )
+    after = {
+        (r["category_id"], r["doc_id"]): r["score"]
+        for r in run_categories(spark, eng.reader, QUERIES, scored=True).collect()
+    }
+    assert before == after
+    # still exact vs the oracle, and a further append still works
+    _parity(spark, eng, oracle, QUERIES[:2], scored=True)
+    assert eng.compact() is None  # nothing left to compact
 
 
 def test_alignment_guard_rejects_partition_drift(spark):
@@ -250,18 +228,12 @@ def test_alignment_guard_rejects_partition_drift(spark):
         bad.count()
 
 
-def test_append_compact_append_chain(spark, tmp_path_factory, monkeypatch):
+def test_append_compact_append_chain(spark, tmp_path_factory):
     """The decode order must stay exact across a compaction boundary:
     compaction renumbers the folded batches' delta salts densely into the
     compacted range [2^16, 2^20) and RESETS the batch-seq counter in the
     same atomic commit, so a post-compaction append's fresh seq-0 salt
-    (2^20) is again above every salt in the main table.  Both compaction
-    paths."""
-    for path in _on_both_paths(monkeypatch):
-        _append_compact_append_chain(spark, tmp_path_factory, path)
-
-
-def _append_compact_append_chain(spark, tmp_path_factory, path):
+    (2^20) is again above every salt in the main table."""
     out = tmp_path_factory.mktemp("chain")
     full = with_doc_ids(synthesize_corpus(spark, 240))
     b0 = with_doc_ids(synthesize_corpus(spark, 120))
@@ -275,7 +247,7 @@ def _append_compact_append_chain(spark, tmp_path_factory, path):
     eng = TaxonomyEngine(spark, str(out), TEST_CONFIG)
     assert eng.append_docs(b1, batch_key="c1", auto_compact=False) is not None
     assert eng.reader.cat.next_delta_seq() == 1
-    assert eng.compact()["path"] == path
+    assert eng.compact() is not None
     # the seq counter reset with the salt renumber (atomic manifest write)
     assert eng.reader.cat.next_delta_seq() == 0
     assert int(eng.reader.cat.get_meta("compacted_salts")) == 1
@@ -311,7 +283,7 @@ def _append_compact_append_chain(spark, tmp_path_factory, path):
     assert eng.reader.docs().count() == 240
     # compact once more and stay exact: the second generation lands in the
     # next dense slot, previously compacted salts keep theirs
-    assert eng.compact()["path"] == path
+    assert eng.compact() is not None
     assert int(eng.reader.cat.get_meta("compacted_salts")) == 2
     assert eng.reader.cat.next_delta_seq() == 0
     salts = [
@@ -449,19 +421,12 @@ def test_next_ord_commit_is_atomic_and_self_repairing(spark, tmp_path_factory):
     _parity(spark, eng, oracle, QUERIES[:3], scored=True)
 
 
-def test_compaction_remaps_arbitrary_salt_domains(
-    spark, tmp_path_factory, monkeypatch
-):
+def test_compaction_remaps_arbitrary_salt_domains(spark, tmp_path_factory):
     """The remap domain is derived from the DATA (distinct salts >= 2^16
     in the view), not assumed dense-from-base — so any seq drift
     renumbers correctly.  Emulated by starting the seq counter at 5: the
     folded salts are high and non-dense, and must land at the dense base
-    with the counter reset.  Both compaction paths."""
-    for path in _on_both_paths(monkeypatch):
-        _compaction_remaps_arbitrary_salt_domains(spark, tmp_path_factory, path)
-
-
-def _compaction_remaps_arbitrary_salt_domains(spark, tmp_path_factory, path):
+    with the counter reset."""
     from ds_discovery_opensearch_taxonomy_spark.operators.index_append import (
         COMPACTED_SALT_BASE,
         DELTA_SALT_BASE,
@@ -482,7 +447,7 @@ def _compaction_remaps_arbitrary_salt_domains(spark, tmp_path_factory, path):
         for r in eng.reader.postings().select("salt").distinct().collect()
     }
     assert delta_salt(5) in salts
-    assert eng.compact()["path"] == path
+    assert eng.compact() is not None
     assert eng.reader.cat.next_delta_seq() == 0
     salts = {
         int(r["salt"])
@@ -532,6 +497,34 @@ def default_index(spark, tmp_path_factory):
     out = tmp_path_factory.mktemp("default_cfg") / "idx"
     build_index(spark, with_doc_ids(synthesize_corpus(spark, 60)), str(out))
     return out
+
+
+def test_reader_tables_of_a_no_delta_index_start_no_spark_job(
+    spark, default_index, monkeypatch
+):
+    """IndexReader reads its four tables through the live views, whose
+    explicit schemas spare Spark a footer-inference job per table, deltas
+    or not.  Each reads the same rows as a schema-inferring read."""
+    from ds_discovery_opensearch_taxonomy_spark.operators import search
+
+    monkeypatch.setattr(search, "LOCAL_SNAPSHOT_MAX_BYTES", -1)
+    reader = search.IndexReader(spark, str(default_index))
+    assert not reader.cat.deltas() and reader.snapshot() is None
+    first = _last_job(spark)
+    frames = {
+        IndexCatalog.DICTIONARY: reader.dictionary(),
+        IndexCatalog.POSTINGS: reader.postings(),
+        IndexCatalog.DOCS: reader.docs(),
+        IndexCatalog.DOCMAP: reader.docmap(),
+    }
+    assert _last_job(spark) == first
+    for table, df in frames.items():
+        inferred = spark.read.parquet(reader.cat.path(table))
+        assert sorted(df.columns) == sorted(inferred.columns), table
+        want = sorted(map(tuple, inferred.collect()), key=repr)
+        got = sorted(map(tuple, df.select(*inferred.columns).collect()), key=repr)
+        assert want and got == want, table
+    reader.unpersist()
 
 
 def test_build_writes_every_key_readers_and_appends_require(default_index):
@@ -671,21 +664,13 @@ def F_col_mod3(df):
     return F.pmod(F.col("doc_id"), F.lit(3))
 
 
-def test_reader_open_prunes_zombie_attempt_files(
-    spark, tmp_path_factory, monkeypatch
-):
+def test_reader_open_prunes_zombie_attempt_files(spark, tmp_path_factory):
     """Cluster-speculation defense-in-depth: the build persists the
     committed (pid -> attempt) maps for both direct-write tables, and
     IndexReader open re-prunes any file those maps don't know — a zombie
     speculative attempt can os.rename its output AFTER the post-job sweep,
     and an unpruned duplicate would silently double posting blocks at
-    decode.  Compaction must flip the map with the generation pointer, on
-    both compaction paths."""
-    for path in _on_both_paths(monkeypatch):
-        _reader_open_prunes_zombie_attempt_files(spark, tmp_path_factory, path)
-
-
-def _reader_open_prunes_zombie_attempt_files(spark, tmp_path_factory, path):
+    decode.  Compaction must flip the map with the generation pointer."""
     from pathlib import Path
 
     out = tmp_path_factory.mktemp("zombie")
@@ -723,7 +708,7 @@ def _reader_open_prunes_zombie_attempt_files(spark, tmp_path_factory, path):
         "zb-1",
         auto_compact=False,
     )
-    assert eng.compact()["path"] == path
+    assert eng.compact() is not None
     cat2 = eng.reader.cat
     atts2 = cat2.get_meta("postings_attempts")
     assert atts2 is not None
@@ -1042,7 +1027,7 @@ def test_compaction_ratio_measures_against_compacted_size(
 
 
 # --------------------------------------------------------------------------
-# Driver vs Spark compaction
+# Compaction against the live views
 # --------------------------------------------------------------------------
 
 
@@ -1080,20 +1065,13 @@ def compaction_index(spark, small_index, tmp_path_factory):
     return root
 
 
-def _compact(spark, root, path, monkeypatch) -> tuple[dict, int]:
-    """compact_index on ``path`` -> (its result, the Spark jobs it ran)."""
+def _compact(spark, root) -> tuple[dict, int]:
+    """compact_index on ``root`` -> (its result, the Spark jobs it ran)."""
     from ds_discovery_opensearch_taxonomy_spark.operators import index_append
 
-    with monkeypatch.context() as m:
-        if path == "spark":
-            m.setattr(index_append, "DRIVER_COMPACT_MAX_BYTES", -1)
-        first = _last_job(spark)
-        out = index_append.compact_index(
-            spark, IndexCatalog(root), TEST_CONFIG
-        )
-        jobs = _last_job(spark) - first
-    assert out["path"] == path
-    return out, jobs
+    first = _last_job(spark)
+    out = index_append.compact_index(IndexCatalog(root), TEST_CONFIG)
+    return out, _last_job(spark) - first
 
 
 def _last_job(spark) -> int:
@@ -1148,71 +1126,78 @@ def _assert_same_compaction(spark, a, b):
         assert ma[key] == mb[key], key
 
 
+def _view_rows(df, columns) -> list:
+    return sorted((tuple(r[c] for c in columns) for r in df.collect()), key=repr)
+
+
 def test_driver_and_spark_compactions_write_identical_tables(
     spark, compaction_index, tmp_path, monkeypatch
 ):
-    """The driver compaction and the Spark one fold the same two deltas
-    (re-ingested docs, an earlier compacted generation in the view) into
-    row-identical tables and the same manifest state, and both answer
-    QUERIES as the uncompacted index does, under both fetchers.  The
-    driver runs no Spark job; the Spark plan's job count is pinned (each
-    schemaless parquet read adds a footer-inference job)."""
-    expected = _answers(spark, compaction_index, monkeypatch)
-    a = _copy_index(compaction_index, tmp_path / "driver")
-    b = _copy_index(compaction_index, tmp_path / "spark")
-    out_a, jobs_a = _compact(spark, a, "driver", monkeypatch)
-    out_b, jobs_b = _compact(spark, b, "spark", monkeypatch)
-    assert (jobs_a, jobs_b) == (0, 9)
-    assert out_a["batches_compacted"] == out_b["batches_compacted"] == 2
-    assert out_a["generations"] == out_b["generations"]
-    for root, out in ((a, out_a), (b, out_b)):
-        cat = IndexCatalog(root)
-        assert out["bytes_written"] == sum(
-            cat.table_bytes(t)
-            for t in ("postings", "dictionary", "docs", "docmap")
-        )
-    assert int(IndexCatalog(a).get_meta("compacted_salts")) == 3
-    _assert_same_compaction(spark, a, b)
-    assert _answers(spark, a, monkeypatch) == expected
-    assert _answers(spark, b, monkeypatch) == expected
-
-
-def test_compaction_path_selection_at_cap(
-    spark, compaction_index, tmp_path, monkeypatch
-):
-    """An index whose main and committed delta files take exactly
-    DRIVER_COMPACT_MAX_BYTES compacts in the driver; one byte less of cap
-    sends it to Spark."""
+    """The driver compaction folds two deltas (re-ingested docs, an earlier
+    compacted generation in the view) into tables row-identical to the
+    Spark live views of the uncompacted index — the views the Spark
+    fetcher reads, with every delta-era salt renumbered densely — records
+    the folded stats in its manifest, answers QUERIES as the uncompacted
+    index does under both fetchers, and runs no Spark job."""
     from ds_discovery_opensearch_taxonomy_spark.operators import index_append
 
-    cat = IndexCatalog(compaction_index)
-    dirs = [
-        cat.path(t) for t in ("postings", "dictionary", "docs", "docmap")
-    ] + [
-        f"{cat.path(t)}/batch={s}"
-        for t in ("delta/blocks", "delta/dictionary", "delta/docs", "delta/docmap")
-        for s in cat.delta_seqs()
-    ]
-    size = sum(
-        f.stat().st_size for d in dirs for f in Path(d).rglob("*.parquet")
+    expected = _answers(spark, compaction_index, monkeypatch)
+    root = _copy_index(compaction_index, tmp_path / "idx")
+    cat = IndexCatalog(root)
+    views = {
+        IndexCatalog.POSTINGS: index_append.postings_view(spark, cat),
+        IndexCatalog.DICTIONARY: index_append.dictionary_view(
+            spark, cat, TEST_CONFIG
+        ),
+        IndexCatalog.DOCS: index_append.docs_view(spark, cat),
+        IndexCatalog.DOCMAP: index_append.docmap_view(spark, cat),
+    }
+    columns = {t: sorted(df.columns) for t, df in views.items()}
+    want = {t: _view_rows(df, columns[t]) for t, df in views.items()}
+    stats = index_append._stats_totals(cat, [f.name for f in TEST_CONFIG.fields])
+
+    out, jobs = _compact(spark, root)
+    assert jobs == 0
+    assert out["batches_compacted"] == 2
+    assert out["bytes_written"] == sum(
+        cat.table_bytes(t) for t in ("postings", "dictionary", "docs", "docmap")
     )
-    for cap, path in ((size, "driver"), (size - 1, "spark")):
-        root = _copy_index(compaction_index, tmp_path / path)
-        monkeypatch.setattr(index_append, "DRIVER_COMPACT_MAX_BYTES", cap)
-        out = index_append.compact_index(spark, IndexCatalog(root), TEST_CONFIG)
-        assert out["path"] == path
+    meta = cat.manifest()["meta"]
+    assert meta["compacted_salts"] == 3 and meta["next_delta_seq"] == 0
+    assert meta["stats_base"] == stats
+    assert meta["gen"] == out["generations"]
+
+    salt = columns[IndexCatalog.POSTINGS].index("salt")
+    old = sorted({
+        r[salt]
+        for r in want[IndexCatalog.POSTINGS]
+        if r[salt] >= index_append.COMPACTED_SALT_BASE
+    })
+    assert len(old) == 3
+    dense = {s: index_append.COMPACTED_SALT_BASE + i for i, s in enumerate(old)}
+    want[IndexCatalog.POSTINGS] = sorted(
+        (
+            r[:salt] + (dense.get(r[salt], r[salt]),) + r[salt + 1:]
+            for r in want[IndexCatalog.POSTINGS]
+        ),
+        key=repr,
+    )
+    for table, rows in want.items():
+        got = spark.read.parquet(cat.path(table))
+        assert sorted(got.columns) == columns[table], table
+        assert rows and _view_rows(got, columns[table]) == rows, table
+    assert _answers(spark, root, monkeypatch) == expected
 
 
-@pytest.mark.parametrize("crashed_path", ["driver", "spark"])
+@pytest.mark.parametrize("crashed_path", ["driver"])
 def test_compaction_retry_after_crash_before_commit(
     spark, compaction_index, tmp_path, crashed_path, monkeypatch
 ):
     """A compaction that wrote its generation dirs and then raised in the
     manifest commit (clear_deltas) leaves the old main+delta view serving
-    the same answers; a driver retry then equals a clean compaction.  The
-    retry must clear the crashed attempt's files first: after a crashed
-    Spark attempt, its dictionary files beside the driver's would
-    double every dictionary row."""
+    the same answers; a retry then equals a clean compaction.  The retry
+    must clear the crashed attempt's files first: the direct writer never
+    truncates, so its leftover files would commit beside the retry's."""
     expected = _answers(spark, compaction_index, monkeypatch)
     crashed = _copy_index(compaction_index, tmp_path / "crashed")
     clean = _copy_index(compaction_index, tmp_path / "clean")
@@ -1223,12 +1208,12 @@ def test_compaction_retry_after_crash_before_commit(
     with monkeypatch.context() as m:
         m.setattr(IndexCatalog, "clear_deltas", crash)
         with pytest.raises(RuntimeError, match="crash before commit"):
-            _compact(spark, crashed, crashed_path, monkeypatch)
+            _compact(spark, crashed)
     assert len(IndexCatalog(crashed).deltas()) == 2
     assert any((crashed / "dictionary__g2").rglob("*.parquet"))
     assert _answers(spark, crashed, monkeypatch) == expected
 
-    _compact(spark, crashed, "driver", monkeypatch)
-    _compact(spark, clean, "driver", monkeypatch)
+    _compact(spark, crashed)
+    _compact(spark, clean)
     _assert_same_compaction(spark, crashed, clean)
     assert _answers(spark, crashed, monkeypatch) == expected

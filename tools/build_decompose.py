@@ -9,7 +9,7 @@ docmap+dictionary (concurrent) | postings merge+write.
 Usage: python tools/build_decompose.py <cpus> [rows]
 Prints one JSON line; run each level in its own process (fresh JVM).
 The synthesized corpus parquet is cached per row count so every level
-reads byte-identical input (same as tools/scaling_run.py's protocol).
+reads byte-identical input.
 """
 
 from __future__ import annotations
@@ -40,7 +40,7 @@ def main() -> None:
 
     spark = make_spark(str(cpus), shuffle_partitions=2 * cpus)
     config = EngineConfig(
-        n_term_buckets=8, n_eval_bands=16, build_parallelism=8,
+        n_term_buckets=8, n_eval_bands=16,
         salt_target_postings=20_000,
     )
     corpus_dir = REPO / ".scratch" / f"decompose_corpus_{rows}"

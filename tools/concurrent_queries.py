@@ -56,7 +56,7 @@ def main() -> None:
         extra_conf={"spark.scheduler.mode": "FAIR"},
     )
     config = EngineConfig(
-        n_term_buckets=8, n_eval_bands=16, build_parallelism=8,
+        n_term_buckets=8, n_eval_bands=16,
         salt_target_postings=20_000,
     )
     eng = TaxonomyEngine(spark, idx, config)

@@ -43,7 +43,7 @@ def main() -> None:
 
     spark = make_spark(str(cpus), shuffle_partitions=2 * cpus)
     config = EngineConfig(
-        n_term_buckets=8, n_eval_bands=16, build_parallelism=8,
+        n_term_buckets=8, n_eval_bands=16,
         salt_target_postings=20_000,
     )
     reader = IndexReader(spark, idx, config)

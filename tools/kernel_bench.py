@@ -54,7 +54,7 @@ def main() -> None:
 
     spark = make_spark("2", shuffle_partitions=2)
     config = EngineConfig(
-        n_term_buckets=8, n_eval_bands=16, build_parallelism=8,
+        n_term_buckets=8, n_eval_bands=16,
         salt_target_postings=20_000,
     )
     reader = so.IndexReader(spark, idx, config)

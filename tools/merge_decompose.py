@@ -42,7 +42,7 @@ def main() -> None:
 
     spark = make_spark(str(cpus), shuffle_partitions=2 * cpus)
     config = EngineConfig(
-        n_term_buckets=8, n_eval_bands=16, build_parallelism=8,
+        n_term_buckets=8, n_eval_bands=16,
         salt_target_postings=20_000,
     )
     cat = IndexCatalog(idx)
@@ -75,7 +75,7 @@ def main() -> None:
     force(salted)
     t["B_scan_salt"] = time.time() - t0
 
-    n_parts = ib._merge_partitions(spark, cat, config)
+    n_parts = ib._merge_partitions(spark, cat)
 
     def passthrough(batches):
         for rb in batches:
