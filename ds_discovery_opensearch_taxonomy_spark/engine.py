@@ -45,7 +45,7 @@ class TaxonomyEngine:
         self.config = config or EngineConfig()
         self.reader = search_ops.IndexReader(spark, index_dir, self.config)
         self._categories: list[dict] | None = None
-        #: streaming micro-batch compile payload (broadcast) + its
+        #: streaming micro-batch payload (broadcast parsed trees) + its
         #: (category pairs, config) cache key — see streaming._batch_payload
         self._stream_payload = None
         self._stream_payload_key = None
@@ -77,16 +77,12 @@ class TaxonomyEngine:
         query sees the live view — the OpenSearch "refresh makes changes
         searchable" analogue.
 
-        The streaming micro-batch payload (``_stream_payload``) deliberately
-        SURVIVES a refresh: the batch categoriser evaluates unscored bool
-        membership (df/N/avgdl in the payload are never read, see
-        ``_Evaluator._score_term``) and re-expands every dictionary-dependent
-        construct against the BATCH vocabulary from its kept ``source`` node,
-        so no part of the compiled payload depends on index state.  Dropping
-        it here made every daily-update micro-batch recompile the full
-        category set (~7-8 s per batch at 136 categories — measured,
-        BENCH.md streaming decomposition); it is invalidated by category or
-        config changes instead (keyed in streaming._batch_payload)."""
+        The streaming micro-batch payload (``_stream_payload``) SURVIVES a
+        refresh: it holds only the parsed category trees and the config.
+        Each batch compiles those trees against its own vocabulary and
+        evaluates unscored bool membership, so nothing in the payload
+        depends on index state.  It is invalidated by category or config
+        changes instead (keyed in streaming._batch_payload)."""
         self.reader.unpersist()
         self.reader = search_ops.IndexReader(
             self.spark, str(self.reader.cat.root), self.config

@@ -45,7 +45,9 @@ import dataclasses
 import os
 import re
 import threading
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass
+from functools import lru_cache
 
 import numpy as np
 import pandas as pd
@@ -61,6 +63,7 @@ from ds_discovery_opensearch_taxonomy_spark.config import EngineConfig
 from ds_discovery_opensearch_taxonomy_spark.functions import codec, scoring
 from ds_discovery_opensearch_taxonomy_spark.functions.vtokenize import _ragged_gather
 from ds_discovery_opensearch_taxonomy_spark.operators import index_append
+from ds_discovery_opensearch_taxonomy_spark.operators.oracle import expand_fuzzy
 from ds_discovery_opensearch_taxonomy_spark.plans import queryparser as qp
 from ds_discovery_opensearch_taxonomy_spark.sources.catalog import IndexCatalog
 
@@ -244,18 +247,6 @@ class IndexReader:
     # -- dictionary expansion -------------------------------------------------
 
     @staticmethod
-    def _wildcard_to_java_regex(pattern: str) -> str:
-        out = []
-        for ch in pattern:
-            if ch == "*":
-                out.append(".*")
-            elif ch == "?":
-                out.append(".")
-            else:
-                out.append(re_escape_java(ch))
-        return "^" + "".join(out) + "$"
-
-    @staticmethod
     def construct_condition(node: qp.Node):
         """Dictionary-row predicate of a multi-term construct (wildcard /
         term range).  Regex only where string ops can't answer: a Java
@@ -272,9 +263,7 @@ class IndexReader:
                 return c & F.col("term").startswith(head)
             if head:
                 c = c & F.col("term").startswith(head)
-            return c & F.col("term").rlike(
-                IndexReader._wildcard_to_java_regex(pat)
-            )
+            return c & F.col("term").rlike(_wildcard_regex(pat))
         if isinstance(node, qp.TermRangeNode):
             c = F.col("field") == node.field
             if node.lo is not None:
@@ -499,6 +488,203 @@ class IndexReader:
 
 
 # --------------------------------------------------------------------------
+# Driver-side helpers: sorted-vocabulary expansion and metadata masks, shared
+# by the driver snapshot and the stream batch's in-memory index
+# --------------------------------------------------------------------------
+
+
+def _wildcard_regex(pattern: str) -> str:
+    """A wildcard pattern as an anchored regex; Python's ``re`` and Spark's
+    ``rlike`` (Java) read the escaped literals alike."""
+    return (
+        "^"
+        + "".join(
+            ".*" if c == "*" else "." if c == "?" else re.escape(c)
+            for c in pattern
+        )
+        + "$"
+    )
+
+
+@lru_cache(maxsize=4096)
+def _wild_rx(pattern: str):
+    return re.compile(_wildcard_regex(pattern))
+
+
+def _prefix_successor(prefix: str) -> str | None:
+    """Smallest string greater than every string starting with ``prefix``:
+    increment the last code point, dropping trailing U+10FFFF code points
+    (which have no successor).  None means "no upper bound".  A sentinel
+    like ``prefix + chr(0xFFFF)`` is WRONG: supplementary-plane characters
+    (emoji, CJK extensions) sort above U+FFFF and would be silently
+    excluded from the bisect range."""
+    s = prefix.rstrip("\U0010FFFF")
+    if not s:
+        return None
+    return s[:-1] + chr(ord(s[-1]) + 1)
+
+
+def _expand_wildcard(vocab: list[str], pattern: str) -> list[str]:
+    """Wildcard expansion over a SORTED vocabulary: any literal prefix
+    narrows the candidates to a bisect range first (the regex then runs
+    over dozens of terms, not the whole vocabulary — same trick as the
+    dictionary lookup's pushed prefix filter); a pure-prefix pattern needs
+    no regex at all."""
+    i = len(pattern)
+    for c in "*?":
+        j = pattern.find(c)
+        if j != -1:
+            i = min(i, j)
+    prefix = pattern[:i]
+    lo = bisect.bisect_left(vocab, prefix)
+    succ = _prefix_successor(prefix) if prefix else None
+    hi = bisect.bisect_left(vocab, succ) if succ is not None else len(vocab)
+    sub = vocab[lo:hi]
+    if pattern == prefix + "*":
+        return sub
+    rx = _wild_rx(pattern)
+    return [t for t in sub if rx.match(t)]
+
+
+def _expand_range(vocab: list[str], node: qp.TermRangeNode) -> list[str]:
+    lo = (
+        0
+        if node.lo is None
+        else (
+            bisect.bisect_left(vocab, node.lo)
+            if node.inc_lo
+            else bisect.bisect_right(vocab, node.lo)
+        )
+    )
+    hi = (
+        len(vocab)
+        if node.hi is None
+        else (
+            bisect.bisect_right(vocab, node.hi)
+            if node.inc_hi
+            else bisect.bisect_left(vocab, node.hi)
+        )
+    )
+    return vocab[lo:hi]
+
+
+def expand_over_vocab(
+    vocab_of: Callable[[str], list[str]],
+    constructs: Iterable[qp.Node],
+    fuzzies: Iterable[qp.FuzzyNode],
+) -> tuple[dict[str, tuple[str, ...]], dict]:
+    """Resolve dictionary-dependent constructs over sorted per-field
+    vocabularies (``vocab_of(field)``: the driver snapshot's dictionary, or
+    a stream batch's own terms): each wildcard / term-range construct's
+    terms by ``repr``, uncapped, and each fuzzy construct's (term, boost)
+    list, capped at ``_MAX_FUZZY_EXPANSIONS`` like the Spark lookup."""
+    expanded = {
+        repr(n): tuple(
+            _expand_wildcard(vocab_of(n.field), n.pattern)
+            if isinstance(n, qp.WildcardNode)
+            else _expand_range(vocab_of(n.field), n)
+        )
+        for n in constructs
+    }
+    fuzzy_map = {
+        n: tuple(expand_fuzzy(vocab_of(n.field), n, _MAX_FUZZY_EXPANSIONS))
+        for n in fuzzies
+    }
+    return expanded, fuzzy_map
+
+
+#: a string Spark's ANSI cast reads as a BIGINT (after trimming)
+_SPARK_INT_RE = re.compile(r"[+-]?\d+")
+
+
+def _spark_cast(v: str, integral: bool):
+    """A string as Spark's ANSI cast reads it for a BIGINT (``integral``)
+    or DOUBLE comparison: trimmed and strict; a malformed one raises, as
+    Spark's CAST_INVALID_INPUT does at the action."""
+    s = v.strip()
+    if integral and _SPARK_INT_RE.fullmatch(s):
+        return int(s)
+    if not integral:
+        try:
+            return float(s)
+        except ValueError:
+            pass
+    raise ValueError(
+        f"[CAST_INVALID_INPUT] the value {v!r} cannot be cast to "
+        f"{'BIGINT' if integral else 'DOUBLE'}"
+    )
+
+
+def _in_mask(col: pd.Series, values) -> np.ndarray:
+    """``col.isin(values)`` with the coercion of Spark's ANSI ``isin``:
+    string values against a numeric column cast to a number, a string
+    column against numeric values casts to a number; null never
+    matches."""
+    vals = [v for v in values if v is not None]
+
+    def number(v) -> bool:
+        return isinstance(v, (int, float, np.number)) and not isinstance(v, bool)
+
+    integral = not any(isinstance(v, (float, np.floating)) for v in vals)
+    if pd.api.types.is_numeric_dtype(col) and not pd.api.types.is_bool_dtype(col):
+        integral = integral and pd.api.types.is_integer_dtype(col)
+        vals = [_spark_cast(v, integral) if isinstance(v, str) else v for v in vals]
+    elif any(number(v) for v in vals):
+        vals = [_spark_cast(v, integral) if isinstance(v, str) else v for v in vals]
+        col = col.map(lambda s: _spark_cast(s, integral) if isinstance(s, str) else s)
+    return col.isin(vals).to_numpy(dtype=bool, na_value=False)
+
+
+def _numeric(col: pd.Series) -> np.ndarray:
+    """A column as float64, nulls and non-numbers as NaN."""
+    return pd.to_numeric(col, errors="coerce").to_numpy(
+        dtype=np.float64, na_value=np.nan
+    )
+
+
+def _virtual_ids(node: qp.Node, pdf: pd.DataFrame, n: int) -> np.ndarray:
+    """Row indices of ``pdf`` matching a metadata clause — the vectorized
+    twin of virtual_condition (Int32Field semantics,
+    InMemoryCategoriserRepository.cs:236-244; ``isin`` and ``concat_ws``
+    as Spark evaluates them)."""
+    if isinstance(node, qp.MatchAllNode):
+        return np.arange(n, dtype=np.int64)
+    if isinstance(node, qp.IntTermNode):
+        if node.field not in pdf:
+            return np.empty(0, dtype=np.int64)
+        return np.flatnonzero(_numeric(pdf[node.field]) == node.value).astype(np.int64)
+    if isinstance(node, qp.IntRangeNode):
+        if node.field not in pdf:
+            return np.empty(0, dtype=np.int64)
+        col = _numeric(pdf[node.field])
+        mask = ~np.isnan(col)
+        if node.lo is not None:
+            mask &= (col >= node.lo) if node.inc_lo else (col > node.lo)
+        if node.hi is not None:
+            mask &= (col <= node.hi) if node.inc_hi else (col < node.hi)
+        return np.flatnonzero(mask).astype(np.int64)
+    if isinstance(node, qp.MetaInNode):
+        if node.column not in pdf:
+            return np.empty(0, dtype=np.int64)
+        return np.flatnonzero(_in_mask(pdf[node.column], node.values)).astype(
+            np.int64
+        )
+    if isinstance(node, qp.IdNode):
+        cols = ("repo", "path", "commit")
+        if any(c not in pdf for c in cols):
+            return np.empty(0, dtype=np.int64)
+        # concat_ws: nulls are skipped, not written
+        refs = [
+            "/".join(str(v) for v in row if not pd.isna(v)).lower()
+            for row in zip(*(pdf[c] for c in cols))
+        ]
+        return np.flatnonzero(
+            np.asarray(refs, dtype=object) == node.doc_ref
+        ).astype(np.int64)
+    raise TypeError(type(node))  # pragma: no cover
+
+
+# --------------------------------------------------------------------------
 # Driver snapshot: the small tables of a small index, held in the driver
 # --------------------------------------------------------------------------
 
@@ -682,13 +868,6 @@ class DriverSnapshot:
         from ds_discovery_opensearch_taxonomy_spark.functions.vtokenize import (
             term_id_of,
         )
-        from ds_discovery_opensearch_taxonomy_spark.operators.oracle import (
-            expand_fuzzy,
-        )
-        from ds_discovery_opensearch_taxonomy_spark.streaming.incremental import (
-            _expand_range,
-            _expand_wildcard,
-        )
 
         found: list[np.ndarray] = []
         if exact and len(self.term_ids):
@@ -699,21 +878,14 @@ class DriverSnapshot:
                 np.searchsorted(self.term_ids, tids), len(self.term_ids) - 1
             )
             found.append(i[self.term_ids[i] == tids])
-        fuzzy_map: dict[qp.FuzzyNode, tuple[tuple[str, float], ...]] = {}
-        for node in fuzzies:
-            tb = tuple(
-                expand_fuzzy(self.vocab(node.field)[0], node, _MAX_FUZZY_EXPANSIONS)
-            )
-            fuzzy_map[node] = tb
+        expanded, fuzzy_map = expand_over_vocab(
+            lambda field: self.vocab(field)[0], constructs, fuzzies
+        )
+        for node, tb in fuzzy_map.items():
             found.append(self._vocab_rows(node.field, [t for t, _ in tb]))
         cap = getattr(config, "max_term_expansions", None)
-        expanded: dict[str, tuple[str, ...]] = {}
         for node in sorted(constructs, key=repr):
-            vocab = self.vocab(node.field)[0]
-            if isinstance(node, qp.WildcardNode):
-                terms = _expand_wildcard(vocab, node.pattern)
-            else:
-                terms = _expand_range(vocab, node)
+            terms = expanded[repr(node)]
             rows = self._vocab_rows(node.field, terms)
             if cap and len(rows) > int(cap):
                 # deterministic keep, as the Spark expansion: term_id asc
@@ -760,10 +932,6 @@ class DriverSnapshot:
         """Sorted ords of the live docs a metadata clause matches."""
         ords = self._virtual.get(key)
         if ords is None:
-            from ds_discovery_opensearch_taxonomy_spark.streaming.incremental import (
-                _virtual_ids,
-            )
-
             pdf = self.docs_pandas()
             ids = _virtual_ids(node, pdf, len(pdf))
             ords = np.sort(pdf["ord"].to_numpy(np.int64)[ids])
@@ -849,12 +1017,6 @@ class DriverSnapshot:
         return pa.concat_tables(parts, promote_options="permissive").to_pandas()
 
 
-def re_escape_java(ch: str) -> str:
-    import re
-
-    return re.escape(ch)
-
-
 # --------------------------------------------------------------------------
 # Compilation: replace dictionary-dependent nodes, collect term needs
 # --------------------------------------------------------------------------
@@ -864,17 +1026,18 @@ def re_escape_java(ch: str) -> str:
 class ExpandedTermsNode(qp.Node):
     """Wildcard / term-range after dictionary expansion: constant score 1.0
     for any doc containing >= 1 of the expanded terms.  ``source`` keeps the
-    original construct so the single-doc (daily-update) path can also match
-    terms the index has never seen — the reference expands multi-term
-    queries against the transient per-doc index, not a global dictionary.
+    original construct so the single-doc (``categorise_docs``) path can
+    also match terms the index has never seen — the reference expands
+    multi-term queries against the transient per-doc index, not a global
+    dictionary.
 
     ``terms is None`` marks a DISTRIBUTED expansion: the matching terms
     were never collected to the driver — the construct's term_id DataFrame
     (reader.expansion_cache[key]) semi-joins into the blocks fetch, rows
     arrive tagged with ``key``, and the evaluator unions the group's tagged
     term postings (constant-score rewrite, Lucene MultiTermQuery style).
-    The streaming path re-expands ``source`` against the batch vocabulary
-    and substitutes an explicit tuple."""
+    A stream batch compiles the parsed trees against its own vocabulary
+    (``expand_over_vocab``), so its terms are always an explicit tuple."""
 
     field: str
     terms: tuple[str, ...] | None = None
@@ -921,7 +1084,8 @@ class ExpandedFuzzyNode(qp.Node):
     """Fuzzy construct after dictionary expansion: per-term scoring boosts
     (``1 - d/min_len``), summed like SHOULD TermQueries (BooleanQuery
     scoring rewrite).  ``source`` keeps the original so the single-doc
-    path can match terms the global dictionary never saw."""
+    path can match terms the global dictionary never saw; the stream batch
+    expands it against its own vocabulary instead (``expand_over_vocab``)."""
 
     field: str
     terms: tuple[str, ...]
@@ -955,19 +1119,35 @@ class VirtualDocsNode(qp.Node):
     source: qp.Node
 
 
-def _collect_virtual_nodes(node: qp.Node, out: dict) -> None:
-    """Gather {key: source clause} for every VirtualDocsNode in an AST —
-    lets cached compiles rebuild the virtual dict without re-rewriting."""
-    if isinstance(node, VirtualDocsNode):
-        out[node.key] = node.source
-    elif isinstance(node, qp.BoostNode):
-        _collect_virtual_nodes(node.child, out)
-    elif isinstance(node, qp.DisMaxNode):
-        for c in node.children:
-            _collect_virtual_nodes(c, out)
-    elif isinstance(node, qp.BoolNode):
-        for _, c in node.clauses:
-            _collect_virtual_nodes(c, out)
+def expand_tree(
+    node: qp.Node,
+    expanded: dict[str, tuple[str, ...]],
+    fuzzy_map: dict,
+) -> qp.Node:
+    """A parsed tree with its dictionary-dependent leaves resolved: a
+    wildcard / term range becomes an ExpandedTermsNode carrying
+    ``expanded[repr]`` (None, a distributed expansion, when absent), a
+    fuzzy term an ExpandedFuzzyNode with ``fuzzy_map``'s (term, boost)
+    list, and a metadata clause a VirtualDocsNode keyed by its ``repr``."""
+
+    def leaf(n: qp.Node) -> qp.Node:
+        if isinstance(n, (qp.WildcardNode, qp.TermRangeNode)):
+            return ExpandedTermsNode(n.field, expanded.get(repr(n)), n, key=repr(n))
+        if isinstance(n, qp.FuzzyNode):
+            tb = fuzzy_map.get(n, ())
+            return ExpandedFuzzyNode(
+                n.field, tuple(t for t, _ in tb), tuple(b for _, b in tb), n
+            )
+        if isinstance(n, (qp.IntTermNode, qp.IntRangeNode, qp.IdNode, qp.MatchAllNode)):
+            return VirtualDocsNode(repr(n), n)
+        return n
+
+    return qp.map_leaves(node, leaf)
+
+
+def virtual_clauses(node: qp.Node) -> dict[str, qp.Node]:
+    """{key: metadata clause} of every VirtualDocsNode in a compiled tree."""
+    return {n.key: n.source for n in qp.walk(node) if isinstance(n, VirtualDocsNode)}
 
 
 def compile_queries(
@@ -1008,7 +1188,7 @@ def compile_queries(
             bucket_map.update(h[2])
             tid_map.update(h[3])
         for node in compiled.values():
-            _collect_virtual_nodes(node, virtual)
+            virtual.update(virtual_clauses(node))
         out = (compiled, virtual, df_map, bucket_map, tid_map)
         reader.compile_cache[cache_key] = out
         while len(reader.compile_cache) > reader.compile_cache_max:
@@ -1020,18 +1200,7 @@ def compile_queries(
     # in ONE collected Spark job; wildcard / term-range constructs expand
     # DISTRIBUTED (expand_constructs) — their matching terms never reach
     # the driver, only per-construct counts + hosting buckets do.
-    exact: set[tuple[str, str]] = set()
-    patterns: set[tuple[str, str]] = set()
-    ranges: set[qp.TermRangeNode] = set()
-    fuzzies: set[qp.FuzzyNode] = set()
-    for node in parsed.values():
-        exact |= qp.collect_terms(node)
-        patterns |= qp.collect_patterns(node)
-        ranges |= qp.collect_term_ranges(node)
-        fuzzies |= qp.collect_fuzzy(node)
-    constructs: set[qp.Node] = {
-        qp.WildcardNode(f, p) for f, p in patterns
-    } | set(ranges)
+    exact, constructs, fuzzies = qp.dictionary_needs(parsed.values())
     snap = reader.snapshot()
     expanded: dict[str, tuple[str, ...]] = {}
     if snap is not None:
@@ -1062,38 +1231,14 @@ def compile_queries(
         if constructs:
             reader.expand_constructs(constructs, config)
 
+    compiled = {
+        cid: expand_tree(n, expanded, fuzzy_map) for cid, n in parsed.items()
+    }
     #: key -> original metadata clause; doc sets are NOT resolved here —
     #: they materialize distributed at evaluation time (build_virtual_blocks)
     virtual: dict[str, qp.Node] = {}
-
-    def rewrite(node: qp.Node) -> qp.Node:
-        if isinstance(node, (qp.WildcardNode, qp.TermRangeNode)):
-            return ExpandedTermsNode(
-                node.field, expanded.get(repr(node)), node, key=repr(node)
-            )
-        if isinstance(node, qp.FuzzyNode):
-            tb = fuzzy_map.get(node, ())
-            return ExpandedFuzzyNode(
-                node.field,
-                tuple(t for t, _ in tb),
-                tuple(b for _, b in tb),
-                node,
-            )
-        if isinstance(node, (qp.IntTermNode, qp.IntRangeNode, qp.IdNode, qp.MatchAllNode)):
-            key = repr(node)
-            virtual[key] = node
-            return VirtualDocsNode(key, node)
-        if isinstance(node, qp.BoostNode):
-            return qp.BoostNode(rewrite(node.child), node.boost)
-        if isinstance(node, qp.DisMaxNode):
-            return qp.DisMaxNode(
-                tuple(rewrite(c) for c in node.children), node.tie_breaker
-            )
-        if isinstance(node, qp.BoolNode):
-            return qp.BoolNode(tuple((o, rewrite(c)) for o, c in node.clauses))
-        return node
-
-    compiled = {cid: rewrite(n) for cid, n in parsed.items()}
+    for node in compiled.values():
+        virtual.update(virtual_clauses(node))
 
     from ds_discovery_opensearch_taxonomy_spark.functions.vtokenize import term_id_of
 
@@ -1117,54 +1262,42 @@ def phrase_terms(node: qp.Node) -> set[tuple[str, str]]:
     slots).  Position streams for all other terms are dropped before the
     eval shuffle — posdata is the largest per-posting stream, and plain
     term/bool scoring never touches it."""
-    out: set[tuple[str, str]] = set()
-    if isinstance(node, qp.PhraseNode):
-        for slot in node.slots:
-            out.update((node.field, t) for t in slot)
-    elif isinstance(node, qp.BoostNode):
-        out |= phrase_terms(node.child)
-    elif isinstance(node, qp.DisMaxNode):
-        for child in node.children:
-            out |= phrase_terms(child)
-    elif isinstance(node, qp.BoolNode):
-        for _, child in node.clauses:
-            out |= phrase_terms(child)
-    return out
+    return {
+        ft
+        for n in qp.walk(node)
+        if isinstance(n, qp.PhraseNode)
+        for ft in qp.leaf_terms(n)
+    }
+
+
+def has_phrase(node: qp.Node) -> bool:
+    """Whether a tree holds a phrase, the one node that reads positions."""
+    return any(isinstance(n, qp.PhraseNode) for n in qp.walk(node))
 
 
 def needed_terms(node: qp.Node) -> set[tuple[str, str]]:
-    out = qp.collect_terms(node)
-    if isinstance(node, (ExpandedTermsNode, ExpandedFuzzyNode)):
-        out |= {(node.field, t) for t in (node.terms or ())}
-    elif isinstance(node, VirtualDocsNode):
-        out |= {(VIRTUAL_FIELD, node.key)}
-    elif isinstance(node, qp.BoostNode):
-        out |= needed_terms(node.child)
-    elif isinstance(node, qp.DisMaxNode):
-        for child in node.children:
-            out |= needed_terms(child)
-    elif isinstance(node, qp.BoolNode):
-        for _, child in node.clauses:
-            out |= needed_terms(child)
+    """(field, term) keys of every posting list a compiled tree reads:
+    exact-term leaves, explicit expansions, and virtual clauses under
+    ``VIRTUAL_FIELD``."""
+    out: set[tuple[str, str]] = set()
+    for n in qp.walk(node):
+        if isinstance(n, (ExpandedTermsNode, ExpandedFuzzyNode)):
+            out.update((n.field, t) for t in n.terms or ())
+        elif isinstance(n, VirtualDocsNode):
+            out.add((VIRTUAL_FIELD, n.key))
+        else:
+            out.update(qp.leaf_terms(n))
     return out
 
 
 def distributed_constructs(node: qp.Node) -> set[str]:
     """Construct keys of every DISTRIBUTED expansion (ExpandedTermsNode
     with terms=None) in an AST."""
-    out: set[str] = set()
-    if isinstance(node, ExpandedTermsNode):
-        if node.terms is None and node.key is not None:
-            out.add(node.key)
-    elif isinstance(node, qp.BoostNode):
-        out |= distributed_constructs(node.child)
-    elif isinstance(node, qp.DisMaxNode):
-        for c in node.children:
-            out |= distributed_constructs(c)
-    elif isinstance(node, qp.BoolNode):
-        for _, c in node.clauses:
-            out |= distributed_constructs(c)
-    return out
+    return {
+        n.key
+        for n in qp.walk(node)
+        if isinstance(n, ExpandedTermsNode) and n.terms is None and n.key is not None
+    }
 
 
 def virtual_condition(node: qp.Node):
@@ -1349,7 +1482,6 @@ class _TermData:
 
     __slots__ = (
         "ids", "tfs", "_po", "_pf", "_raw", "_full_tfs", "_keep", "_adj",
-        "stats",
     )
 
     def __init__(self, ids, tfs, pos_offsets, pos_flat,
@@ -1362,7 +1494,6 @@ class _TermData:
         self._full_tfs = full_tfs
         self._keep = keep
         self._adj: dict[int, np.ndarray] = {}
-        self.stats = None  # optional trace-counter dict (see _Evaluator)
 
     def adj_keys(self, si: int, off: np.int64) -> np.ndarray:
         """Sorted-unique absolute occurrence keys ``ord << 32 | (pos + off
@@ -1404,9 +1535,6 @@ class _TermData:
         return self._pf
 
     def _decode_pos(self) -> None:
-        import time as _t
-
-        _s = _t.perf_counter() if self.stats is not None else 0.0
         po, pf = codec.decode_positions(self._full_tfs, self._raw)
         if self._keep is not None:
             lens = np.diff(po)
@@ -1414,10 +1542,6 @@ class _TermData:
             pf = pf[_ragged_gather(po[:-1][self._keep], klens.astype(np.int64))]
             po = np.concatenate([[0], np.cumsum(klens)]).astype(np.int64)
         self._po, self._pf = po, pf
-        if self.stats is not None:
-            self.stats["pos_decode_s"] += _t.perf_counter() - _s
-            self.stats["n_pos_decoded"] += 1
-            self.stats["pos_ints"] += len(pf)
         self._raw = self._full_tfs = self._keep = None
 
 
@@ -1736,9 +1860,6 @@ class _Evaluator:
         #: construct key -> sorted term_ids present in THIS group (from the
         #: distributed expansion tags riding the eval shuffle)
         self.construct_tids: dict[str, list[int]] = {}
-        #: optional decode-cost counters (set by eval_group under
-        #: SPARK_GRAFT_EVAL_TRACE) — None in normal operation, zero cost
-        self.stats: dict | None = None
 
     def _term_by_id(self, tid: int) -> _TermData | None:
         """Decode-cache lookup by numeric term_id (distributed expansions
@@ -1752,19 +1873,7 @@ class _Evaluator:
     def _decode(self, rows: dict[str, np.ndarray]) -> _TermData:
         """Decode + tombstone-filter one term's blocks (all decode paths
         come through here so dead ords can never reach scoring or top-k)."""
-        if self.stats is not None:
-            import time as _t
-
-            _s = _t.perf_counter()
-            td = _decode_rows(rows, self.needs_pos)
-            self.stats["decode_s"] += _t.perf_counter() - _s
-            self.stats["n_decoded"] += 1
-            self.stats["decoded_postings"] += len(td.ids)
-            if td.has_pos:
-                self.stats["n_pos_carried"] += 1
-            td.stats = self.stats
-        else:
-            td = _decode_rows(rows, self.needs_pos)
+        td = _decode_rows(rows, self.needs_pos)
         dead = self.dead
         if dead is None or len(td.ids) == 0:
             return td
@@ -1783,12 +1892,10 @@ class _Evaluator:
             klens = lens[keep]
             pf = td._pf[_ragged_gather(td._po[:-1][keep], klens.astype(np.int64))]
             po = np.concatenate([[0], np.cumsum(klens)]).astype(np.int64)
-        out = _TermData(
+        return _TermData(
             td.ids[keep], td.tfs[keep], po, pf,
             pos_raw=td._raw, full_tfs=td._full_tfs, keep=keep,
         )
-        out.stats = td.stats
-        return out
 
     def _dls(self, field: str, ids: np.ndarray) -> np.ndarray:
         """Per-doc lengths of ``field`` for the given ords (norms lookup)."""
@@ -2232,13 +2339,8 @@ def eval_group(key: tuple, pdf: pd.DataFrame, plan: EvalPlan) -> pd.DataFrame:
     """THE eval kernel: one (chunk, band) group's blocks -> its
     (category_id, doc_id, score) rows.  Both fetchers call it: the Spark
     one inside ``applyInPandas``, the driver one in process."""
-    import os as _os
-    import time as _time
-
-    _trace = _os.environ.get("SPARK_GRAFT_EVAL_TRACE") == "1"
-    _t0 = _time.perf_counter()
     chunk, band = int(key[0]), int(key[1])
-    _dumpdir = _os.environ.get("SPARK_GRAFT_EVAL_DUMP")
+    _dumpdir = os.environ.get("SPARK_GRAFT_EVAL_DUMP")
     if _dumpdir:  # diagnostic: replay one group in tools/kernel_bench.py
         try:
             pdf.to_parquet(f"{_dumpdir}/group_{chunk}_{band}.parquet")
@@ -2246,7 +2348,7 @@ def eval_group(key: tuple, pdf: pd.DataFrame, plan: EvalPlan) -> pd.DataFrame:
             pass
     cids = plan.chunk_cids[chunk]
     nodes = {cid: plan.compiled[cid] for cid in cids}
-    needs_pos = any(_node_has_phrase(n) for n in nodes.values())
+    needs_pos = any(has_phrase(n) for n in nodes.values())
     rows_by_term = _split_by_term(pdf)
     ordmap, dead, dl_by_field = band_sidecars(
         rows_by_term.pop(DOCMAP_TID, None), plan.field_names
@@ -2273,16 +2375,8 @@ def eval_group(key: tuple, pdf: pd.DataFrame, plan: EvalPlan) -> pd.DataFrame:
     count = plan.top_k is not None and plan.scored
     if count:
         n_by_term = {t: int(rows["n"].sum()) for t, rows in rows_by_term.items()}
-    if _trace:
-        ev.stats = {
-            "decode_s": 0.0, "n_decoded": 0, "decoded_postings": 0,
-            "n_pos_carried": 0, "pos_decode_s": 0.0,
-            "n_pos_decoded": 0, "pos_ints": 0,
-        }
-    cid_walls: dict[str, float] = {}
     frames = []
     for cid in cids:
-        _tc = _time.perf_counter() if _trace else 0.0
         node = nodes[cid]
         if count:
             tids, ckeys = plan.needed_tids(cid)
@@ -2303,17 +2397,6 @@ def eval_group(key: tuple, pdf: pd.DataFrame, plan: EvalPlan) -> pd.DataFrame:
         if plan.top_k is not None and len(ids) > plan.top_k:
             ids, sc = _partial_topk(ids, sc, plan.top_k)
         frames.append(pd.DataFrame({"category_id": cid, "doc_id": ids, "score": sc}))
-        if _trace:
-            cid_walls[cid] = _time.perf_counter() - _tc
-    if _trace:
-        top = sorted(cid_walls.items(), key=lambda kv: -kv[1])[:8]
-        print(
-            f"EVAL_TRACE chunk={chunk} band={band} rows={len(pdf)} "
-            f"n_cids={len(cids)} wall={_time.perf_counter() - _t0:.3f} "
-            f"stats={ev.stats} "
-            f"top_cids={[(c, round(w, 3)) for c, w in top]}",
-            flush=True,
-        )
     return pd.concat(frames, ignore_index=True)
 
 
@@ -2873,15 +2956,3 @@ def _run_spark(
                 .drop("rank")
             )
     return results
-
-
-def _node_has_phrase(node: qp.Node) -> bool:
-    if isinstance(node, qp.PhraseNode):
-        return True
-    if isinstance(node, qp.BoostNode):
-        return _node_has_phrase(node.child)
-    if isinstance(node, qp.DisMaxNode):
-        return any(_node_has_phrase(c) for c in node.children)
-    if isinstance(node, qp.BoolNode):
-        return any(_node_has_phrase(c) for _, c in node.clauses)
-    return False

@@ -31,6 +31,7 @@ with ``autoGeneratePhraseQueries=false``:
 from __future__ import annotations
 
 import re
+from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass
 from enum import Enum
 
@@ -556,70 +557,74 @@ def parse_query(query: str, config: EngineConfig | None = None) -> Node:
     return QueryParser(config).parse(query)
 
 
-def collect_terms(node: Node) -> set[tuple[str, str]]:
-    """All (field, term) pairs referenced by exact-term constructs."""
-    out: set[tuple[str, str]] = set()
+# --------------------------------------------------------------------------
+# Traversal: collectors and rewrites walk trees through these; evaluators
+# keep their own per-node dispatch, which is scoring semantics
+# --------------------------------------------------------------------------
+
+
+def children(node: Node) -> tuple[Node, ...]:
+    """A node's direct sub-queries; () for a leaf."""
+    if isinstance(node, BoostNode):
+        return (node.child,)
+    if isinstance(node, DisMaxNode):
+        return node.children
+    if isinstance(node, BoolNode):
+        return tuple(c for _, c in node.clauses)
+    return ()
+
+
+def walk(node: Node) -> Iterator[Node]:
+    """Every node of a tree once, pre-order."""
+    stack = [node]
+    while stack:
+        n = stack.pop()
+        yield n
+        stack.extend(reversed(children(n)))
+
+
+def map_leaves(node: Node, fn: Callable[[Node], Node]) -> Node:
+    """The tree with every leaf replaced by ``fn(leaf)``: Boost, DisMax and
+    Bool nodes are rebuilt around the rewritten leaves, keeping their
+    boosts, tie-breakers and occurs."""
+    if isinstance(node, BoostNode):
+        return BoostNode(map_leaves(node.child, fn), node.boost)
+    if isinstance(node, DisMaxNode):
+        return DisMaxNode(
+            tuple(map_leaves(c, fn) for c in node.children), node.tie_breaker
+        )
+    if isinstance(node, BoolNode):
+        return BoolNode(tuple((o, map_leaves(c, fn)) for o, c in node.clauses))
+    return fn(node)
+
+
+def leaf_terms(node: Node) -> list[tuple[str, str]]:
+    """The (field, term) pairs an exact-term leaf (term, or-terms, phrase)
+    references; [] for any other node."""
     if isinstance(node, TermNode):
-        out.add((node.field, node.term))
-    elif isinstance(node, OrTermsNode):
-        out.update((node.field, t) for t in node.terms)
-    elif isinstance(node, PhraseNode):
-        for slot in node.slots:
-            out.update((node.field, t) for t in slot)
-    elif isinstance(node, BoostNode):
-        out.update(collect_terms(node.child))
-    elif isinstance(node, DisMaxNode):
-        for child in node.children:
-            out.update(collect_terms(child))
-    elif isinstance(node, BoolNode):
-        for _, child in node.clauses:
-            out.update(collect_terms(child))
-    return out
+        return [(node.field, node.term)]
+    if isinstance(node, OrTermsNode):
+        return [(node.field, t) for t in node.terms]
+    if isinstance(node, PhraseNode):
+        return [(node.field, t) for slot in node.slots for t in slot]
+    return []
 
 
-def collect_patterns(node: Node) -> set[tuple[str, str]]:
-    """All (field, pattern) wildcard / (field, lo..hi) term-range constructs
-    needing dictionary expansion."""
-    out: set[tuple[str, str]] = set()
-    if isinstance(node, WildcardNode):
-        out.add((node.field, node.pattern))
-    elif isinstance(node, BoostNode):
-        out.update(collect_patterns(node.child))
-    elif isinstance(node, DisMaxNode):
-        for child in node.children:
-            out.update(collect_patterns(child))
-    elif isinstance(node, BoolNode):
-        for _, child in node.clauses:
-            out.update(collect_patterns(child))
-    return out
-
-
-def collect_term_ranges(node: Node) -> set[TermRangeNode]:
-    out: set[TermRangeNode] = set()
-    if isinstance(node, TermRangeNode):
-        out.add(node)
-    elif isinstance(node, BoostNode):
-        out.update(collect_term_ranges(node.child))
-    elif isinstance(node, DisMaxNode):
-        for child in node.children:
-            out.update(collect_term_ranges(child))
-    elif isinstance(node, BoolNode):
-        for _, child in node.clauses:
-            out.update(collect_term_ranges(child))
-    return out
-
-
-def collect_fuzzy(node: Node) -> set[FuzzyNode]:
-    """All fuzzy constructs needing dictionary edit-distance expansion."""
-    out: set[FuzzyNode] = set()
-    if isinstance(node, FuzzyNode):
-        out.add(node)
-    elif isinstance(node, BoostNode):
-        out.update(collect_fuzzy(node.child))
-    elif isinstance(node, DisMaxNode):
-        for child in node.children:
-            out.update(collect_fuzzy(child))
-    elif isinstance(node, BoolNode):
-        for _, child in node.clauses:
-            out.update(collect_fuzzy(child))
-    return out
+def dictionary_needs(
+    nodes: Iterable[Node],
+) -> tuple[set[tuple[str, str]], set[Node], set[FuzzyNode]]:
+    """What trees ask of a term dictionary, in one walk each: the (field,
+    term) pairs of their exact-term leaves, their wildcard / term-range
+    constructs and their fuzzy constructs."""
+    exact: set[tuple[str, str]] = set()
+    constructs: set[Node] = set()
+    fuzzies: set[FuzzyNode] = set()
+    for node in nodes:
+        for n in walk(node):
+            if isinstance(n, (WildcardNode, TermRangeNode)):
+                constructs.add(n)
+            elif isinstance(n, FuzzyNode):
+                fuzzies.add(n)
+            else:
+                exact.update(leaf_terms(n))
+    return exact, constructs, fuzzies

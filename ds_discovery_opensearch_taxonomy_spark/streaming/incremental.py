@@ -12,18 +12,16 @@ is tokenized into an IN-MEMORY per-batch index (the literal analogue of the
 reference's per-batch RAMDirectory, InMemoryCategoriserRepository.cs:461-502)
 and evaluated with the SAME vectorized kernel the distributed path uses
 (operators/search._Evaluator) — term/phrase/bool algebra over numpy posting
-arrays, never a per-doc Python query walk.  Wildcard/range/fuzzy constructs
-re-expand against the BATCH vocabulary (the reference expands against the
-transient per-batch index, so terms the global dictionary never saw still
-match), and numeric/id clauses evaluate as vectorized masks over the
-batch's metadata columns.  Results are merged into the results table.
+arrays, never a per-doc Python query walk.  The category queries are parsed
+once per (categories, config), like the reference's cached query trees
+(:30,337-363), and each batch compiles them against its OWN vocabulary:
+wildcard/range/fuzzy constructs expand over the batch's terms (so terms
+the index never saw still match), and numeric/id clauses evaluate as
+vectorized masks over the batch's metadata columns.  Nothing in a batch's
+compile reads the index.  Results are merged into the results table.
 """
 
 from __future__ import annotations
-
-import bisect
-import re
-from functools import lru_cache
 
 import numpy as np
 import pandas as pd
@@ -67,214 +65,27 @@ def parse_iaid_messages(messages: DataFrame, column: str = "body") -> DataFrame:
 
 
 def _batch_payload(engine: TaxonomyEngine):
-    """Broadcast of (compiled queries, stats, config) — compiled ONCE and
-    reused by every micro-batch (a fresh broadcast per batch accumulates
-    driver/executor state over a long-running stream).
+    """Broadcast of (parsed query trees by category id, config), parsed
+    ONCE and reused by every micro-batch (a fresh broadcast per batch
+    accumulates driver/executor state over a long-running stream).
 
-    Cached under a (category pairs, config) KEY, not index state: the batch
-    evaluator runs unscored (df/N/avgdl unread in bool mode) and re-expands
-    wildcard/range/fuzzy constructs against the batch vocabulary from their
-    kept ``source`` nodes, so index appends/compaction between batches
-    cannot change a batch's result — only category/config edits can.
-    ``engine.refresh()`` therefore keeps the payload alive; recompiling per
-    batch cost ~7-8 s at 136 categories (the dictionary lookup + distributed
-    expansion jobs), dominating small daily batches (measured: a warm 10k-doc
-    batch categorises in ~1.1 s)."""
+    Parsing only: a batch compiles the trees against its own vocabulary
+    and evaluates unscored, so the payload holds no index state and
+    building it starts no Spark job.  Cached under a (category pairs,
+    config) KEY: ``engine.refresh()`` after an index append keeps it, and
+    only a category or config edit re-parses (0.17-0.21 s for the 136
+    fixture categories on a 4-vCPU host)."""
     pairs = engine._category_pairs()
     key = (tuple(pairs), engine.config)
-    if getattr(engine, "_stream_payload", None) is None or (
-        getattr(engine, "_stream_payload_key", None) != key
-    ):
-        if getattr(engine, "_stream_payload", None) is not None:
+    if engine._stream_payload is None or engine._stream_payload_key != key:
+        if engine._stream_payload is not None:
             engine._stream_payload.unpersist()
-        compiled, _virtual, df_map, _buckets, _tids = search_ops.compile_queries(
-            engine.reader, pairs, engine.config
-        )
+        parsed = {cid: qp.parse_query(q, engine.config) for cid, q in pairs}
         engine._stream_payload = engine.spark.sparkContext.broadcast(
-            (
-                compiled,
-                df_map,
-                dict(engine.reader.avgdl),
-                float(engine.reader.n_docs),
-                engine.config,
-                [cid for cid, _ in pairs],
-            )
+            (parsed, engine.config)
         )
         engine._stream_payload_key = key
     return engine._stream_payload
-
-
-@lru_cache(maxsize=4096)
-def _wild_rx(pattern: str):
-    return re.compile(
-        "^"
-        + "".join(
-            ".*" if c == "*" else "." if c == "?" else re.escape(c)
-            for c in pattern
-        )
-        + "$"
-    )
-
-
-def _prefix_successor(prefix: str) -> str | None:
-    """Smallest string greater than every string starting with ``prefix``:
-    increment the last code point, dropping trailing U+10FFFF code points
-    (which have no successor).  None means "no upper bound".  A sentinel
-    like ``prefix + chr(0xFFFF)`` is WRONG: supplementary-plane characters
-    (emoji, CJK extensions) sort above U+FFFF and would be silently
-    excluded from the bisect range."""
-    s = prefix.rstrip("\U0010FFFF")
-    if not s:
-        return None
-    return s[:-1] + chr(ord(s[-1]) + 1)
-
-
-def _expand_wildcard(vocab: list[str], pattern: str) -> list[str]:
-    """Wildcard expansion over a SORTED vocabulary: any literal prefix
-    narrows the candidates to a bisect range first (the regex then runs
-    over dozens of terms, not the whole vocabulary — same trick as the
-    dictionary lookup's pushed prefix filter); a pure-prefix pattern needs
-    no regex at all."""
-    i = len(pattern)
-    for c in "*?":
-        j = pattern.find(c)
-        if j != -1:
-            i = min(i, j)
-    prefix = pattern[:i]
-    lo = bisect.bisect_left(vocab, prefix)
-    succ = _prefix_successor(prefix) if prefix else None
-    hi = bisect.bisect_left(vocab, succ) if succ is not None else len(vocab)
-    sub = vocab[lo:hi]
-    if pattern == prefix + "*":
-        return sub
-    rx = _wild_rx(pattern)
-    return [t for t in sub if rx.match(t)]
-
-
-def _expand_range(vocab: list[str], node: qp.TermRangeNode) -> list[str]:
-    lo = (
-        0
-        if node.lo is None
-        else (
-            bisect.bisect_left(vocab, node.lo)
-            if node.inc_lo
-            else bisect.bisect_right(vocab, node.lo)
-        )
-    )
-    hi = (
-        len(vocab)
-        if node.hi is None
-        else (
-            bisect.bisect_right(vocab, node.hi)
-            if node.inc_hi
-            else bisect.bisect_left(vocab, node.hi)
-        )
-    )
-    return vocab[lo:hi]
-
-
-def _collect_virtual(node: qp.Node, out: dict) -> None:
-    if isinstance(node, search_ops.VirtualDocsNode):
-        out[node.key] = node.source
-    elif isinstance(node, qp.BoostNode):
-        _collect_virtual(node.child, out)
-    elif isinstance(node, qp.DisMaxNode):
-        for c in node.children:
-            _collect_virtual(c, out)
-    elif isinstance(node, qp.BoolNode):
-        for _, c in node.clauses:
-            _collect_virtual(c, out)
-
-
-#: a string Spark's ANSI cast reads as a BIGINT (after trimming)
-_SPARK_INT_RE = re.compile(r"[+-]?\d+")
-
-
-def _spark_cast(v: str, integral: bool):
-    """A string as Spark's ANSI cast reads it for a BIGINT (``integral``)
-    or DOUBLE comparison: trimmed and strict; a malformed one raises, as
-    Spark's CAST_INVALID_INPUT does at the action."""
-    s = v.strip()
-    if integral and _SPARK_INT_RE.fullmatch(s):
-        return int(s)
-    if not integral:
-        try:
-            return float(s)
-        except ValueError:
-            pass
-    raise ValueError(
-        f"[CAST_INVALID_INPUT] the value {v!r} cannot be cast to "
-        f"{'BIGINT' if integral else 'DOUBLE'}"
-    )
-
-
-def _in_mask(col: pd.Series, values) -> np.ndarray:
-    """``col.isin(values)`` with the coercion of Spark's ANSI ``isin``:
-    string values against a numeric column cast to a number, a string
-    column against numeric values casts to a number; null never
-    matches."""
-    vals = [v for v in values if v is not None]
-
-    def number(v) -> bool:
-        return isinstance(v, (int, float, np.number)) and not isinstance(v, bool)
-
-    integral = not any(isinstance(v, (float, np.floating)) for v in vals)
-    if pd.api.types.is_numeric_dtype(col) and not pd.api.types.is_bool_dtype(col):
-        integral = integral and pd.api.types.is_integer_dtype(col)
-        vals = [_spark_cast(v, integral) if isinstance(v, str) else v for v in vals]
-    elif any(number(v) for v in vals):
-        vals = [_spark_cast(v, integral) if isinstance(v, str) else v for v in vals]
-        col = col.map(lambda s: _spark_cast(s, integral) if isinstance(s, str) else s)
-    return col.isin(vals).to_numpy(dtype=bool, na_value=False)
-
-
-def _numeric(col: pd.Series) -> np.ndarray:
-    """A column as float64, nulls and non-numbers as NaN."""
-    return pd.to_numeric(col, errors="coerce").to_numpy(
-        dtype=np.float64, na_value=np.nan
-    )
-
-
-def _virtual_ids(node: qp.Node, pdf: pd.DataFrame, n: int) -> np.ndarray:
-    """Batch-local doc indices matching a metadata clause — the vectorized
-    twin of search.virtual_condition (Int32Field semantics,
-    InMemoryCategoriserRepository.cs:236-244; ``isin`` and ``concat_ws``
-    as Spark evaluates them)."""
-    if isinstance(node, qp.MatchAllNode):
-        return np.arange(n, dtype=np.int64)
-    if isinstance(node, qp.IntTermNode):
-        if node.field not in pdf:
-            return np.empty(0, dtype=np.int64)
-        return np.flatnonzero(_numeric(pdf[node.field]) == node.value).astype(np.int64)
-    if isinstance(node, qp.IntRangeNode):
-        if node.field not in pdf:
-            return np.empty(0, dtype=np.int64)
-        col = _numeric(pdf[node.field])
-        mask = ~np.isnan(col)
-        if node.lo is not None:
-            mask &= (col >= node.lo) if node.inc_lo else (col > node.lo)
-        if node.hi is not None:
-            mask &= (col <= node.hi) if node.inc_hi else (col < node.hi)
-        return np.flatnonzero(mask).astype(np.int64)
-    if isinstance(node, qp.MetaInNode):
-        if node.column not in pdf:
-            return np.empty(0, dtype=np.int64)
-        return np.flatnonzero(_in_mask(pdf[node.column], node.values)).astype(
-            np.int64
-        )
-    if isinstance(node, qp.IdNode):
-        cols = ("repo", "path", "commit")
-        if any(c not in pdf for c in cols):
-            return np.empty(0, dtype=np.int64)
-        # concat_ws: nulls are skipped, not written
-        refs = [
-            "/".join(str(v) for v in row if not pd.isna(v)).lower()
-            for row in zip(*(pdf[c] for c in cols))
-        ]
-        return np.flatnonzero(
-            np.asarray(refs, dtype=object) == node.doc_ref
-        ).astype(np.int64)
-    raise TypeError(type(node))  # pragma: no cover
 
 
 def categorise_batch(engine: TaxonomyEngine, batch_df: DataFrame) -> DataFrame:
@@ -297,18 +108,16 @@ def categorise_batch(engine: TaxonomyEngine, batch_df: DataFrame) -> DataFrame:
             _ragged_gather,
             term_id_of,
         )
-        from ds_discovery_opensearch_taxonomy_spark.operators.oracle import (
-            OracleIndex,
-        )
 
-        compiled_q, dfm, avgdl, n_docs, config, cids = payload.value
+        parsed, config = payload.value
         specs = [
             (f.name, f.analyzer, list(f.source_columns)) for f in config.fields
         ]
         src_cols = sorted({c for f in config.fields for c in f.source_columns})
         fnames = [f.name for f in config.fields]
         tok = ChunkTokenizer(specs)
-        expander = OracleIndex.__new__(OracleIndex)  # only expand_* used
+        _, constructs, fuzzies = qp.dictionary_needs(parsed.values())
+        needs_pos = any(search_ops.has_phrase(nd) for nd in parsed.values())
         chunk = 2048
 
         for pdf in pdfs:
@@ -373,52 +182,20 @@ def categorise_batch(engine: TaxonomyEngine, batch_df: DataFrame) -> DataFrame:
                     {cache.tid_term[int(t)] for t in tid_s[rs]}
                 )
 
-            # -- re-expand dictionary-dependent constructs vs BATCH vocab --
-            # (bool membership: global expansions absent from the batch
-            # vocabulary cannot match any batch doc, so batch-only suffices)
-            expander.terms_by_field = vocab_by_field
-
-            def rewrite(node: qp.Node) -> qp.Node:
-                if isinstance(node, search_ops.ExpandedTermsNode):
-                    src = node.source
-                    vocab = vocab_by_field.get(node.field, [])
-                    if isinstance(src, qp.WildcardNode):
-                        terms = _expand_wildcard(vocab, src.pattern)
-                    elif isinstance(src, qp.TermRangeNode):
-                        terms = _expand_range(vocab, src)
-                    else:
-                        terms = node.terms or ()
-                    return search_ops.ExpandedTermsNode(
-                        node.field, tuple(terms), src
-                    )
-                if isinstance(node, search_ops.ExpandedFuzzyNode):
-                    if node.source is None:
-                        return node
-                    tb = expander.expand_fuzzy(node.source)
-                    return search_ops.ExpandedFuzzyNode(
-                        node.field,
-                        tuple(t for t, _ in tb),
-                        tuple(b for _, b in tb),
-                        node.source,
-                    )
-                if isinstance(node, qp.BoostNode):
-                    return qp.BoostNode(rewrite(node.child), node.boost)
-                if isinstance(node, qp.DisMaxNode):
-                    return qp.DisMaxNode(
-                        tuple(rewrite(c) for c in node.children),
-                        node.tie_breaker,
-                    )
-                if isinstance(node, qp.BoolNode):
-                    return qp.BoolNode(
-                        tuple((o, rewrite(c)) for o, c in node.clauses)
-                    )
-                return node
-
-            nodes = {cid: rewrite(compiled_q[cid]) for cid in cids}
+            # -- compile against the BATCH vocabulary (bool membership: a
+            #    term absent from the batch cannot match any batch doc) ---
+            expanded, fuzzy_map = search_ops.expand_over_vocab(
+                lambda field: vocab_by_field.get(field, []), constructs, fuzzies
+            )
+            nodes = {
+                cid: search_ops.expand_tree(node, expanded, fuzzy_map)
+                for cid, node in parsed.items()
+            }
 
             # -- seed _TermData for every term the queries can touch -------
             terms_cache: dict[int, search_ops._TermData] = {}
             tid_map: dict[tuple[str, str], int] = {}
+            virtual: dict[str, qp.Node] = {}
             for node in nodes.values():
                 for f, t in search_ops.needed_terms(node):
                     if (f, t) in tid_map or f == search_ops.VIRTUAL_FIELD:
@@ -439,23 +216,18 @@ def categorise_batch(engine: TaxonomyEngine, batch_df: DataFrame) -> DataFrame:
                         offs_s[s0 : e0 + 1] - offs_s[s0],
                         flat_s[int(offs_s[s0]) : int(offs_s[e0])],
                     )
-                virt: dict[str, qp.Node] = {}
-                _collect_virtual(node, virt)
-                for key, src in virt.items():
-                    if (search_ops.VIRTUAL_FIELD, key) in tid_map:
-                        continue
-                    tidv = term_id_of(search_ops.VIRTUAL_FIELD, key)
-                    tid_map[(search_ops.VIRTUAL_FIELD, key)] = tidv
-                    ids = _virtual_ids(src, pdf, n)
-                    terms_cache[tidv] = search_ops._TermData(
-                        ids, np.ones(len(ids), dtype=np.int64), None, None
-                    )
+                virtual.update(search_ops.virtual_clauses(node))
+            for key, src in virtual.items():
+                tidv = term_id_of(search_ops.VIRTUAL_FIELD, key)
+                tid_map[(search_ops.VIRTUAL_FIELD, key)] = tidv
+                ids = search_ops._virtual_ids(src, pdf, n)
+                terms_cache[tidv] = search_ops._TermData(
+                    ids, np.ones(len(ids), dtype=np.int64), None, None
+                )
 
-            needs_pos = any(
-                search_ops._node_has_phrase(nd) for nd in nodes.values()
-            )
+            # unscored: df, N and avgdl are never read
             ev = search_ops._Evaluator(
-                {}, dfm, n_docs, config.k1, config.b, avgdl,
+                {}, {}, 0.0, config.k1, config.b, {},
                 scored=False, needs_pos=needs_pos, tid_map=tid_map,
             )
             ev.terms = terms_cache  # pre-decoded batch postings

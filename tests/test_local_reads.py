@@ -228,6 +228,29 @@ def test_api_calls_run_no_spark_job(spark, index):
             assert _last_job(spark) == before
 
 
+def test_stream_payload_runs_no_spark_job(spark, index, monkeypatch):
+    """The stream's micro-batch payload is the parsed category trees: a
+    batch compiles them against its own vocabulary, so building the
+    payload reads nothing of the index, even one too big for a driver
+    snapshot, whose compile would take dictionary jobs."""
+    from ds_discovery_opensearch_taxonomy_spark.plans.queryparser import parse_query
+    from ds_discovery_opensearch_taxonomy_spark.streaming.incremental import (
+        _batch_payload,
+    )
+
+    monkeypatch.setattr(search, "LOCAL_SNAPSHOT_MAX_BYTES", -1)
+    eng = TaxonomyEngine(spark, index, TEST_CONFIG)
+    pairs = eng._category_pairs()  # the category store read is not the payload's
+    before = _last_job(spark)
+    payload = _batch_payload(eng)
+    assert _last_job(spark) == before
+    assert eng.reader.snapshot() is None
+    parsed, config = payload.value
+    assert config == TEST_CONFIG
+    assert parsed == {cid: parse_query(q, TEST_CONFIG) for cid, q in pairs}
+    payload.unpersist()
+
+
 def test_concurrent_first_requests_load_snapshot_once(spark, index, monkeypatch):
     """Two threads searching a fresh reader load its snapshot once and
     get the same answer."""

@@ -291,7 +291,7 @@ def test_streaming_expanders():
     from ds_discovery_opensearch_taxonomy_spark.plans.queryparser import (
         TermRangeNode,
     )
-    from ds_discovery_opensearch_taxonomy_spark.streaming.incremental import (
+    from ds_discovery_opensearch_taxonomy_spark.operators.search import (
         _expand_range,
         _expand_wildcard,
     )

@@ -184,7 +184,7 @@ def test_span_cache_reset_preserves_tid_terms():
 def test_streaming_wildcard_prefix_successor():
     """Prefix bisect must include vocabulary terms containing
     supplementary-plane characters (> U+FFFF) after the literal prefix."""
-    from ds_discovery_opensearch_taxonomy_spark.streaming.incremental import (
+    from ds_discovery_opensearch_taxonomy_spark.operators.search import (
         _expand_wildcard,
         _prefix_successor,
     )

@@ -70,7 +70,7 @@ def main() -> None:
         chunk_cids.setdefault(i // chunk_size, []).append(cid)
     cids = chunk_cids[chunk]
     nodes = {cid: compiled[cid] for cid in cids}
-    needs_pos = any(so._node_has_phrase(n) for n in nodes.values())
+    needs_pos = any(so.has_phrase(n) for n in nodes.values())
 
     n_docs = float(reader.n_docs)
     avgdl = dict(reader.avgdl)
